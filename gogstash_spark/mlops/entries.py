@@ -11,19 +11,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gogstash_spark.entrypoints import tx_cte
 from gogstash_spark.mlops import ann, bpe, dedup, multimodal, pq, textops
 from gogstash_spark.sources.transcripts import ensure_transcripts
-
-ORACLE_SF_DIR = "/root/repo/data/sf0.01"
-def tx_cte() -> str:
-    """transcripts CTE for oracle SQL — reads the module-level
-    ORACLE_SF_DIR at CALL time so tools/parity.py can re-point the
-    replica gate at another scale factor (the driver always uses
-    sf0.01)."""
-    return (
-        "WITH t AS (SELECT * FROM read_parquet('%s/transcripts/*.parquet'))"
-        % ORACLE_SF_DIR
-    )
 
 STOP_LIST_SQL = "[%s]" % ", ".join("'%s'" % w for w in textops.EN_STOPWORDS)
 

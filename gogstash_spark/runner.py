@@ -1,23 +1,30 @@
-"""End-to-end batch runner: read -> filter -> route -> fan-out sinks -> aggregates.
+"""End-to-end batch runner: read -> filter -> route -> one partitioned write -> aggregates.
 
 Scale design (the part gogstash never faced — one box, one stream):
 
-- ONE scan feeds every sink: the filtered/routed frame is persisted
-  (MEMORY_AND_DISK) before fan-out so K sinks don't re-run the parse.
-- Hot conv_ids are salted: repartition on (conv_id, salt) where
-  salt = xxhash64(conv_id, turn_idx) % n_salts, so a conversation with
-  30% of all turns spreads over n_salts partitions instead of one.
-- Route predicates are native SQL expressions; the default write is ONE
-  partitionBy("route") pass over a data-sized (route, salt) shuffle
-  (write_mode="partitioned"). write_mode="per_sink" opts into K
-  separate filtered writes with per-sink resume granularity.
+- ONE write path, nothing materialized: the routed frame is exploded to
+  one row per (route, event) and written in a single
+  partitionBy("route") pass under out_dir/by_route — every output gets
+  every event routed to it (the reference's per-path writer goroutines,
+  output/file/outputfile.go:190-325, as one dynamic-partitioned write).
+  Lineage, protocol sinks and aggregates read the written columnar
+  output, so the parse/enrich tree runs exactly once.
+- The fan-out shuffle is sized by data, not cores: an AQE REBALANCE over
+  (route, salt) targets advisoryPartitionSizeInBytes per write task. A
+  fixed cores-based partition count was slower (sf3 / 15M turns at
+  local[32]: fixed 32 -> 96 s, rebalance -> 60 s) because each write
+  task's buffered partition grew with the input.
+- Hot conv_ids are salted: salt = xxhash64(conv_id, turn_idx) %
+  (4 * defaultParallelism), so a conversation with 30% of all turns
+  spreads over many write tasks instead of one.
 - Resume: a JSON snapshot ledger (the sincedb analog, reference
-  input/file/sincedb.go:21-91) records committed sinks per run-id;
-  a resumed run skips completed sinks. Writes go to a temp dir and are
-  atomically renamed on commit, so a killed write never half-commits.
+  input/file/sincedb.go:21-91) records the partitioned commit, each
+  protocol sink and each aggregate; a resumed run skips what is
+  committed and reports its committed row counts. Every directory is
+  written to a temp dir and renamed on commit, so a killed write never
+  half-commits.
 - Metrics: per-stage row counts via `DataFrame.observe` (native
-  aggregates piggybacked on the write action — no extra pass) as the
-  accumulator-style lineage required by the north rule.
+  aggregates piggybacked on the write action — no extra pass).
 """
 
 from __future__ import annotations
@@ -34,8 +41,6 @@ from pyspark.sql import functions as F
 from gogstash_spark.operators import Context
 from gogstash_spark.plans.compile import DOC_ID, ROUTES, CompiledPipeline, compile_pipeline
 from gogstash_spark.plans.spec import PipelineSpec
-
-DEFAULT_SALTS = 16
 
 
 @dataclass
@@ -140,38 +145,36 @@ def _salt_col(df: DataFrame, modulus: int):
     return F.pmod(F.xxhash64(*[F.col(c) for c in keys]), F.lit(modulus))
 
 
-def _fanout_distribute(
-    exploded: DataFrame, n_partitions: int, size_by_data: bool
-) -> DataFrame:
+def _fanout_distribute(exploded: DataFrame) -> DataFrame:
     """Distribute the exploded (route, event) frame for the partitionBy
-    write. size_by_data (the default path): AQE REBALANCE over
-    (route, salt) — partition COUNT follows the data volume
-    (advisoryPartitionSizeInBytes), so the write task's buffered
-    partition stays constant-size as the input grows. The salt modulus
-    scales 4x wider than cores: rebalance can split a hash partition,
-    but distinct (route, salt) keys are what spread hot routes in the
-    first place. With an explicit n_partitions, the old fixed
-    repartition is used."""
-    n_salts = 4 * n_partitions if size_by_data else n_partitions
+    write: an AQE REBALANCE over (route, salt), so the partition COUNT
+    follows the data volume and each write task's buffered partition
+    stays constant-size as the input grows. The salt modulus is 4x wider
+    than cores: rebalance can split a hash partition, but distinct
+    (route, salt) keys are what spread hot routes in the first place."""
+    n_salts = 4 * exploded.sparkSession.sparkContext.defaultParallelism
     salt = _salt_col(exploded.drop("route"), n_salts)
-    out = exploded.withColumn("__salt", salt)
-    if size_by_data:
-        out = out.hint("rebalance", "route", "__salt")
-    else:
-        out = out.repartition(n_partitions, F.col("route"), F.col("__salt"))
-    return out.drop("__salt")
+    return exploded.withColumn("__salt", salt).hint("rebalance", "route", "__salt").drop("__salt")
 
 
-def salted_repartition(
-    df: DataFrame, n_partitions: int, conv_col: str = "conv_id", n_salts: int = DEFAULT_SALTS
-) -> DataFrame:
-    """Spread hot conversations: partition on (conv_id, salt); schemas
-    without the transcripts key fall back to an all-column hash."""
-    salt = _salt_col(df, n_salts)
-    first = F.col(conv_col) if conv_col in df.columns else salt
-    return df.withColumn("__salt", salt).repartition(
-        n_partitions, first, F.col("__salt")
-    ).drop("__salt")
+def _commit_dir(write, final_dir: str) -> None:
+    """Atomic directory commit: `write(tmp)` fills a temp dir next to
+    `final_dir`, then one rename replaces it, so a killed write never
+    half-commits."""
+    tmp_dir = final_dir + ".__tmp__"
+    write(tmp_dir)
+    if os.path.exists(final_dir):
+        shutil.rmtree(final_dir)
+    os.replace(tmp_dir, final_dir)
+
+
+def _route_sink_rows(plan: CompiledPipeline, route_rows: dict[str, int]) -> dict[str, int]:
+    """sink_rows from per-route row counts: every static sink (0 when no
+    row reached it), then each dynamic %{}-index route value."""
+    rows = {r.sink: int(route_rows.get(r.sink, 0)) for r in plan.routes if not r.index_template}
+    for k, v in route_rows.items():
+        rows.setdefault(k, int(v))
+    return rows
 
 
 def resolve_table_format(spark: SparkSession, requested: str | None) -> tuple[str, str | None]:
@@ -193,29 +196,24 @@ def run_pipeline(
     input_df: DataFrame | None = None,
     out_dir: str = "/tmp/gogstash_spark_out",
     base_dir: str = ".",
-    n_partitions: int | None = None,
     resume: bool = True,
-    write_mode: str = "partitioned",  # "per_sink": K separate writes, per-sink resume
+    write_mode: str = "partitioned",
     table_format: str = "parquet",  # "iceberg"/"delta": ACID commit when jar present
     table_ident: str | None = None,  # iceberg only: catalog.db.table for writeTo()
-    fail_after_sink: str | None = None,  # test hook for resume tests
 ) -> RunResult:
-    """write_mode="partitioned" (default, the scale path): ONE
-    partitionBy(route) write with a data-sized shuffle, no
-    materialization. "per_sink" is the opt-in for workloads needing
-    per-sink resume granularity over K heterogeneous protocol sinks; its
-    plan localCheckpoints the routed frame, which serializes on local
-    mode's single block manager and materializes the routed dataset to
-    executor storage on a cluster — measured round 1, see below.
+    """Run `spec` end to end with ONE partitionBy(route) write of every
+    routed event under out_dir/by_route, then protocol sinks and
+    aggregates from that written output.
 
-    n_partitions=None (default) sizes the fan-out shuffle BY DATA,
-    not by cores: an AQE REBALANCE over (route, salt) targets
-    advisoryPartitionSizeInBytes per write task, so 3x the input means
-    ~3x the write tasks automatically — a fixed cores-based count made
-    each task's buffered partition grow with the input (measured at sf3
-    / 15M turns, local[32]: fixed 32 -> 96s, 256 -> 60s; rebalance
-    picks the count at runtime). Pass an explicit n_partitions to pin
-    the old behavior."""
+    write_mode names the write path; "partitioned" is the only one and
+    anything else raises ValueError. With resume=True a run skips every
+    step the out_dir ledger has committed and still reports that step's
+    committed rows in sink_rows/agg_rows."""
+    if write_mode != "partitioned":
+        raise ValueError(
+            "write_mode=%r: the only write path is 'partitioned' "
+            "(one partitionBy(route) write)" % write_mode
+        )
     if isinstance(spec, dict):
         spec = PipelineSpec.from_dict(spec)
     ctx = Context(spark=spark, base_dir=base_dir)
@@ -235,14 +233,8 @@ def run_pipeline(
 
         input_df = read_input(spark, spec.input or {})
 
-    size_by_data = n_partitions is None
-    if n_partitions is None:
-        n_partitions = spark.sparkContext.defaultParallelism
-
     os.makedirs(out_dir, exist_ok=True)
     ledger = SnapshotLedger(os.path.join(out_dir, "_ledger.json"))
-
-    # fully-resumed short-circuit: nothing to compute
     # default aggregate (no spec.aggregate): hourly counts per sink,
     # keyed by tool when the events have one — the group_by is
     # intersected with the actual columns at compute time because a
@@ -251,354 +243,209 @@ def run_pipeline(
         {"name": "counts", "group_by": ["tool"], "time_bucket": "hour",
          "__default__": True}
     ]
-    if resume:
-        sinks_done = (
-            ledger.committed("__partitioned__")
-            and all(ledger.committed(r.sink) for r in plan.routes if r.out_cfg is not None)
-            if write_mode == "partitioned"
-            else all(
-                ledger.committed(r.sink)
-                and (r.out_cfg is not None or os.path.exists(os.path.join(out_dir, r.sink)))
-                for r in plan.routes
-            )
-        )
-        aggs_done = all(ledger.committed("agg_%s" % a["name"]) for a in agg_specs)
-        if sinks_done and aggs_done and plan.routes:
-            result = RunResult()
-            if write_mode != "partitioned":
-                result.skipped_sinks = [r.sink for r in plan.routes]
-                result.sink_rows = {
-                    r.sink: ledger.state["sinks"][r.sink]["rows"] for r in plan.routes
-                }
-            result.wall_sec = time.time() - t0
-            return result
-
-    obs = Observation("pipeline")
-    routed = plan.run(input_df)
-    routed = routed.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows_total"),
-        F.sum(F.size(ROUTES)).alias("rows_routed"),
-    )
-    if write_mode != "partitioned":
-        routed = salted_repartition(routed, n_partitions)
-        # Materialize ONCE and truncate lineage: K sink writes + aggregates
-        # then analyze a tiny LogicalRDD plan instead of re-analyzing the
-        # whole parse/enrich tree per action. NOTE: on local mode the
-        # single block manager serializes this (measured: flat 27s at 8
-        # and 32 cores); on a real cluster blocks are per-executor and it
-        # scales. The "partitioned" mode below avoids materialization
-        # entirely and is the default scale path.
-        routed = routed.localCheckpoint(eager=True)
 
     result = RunResult()
-    # per_sink mode always materializes `routed` (localCheckpoint above);
-    # partitioned mode only runs it when the write isn't resume-skipped
-    routed_executed = write_mode != "partitioned"
-    try:
-        if write_mode == "partitioned":
-            # ONE pass, no materialization: explode routes -> shuffle on
-            # (route, salt) so each write task holds exactly ONE open
-            # parquet writer -> dynamic-partitioned write (the
-            # reference's per-path writer goroutines,
-            # output/file/outputfile.go:190-325, as a partitionBy write).
-            # The salt spreads hot routes/conversations over tasks.
-            # Per-sink resume granularity is traded for one atomic commit.
-            fmt, fb_reason = resolve_table_format(spark, table_format)
-            # resume must read with the format the data was COMMITTED
-            # under, not this run's request: a run committed as parquet
-            # then resumed with table_format=iceberg would otherwise try
-            # to read the parquet by_route dir through the iceberg
-            # source. (Ledgers written before the format was recorded
-            # can only be parquet commits on this image — the ACID
-            # branch was probe-gated off — so parquet is the right
-            # default for a missing key.)
-            committed_meta = ledger.state.get("sinks", {}).get("__partitioned__", {})
-            write_skipped = resume and ledger.committed("__partitioned__")
-            if write_skipped:
-                read_fmt = committed_meta.get("table_format", "parquet")
-                read_ident = committed_meta.get("table_ident")
-            else:
-                read_fmt, read_ident = fmt, table_ident
-            if fmt == "iceberg" and not table_ident and not write_skipped:
-                # only a run that will actually WRITE iceberg needs the
-                # identifier — a resume serving from an earlier commit
-                # reads with the ledger's format and must not be blocked
-                raise ValueError(
-                    "table_format='iceberg' needs table_ident='catalog.db.table': "
-                    "Iceberg's v1 save(path) cannot CREATE a partitioned table — "
-                    "the V2 writeTo(ident).partitionedBy(...).createOrReplace() "
-                    "path is used instead"
-                )
-            # "used" reports what this run actually READS AND SERVES:
-            # on a write-skipping resume that is the ledger's committed
-            # format, not this invocation's request
-            result.metrics["table_format"] = {
-                "requested": table_format, "used": read_fmt,
-                **({"fallback_reason": fb_reason} if fb_reason else {}),
-                **({"resumed_from_commit": True} if write_skipped else {}),
-            }
+    fmt, fb_reason = resolve_table_format(spark, table_format)
+    # resume must read with the format the data was COMMITTED under, not
+    # this run's request: a run committed as parquet then resumed with
+    # table_format=iceberg would otherwise try to read the parquet
+    # by_route dir through the iceberg source. (Ledgers written before
+    # the format was recorded can only be parquet commits on this image
+    # — the ACID branch was probe-gated off — so parquet is the right
+    # default for a missing key.)
+    committed_meta = ledger.state.get("sinks", {}).get("__partitioned__", {})
+    write_skipped = resume and ledger.committed("__partitioned__")
+    if write_skipped:
+        read_fmt = committed_meta.get("table_format", "parquet")
+        read_ident = committed_meta.get("table_ident")
+    else:
+        read_fmt, read_ident = fmt, table_ident
+    if fmt == "iceberg" and not table_ident and not write_skipped:
+        # only a run that will actually WRITE iceberg needs the
+        # identifier — a resume serving from an earlier commit reads
+        # with the ledger's format and must not be blocked
+        raise ValueError(
+            "table_format='iceberg' needs table_ident='catalog.db.table': "
+            "Iceberg's v1 save(path) cannot CREATE a partitioned table — "
+            "the V2 writeTo(ident).partitionedBy(...).createOrReplace() "
+            "path is used instead"
+        )
+    # "used" reports what this run actually READS AND SERVES: on a
+    # write-skipping resume that is the ledger's committed format, not
+    # this invocation's request
+    result.metrics["table_format"] = {
+        "requested": table_format, "used": read_fmt,
+        **({"fallback_reason": fb_reason} if fb_reason else {}),
+        **({"resumed_from_commit": True} if write_skipped else {}),
+    }
 
-            def _read_routed():
-                if read_fmt == "iceberg" and read_ident:
-                    return spark.read.table(read_ident)
-                return spark.read.format(read_fmt).load(os.path.join(out_dir, "by_route"))
+    part_dir = os.path.join(out_dir, "by_route")
 
-            if not write_skipped:
-                routed_executed = True
-                part_dir = os.path.join(out_dir, "by_route")
-                tmp_dir = part_dir + ".__tmp__"
-                exploded = routed.select(F.explode(ROUTES).alias("route"), "*").drop(ROUTES)
-                doc_routes = [r for r in plan.routes if r.doc_id_template]
-                if doc_routes:
-                    from gogstash_spark.logevent import format_expr
-                    from gogstash_spark.plans.compile import route_value_expr
+    def _read_routed():
+        if read_fmt == "iceberg" and read_ident:
+            return spark.read.table(read_ident)
+        return spark.read.format(read_fmt).load(part_dir)
 
-                    # elastic document_id semantics: one row per (index,
-                    # doc id). Dedup applies ONLY to exploded copies whose
-                    # route belongs to a doc-id sink, keyed by THAT sink's
-                    # rendered template — copies routed to plain sinks get
-                    # a unique surrogate and pass through untouched. The
-                    # _doc_id column is computed HERE per exploded copy so
-                    # each route partition carries ITS sink's doc ids
-                    # (plain sinks in per_sink mode never see it at all).
-                    pieces = []
-                    for r in doc_routes:
-                        rv = route_value_expr(exploded, r)
-                        rendered = format_expr(exploded, str(r.doc_id_template))
-                        pieces.append(F.when(
-                            (F.col("route") == rv) & rendered.isNotNull(), rendered
-                        ))
-                    per_route_id = F.coalesce(*pieces) if len(pieces) > 1 else pieces[0]
-                    dd = F.coalesce(
-                        F.concat(F.lit("d|"), per_route_id),
-                        F.concat(
-                            F.lit("r|"), F.monotonically_increasing_id().cast("string")
-                        ),
-                    )
-                    exploded = (
-                        exploded.withColumn(DOC_ID, per_route_id)
-                        .withColumn("__dd", dd)
-                        .dropDuplicates(["route", "__dd"])
-                        .drop("__dd")
-                    )
-                exploded = _fanout_distribute(exploded, n_partitions, size_by_data)
-                if fmt == "parquet":
-                    # no table format on the classpath: atomic commit =
-                    # write to a temp dir + one rename
-                    exploded.write.mode("overwrite").partitionBy("route").parquet(tmp_dir)
-                    if os.path.exists(part_dir):
-                        shutil.rmtree(part_dir)
-                    os.replace(tmp_dir, part_dir)
-                elif fmt == "iceberg":
-                    # ACID snapshot commit via DataFrameWriterV2: the v1
-                    # writer's save(path) requires a pre-existing table
-                    # and rejects partitionBy for creation; writeTo()
-                    # creates-or-replaces the partitioned table in one
-                    # transaction. UNTESTED on this image (no iceberg
-                    # runtime jar — the probe above guarantees this
-                    # branch only runs on a provisioned cluster).
-                    exploded.writeTo(table_ident).partitionedBy(
-                        F.col("route")
-                    ).createOrReplace()
-                else:
-                    # delta: transaction-log commit; the v1 writer DOES
-                    # support partitioned table creation at a path.
-                    # UNTESTED on this image (no delta jar; probe-gated).
-                    exploded.write.format(fmt).mode("overwrite").partitionBy(
-                        "route"
-                    ).save(part_dir)
-                # per-partition (per output file) row-count lineage in one
-                # pruned scan, written to a parquet SIDECAR — at 100 TB the
-                # file list is 10^5-10^6 entries, which must never ride
-                # through the driver or the JSON ledger. Only O(routes)
-                # totals are collected.
-                # input_file_name() returns '' under DSv2 scans — the
-                # ACID formats use their metadata column instead
-                # (iceberg: _file, delta: _metadata.file_path); the
-                # parquet DSv1 scan keeps input_file_name()
-                if fmt == "iceberg":
-                    file_col = F.col("_file")
-                elif fmt == "delta":
-                    file_col = F.col("_metadata.file_path")
-                else:
-                    file_col = F.input_file_name()
-                lineage_df = (
-                    _read_routed()
-                    .groupBy("route", file_col.alias("file"))
-                    .agg(F.count(F.lit(1)).alias("rows"))
-                )
-                lin_dir = os.path.join(out_dir, "_lineage")
-                lin_tmp = lin_dir + ".__tmp__"
-                lineage_df.write.mode("overwrite").parquet(lin_tmp)
-                if os.path.exists(lin_dir):
-                    shutil.rmtree(lin_dir)
-                os.replace(lin_tmp, lin_dir)
-                rollup = (
-                    spark.read.parquet(lin_dir)
-                    .groupBy("route")
-                    .agg(F.sum("rows").alias("rows"), F.count(F.lit(1)).alias("files"))
-                    .collect()
-                )
-                counts: dict[str, int] = {rr["route"]: int(rr["rows"]) for rr in rollup}
-                result.sink_rows = {
-                    r.sink: int(counts.get(r.sink, 0))
-                    for r in plan.routes
-                    if not r.index_template
-                }
-                for k, v in counts.items():  # dynamic %{}-index route values
-                    result.sink_rows.setdefault(k, int(v))
-                result.metrics["lineage"] = {
-                    "files": sum(int(r["files"]) for r in rollup),
-                    "path": lin_dir,
-                    "route_rows": counts,
-                }
-                ledger.commit(
-                    "__partitioned__",
-                    sum(result.sink_rows.values()),
-                    # the format ACTUALLY used rides in the ledger so a
-                    # resumed run reads by_route with it, whatever
-                    # format the resume invocation asks for
-                    extra={
-                        "route_rows": counts, "lineage_path": lin_dir,
-                        "table_format": fmt,
-                        **({"table_ident": table_ident} if table_ident else {}),
-                    },
-                )
-            # protocol sinks (http/socket/gelf/loki) emit from the written
-            # columnar output — a pruned per-route scan, committed per sink
-            # so a resumed run replays only the unsent ones
-            for r in plan.routes:
-                if r.out_cfg is None:
-                    continue
-                if resume and ledger.committed(r.sink):
-                    result.skipped_sinks.append(r.sink)
-                    result.sink_rows[r.sink] = ledger.state["sinks"][r.sink]["rows"]
-                    continue
-                from gogstash_spark.outputs import emit
+    if write_skipped:
+        result.sink_rows = _route_sink_rows(plan, committed_meta.get("route_rows", {}))
+    else:
+        obs = Observation("pipeline")
+        routed = plan.run(input_df).observe(
+            obs,
+            F.count(F.lit(1)).alias("rows_total"),
+            F.sum(F.size(ROUTES)).alias("rows_routed"),
+        )
+        exploded = routed.select(F.explode(ROUTES).alias("route"), "*").drop(ROUTES)
+        doc_routes = [r for r in plan.routes if r.doc_id_template]
+        if doc_routes:
+            from gogstash_spark.logevent import format_expr
+            from gogstash_spark.plans.compile import route_value_expr
 
-                df_r = (
-                    _read_routed()
-                    .filter(F.col("route") == r.sink)
-                    .drop("route", DOC_ID)  # internal cols never leave the engine
-                )
-                rows = emit(df_r, r.out_cfg)
-                result.sink_rows[r.sink] = rows
-                ledger.commit(r.sink, rows)
-                result.metrics[r.sink] = {"rows": rows}
-            routes_to_write = []
+            # elastic document_id semantics: one row per (index, doc id).
+            # Dedup applies ONLY to exploded copies whose route belongs to
+            # a doc-id sink, keyed by THAT sink's rendered template —
+            # copies routed to plain sinks get a unique surrogate and pass
+            # through untouched. The _doc_id column is computed HERE per
+            # exploded copy so each route partition carries ITS sink's
+            # doc ids.
+            pieces = []
+            for r in doc_routes:
+                rv = route_value_expr(exploded, r)
+                rendered = format_expr(exploded, str(r.doc_id_template))
+                pieces.append(F.when(
+                    (F.col("route") == rv) & rendered.isNotNull(), rendered
+                ))
+            per_route_id = F.coalesce(*pieces) if len(pieces) > 1 else pieces[0]
+            dd = F.coalesce(
+                F.concat(F.lit("d|"), per_route_id),
+                F.concat(
+                    F.lit("r|"), F.monotonically_increasing_id().cast("string")
+                ),
+            )
+            exploded = (
+                exploded.withColumn(DOC_ID, per_route_id)
+                .withColumn("__dd", dd)
+                .dropDuplicates(["route", "__dd"])
+                .drop("__dd")
+            )
+        exploded = _fanout_distribute(exploded)
+        if fmt == "parquet":
+            # no table format on the classpath: atomic commit = write to
+            # a temp dir + one rename
+            _commit_dir(exploded.write.mode("overwrite").partitionBy("route").parquet, part_dir)
+        elif fmt == "iceberg":
+            # ACID snapshot commit via DataFrameWriterV2: the v1 writer's
+            # save(path) requires a pre-existing table and rejects
+            # partitionBy for creation; writeTo() creates-or-replaces the
+            # partitioned table in one transaction. UNTESTED on this
+            # image (no iceberg runtime jar — the probe above guarantees
+            # this branch only runs on a provisioned cluster).
+            exploded.writeTo(table_ident).partitionedBy(F.col("route")).createOrReplace()
         else:
-            routes_to_write = plan.routes
-            dyn = [r.sink for r in plan.routes if r.index_template]
-            if dyn:
-                raise ValueError(
-                    "dynamic %%{}-index sinks %s need write_mode='partitioned' "
-                    "(one partitionBy(route) write handles any index cardinality)" % dyn
-                )
-        for route in routes_to_write:
-            sink = route.sink
-            sink_dir = os.path.join(out_dir, sink)
-            if resume and ledger.committed(sink) and (
-                route.out_cfg is not None or os.path.exists(sink_dir)
-            ):
-                result.skipped_sinks.append(sink)
-                result.sink_rows[sink] = ledger.state["sinks"][sink]["rows"]
-                continue
-            sink_df = routed.filter(F.array_contains(F.col(ROUTES), sink)).drop(ROUTES)
-            if route.doc_id_template:
-                from gogstash_spark.logevent import format_expr
-
-                # THIS sink's rendered doc id (the shared _doc_id column
-                # may carry another doc-sink's rendering for co-routed rows)
-                sink_df = sink_df.withColumn(
-                    DOC_ID, format_expr(sink_df, str(route.doc_id_template))
-                )
-                sink_df = (
-                    sink_df.withColumn(
-                        "__dd",
-                        F.coalesce(
-                            F.col(DOC_ID),
-                            F.monotonically_increasing_id().cast("string"),
-                        ),
-                    )
-                    .dropDuplicates(["__dd"])
-                    .drop("__dd")
-                )
-            if route.out_cfg is not None:
-                # protocol sink: stream out via foreachPartition, count
-                # task-side, commit by count (no directory to rename)
-                from gogstash_spark.outputs import emit
-
-                rows = emit(sink_df.drop(DOC_ID), route.out_cfg)
-                result.sink_rows[sink] = rows
-                ledger.commit(sink, rows)
-                result.metrics[sink] = {"rows": rows}
-                continue
-            sink_obs = Observation("sink_%s" % sink)
-            sink_df = sink_df.observe(sink_obs, F.count(F.lit(1)).alias("rows"))
-            tmp_dir = sink_dir + ".__tmp__"
-            if os.path.exists(tmp_dir):
-                shutil.rmtree(tmp_dir)
-            sink_df.write.mode("overwrite").parquet(tmp_dir)
-            if os.path.exists(sink_dir):
-                shutil.rmtree(sink_dir)
-            os.replace(tmp_dir, sink_dir)
-            rows = int(sink_obs.get.get("rows") or 0)
-            result.sink_rows[sink] = rows
-            ledger.commit(sink, rows)
-            result.metrics[sink] = dict(sink_obs.get)
-            if fail_after_sink == sink:
-                raise RuntimeError("injected failure after sink %s" % sink)
-
-        # per-sink aggregates (report/statsd semantics,
-        # reference output/report/outputreport.go:80-92,
-        # output/statsd/outputstatsd.go:267-331)
-        for agg in agg_specs:
-            name = agg["name"]
-            if resume and ledger.committed("agg_%s" % name):
-                continue
-            if write_mode == "partitioned":
-                # aggregate from the written columnar output: the scan is
-                # pruned to the aggregate's columns, no parse recompute
-                exploded = _read_routed().withColumnRenamed("route", "sink")
-            else:
-                exploded = routed.select(F.explode(ROUTES).alias("sink"), "*")
-            if agg.get("__default__"):
-                agg = {
-                    **agg,
-                    "group_by": [k for k in agg["group_by"] if k in exploded.columns],
-                }
-            agg_df = compute_aggregate(exploded, agg)
-            agg_obs = Observation("agg_%s" % name)
-            agg_df = agg_df.observe(agg_obs, F.count(F.lit(1)).alias("rows"))
-            agg_dir = os.path.join(out_dir, "agg_%s" % name)
-            tmp_dir = agg_dir + ".__tmp__"
-            agg_df.write.mode("overwrite").parquet(tmp_dir)
-            if os.path.exists(agg_dir):
-                shutil.rmtree(agg_dir)
-            os.replace(tmp_dir, agg_dir)
-            n = int(agg_obs.get.get("rows") or 0)
-            result.agg_rows[name] = n
-            ledger.commit("agg_%s" % name, n)
-        if routed_executed:
-            # Observation.get BLOCKS until the observed node runs — it
-            # must only be read when the routed plan actually executed
-            # this run (a partitioned-mode resume that skips the write
-            # serves sinks/aggregates from the written files and never
-            # runs `routed`; reading obs.get there hangs forever)
-            try:
-                result.metrics["pipeline"] = dict(obs.get)
-            except Exception:
-                pass
+            # delta: transaction-log commit; the v1 writer DOES support
+            # partitioned table creation at a path. UNTESTED on this
+            # image (no delta jar; probe-gated).
+            exploded.write.format(fmt).mode("overwrite").partitionBy("route").save(part_dir)
+        # per-partition (per output file) row-count lineage in one pruned
+        # scan, written to a parquet SIDECAR — at 100 TB the file list is
+        # 10^5-10^6 entries, which must never ride through the driver or
+        # the JSON ledger. Only O(routes) totals are collected.
+        # input_file_name() returns '' under DSv2 scans — the ACID formats
+        # use their metadata column instead (iceberg: _file, delta:
+        # _metadata.file_path); the parquet DSv1 scan keeps
+        # input_file_name()
+        if fmt == "iceberg":
+            file_col = F.col("_file")
+        elif fmt == "delta":
+            file_col = F.col("_metadata.file_path")
+        else:
+            file_col = F.input_file_name()
+        lineage_df = (
+            _read_routed()
+            .groupBy("route", file_col.alias("file"))
+            .agg(F.count(F.lit(1)).alias("rows"))
+        )
+        lin_dir = os.path.join(out_dir, "_lineage")
+        _commit_dir(lineage_df.write.mode("overwrite").parquet, lin_dir)
+        rollup = (
+            spark.read.parquet(lin_dir)
+            .groupBy("route")
+            .agg(F.sum("rows").alias("rows"), F.count(F.lit(1)).alias("files"))
+            .collect()
+        )
+        counts: dict[str, int] = {rr["route"]: int(rr["rows"]) for rr in rollup}
+        result.sink_rows = _route_sink_rows(plan, counts)
+        result.metrics["lineage"] = {
+            "files": sum(int(r["files"]) for r in rollup),
+            "path": lin_dir,
+            "route_rows": counts,
+        }
+        ledger.commit(
+            "__partitioned__",
+            sum(result.sink_rows.values()),
+            # the format ACTUALLY used rides in the ledger so a resumed
+            # run reads by_route with it, whatever format the resume
+            # invocation asks for
+            extra={
+                "route_rows": counts, "lineage_path": lin_dir,
+                "table_format": fmt,
+                **({"table_ident": table_ident} if table_ident else {}),
+            },
+        )
+        # Observation.get BLOCKS until the observed node runs, so it is
+        # read only here, where the routed plan has executed this run
+        result.metrics["pipeline"] = dict(obs.get)
         # task-side accumulators registered by stages (e.g. grok rows/misses)
         for stage_name, accs in (ctx.options.get("accumulators") or {}).items():
             result.metrics["acc_%s" % stage_name] = {
                 k: int(a.value) for k, a in accs.items()
             }
-    finally:
-        try:
-            routed.unpersist()
-        except Exception:
-            pass
+
+    # protocol sinks (http/socket/gelf/loki) emit from the written
+    # columnar output — a pruned per-route scan, committed per sink so a
+    # resumed run replays only the unsent ones
+    for r in plan.routes:
+        if r.out_cfg is None:
+            continue
+        if resume and ledger.committed(r.sink):
+            result.skipped_sinks.append(r.sink)
+            result.sink_rows[r.sink] = ledger.state["sinks"][r.sink]["rows"]
+            continue
+        from gogstash_spark.outputs import emit
+
+        df_r = (
+            _read_routed()
+            .filter(F.col("route") == r.sink)
+            .drop("route", DOC_ID)  # internal cols never leave the engine
+        )
+        rows = emit(df_r, r.out_cfg)
+        result.sink_rows[r.sink] = rows
+        ledger.commit(r.sink, rows)
+        result.metrics[r.sink] = {"rows": rows}
+
+    # per-sink aggregates (report/statsd semantics,
+    # reference output/report/outputreport.go:80-92,
+    # output/statsd/outputstatsd.go:267-331) from the written columnar
+    # output: the scan is pruned to the aggregate's columns, no parse
+    # recompute
+    for agg in agg_specs:
+        name = agg["name"]
+        key = "agg_%s" % name
+        if resume and ledger.committed(key):
+            result.agg_rows[name] = ledger.state["sinks"][key]["rows"]
+            continue
+        exploded = _read_routed().withColumnRenamed("route", "sink")
+        if agg.get("__default__"):
+            agg = {
+                **agg,
+                "group_by": [k for k in agg["group_by"] if k in exploded.columns],
+            }
+        agg_df = compute_aggregate(exploded, agg)
+        agg_obs = Observation(key)
+        agg_df = agg_df.observe(agg_obs, F.count(F.lit(1)).alias("rows"))
+        _commit_dir(agg_df.write.mode("overwrite").parquet, os.path.join(out_dir, key))
+        n = int(agg_obs.get.get("rows") or 0)
+        result.agg_rows[name] = n
+        ledger.commit(key, n)
     result.wall_sec = time.time() - t0
     return result

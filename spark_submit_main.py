@@ -6,8 +6,9 @@
         --input /data/transcripts --out /data/out [--resume]
 
 On a real cluster the input/output paths are Iceberg/S3/HDFS URIs; the
-runner's ledger + atomic commits give at-least-once sink writes with
-skip-on-resume (exactly-once per sink directory).
+runner writes every table sink in one atomic partitioned commit, and its
+ledger lets a re-run on the same --out skip what is committed while
+still reporting the committed sink_rows.
 """
 
 from __future__ import annotations
@@ -25,7 +26,6 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--input", default=None, help="override spec.input.path")
     p.add_argument("--out", required=True, help="output directory for sinks")
     p.add_argument("--base-dir", default=".", help="base dir for relative lookup paths")
-    p.add_argument("--partitions", type=int, default=None)
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--streaming", action="store_true")
     args = p.parse_args(argv)
@@ -52,7 +52,6 @@ def main(argv: list[str] | None = None) -> int:
         spec,
         out_dir=args.out,
         base_dir=args.base_dir,
-        n_partitions=args.partitions,
         resume=not args.no_resume,
     )
     print(

@@ -169,17 +169,9 @@ class TestFanoutDistribution:
         df = spark.range(1000).select(
             (F.col("id") % 3).cast("string").alias("route"), "id"
         )
-        plan = (
-            _fanout_distribute(df, 32, size_by_data=True)
-            ._jdf.queryExecution().optimizedPlan().toString()
-        )
+        plan = _fanout_distribute(df)._jdf.queryExecution().optimizedPlan().toString()
         assert "RebalancePartitions" in plan
-        plan_fixed = (
-            _fanout_distribute(df, 32, size_by_data=False)
-            ._jdf.queryExecution().optimizedPlan().toString()
-        )
-        assert "RepartitionByExpression" in plan_fixed
-        assert "RebalancePartitions" not in plan_fixed
+        assert "RepartitionByExpression" not in plan
 
 
 class TestPQPlans:

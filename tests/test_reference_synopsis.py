@@ -25,6 +25,7 @@ operator tests instead.
 
 import glob
 import json
+import os
 import re
 
 import pytest
@@ -93,16 +94,25 @@ def _plugins() -> list[tuple[str, str, str]]:
 
 
 PLUGINS = _plugins()
+# without the reference checkout the sweep collects as ONE visible skip
+# rather than as zero cases
+NO_PLUGINS = pytest.param(
+    None, None, None, id="no_reference",
+    marks=pytest.mark.skip(reason="no plugin README under %s" % REF),
+)
 
 
 def test_sweep_covers_the_documented_plugin_set():
     """The reference ships 47 plugin READMEs today; if it grows, this
     sweep must grow with it rather than silently skipping."""
+    if not os.path.isdir(REF):
+        pytest.skip("gogstash reference checkout not present at %s" % REF)
     assert len(PLUGINS) == 47
 
 
 @pytest.mark.parametrize(
-    "kind,plugin,path", PLUGINS, ids=["%s_%s" % (k, p) for k, p, _ in PLUGINS]
+    "kind,plugin,path",
+    [pytest.param(k, p, path, id="%s_%s" % (k, p)) for k, p, path in PLUGINS] or [NO_PLUGINS],
 )
 def test_synopsis_accepted(kind, plugin, path, tmp_path):
     frag = _extract(path)

@@ -136,20 +136,23 @@ class TestElasticSinkSemantics:
         assert ids == {"byuser": "alice", "byturn": "C1/1"}
 
     def test_dynamic_index_requires_partitioned_mode(self, spark, events, tmp_path):
-        with pytest.raises(ValueError, match="partitioned"):
+        """'partitioned' is the only write path: any other write_mode is
+        refused up front, before a byte is written."""
+        with pytest.raises(ValueError, match="only write path is 'partitioned'"):
             run_pipeline(
                 spark, self.spec(), input_df=events,
                 out_dir=str(tmp_path / "x"), write_mode="per_sink", resume=False,
             )
+        assert not (tmp_path / "x").exists()
 
 
 class TestSkewSalting:
     def test_hot_conversation_spreads_over_partitions(self, spark):
         """One conversation holding 50% of all turns must spread over
-        ~n_salts partitions after salted repartition (a plain hash on
-        conv_id would put it in ONE partition — the straggler that kills
-        a 1000-executor job)."""
-        from gogstash_spark.runner import salted_repartition
+        most of the fan-out salt values (a plain hash on conv_id would
+        put it in ONE write task — the straggler that kills a
+        1000-executor job)."""
+        from gogstash_spark.runner import _salt_col
 
         hot = spark.range(10_000).selectExpr(
             "'hot-conv' AS conv_id", "CAST(id AS INT) AS turn_idx"
@@ -158,17 +161,17 @@ class TestSkewSalting:
             "concat('c', CAST(id % 500 AS STRING)) AS conv_id",
             "CAST(id AS INT) AS turn_idx",
         )
-        df = salted_repartition(hot.unionByName(cold), n_partitions=32)
-        per_part = (
-            df.filter("conv_id = 'hot-conv'")
-            .groupBy(F.spark_partition_id().alias("p"))
+        df = hot.unionByName(cold)
+        per_salt = (
+            df.withColumn("salt", _salt_col(df, 16))
+            .filter("conv_id = 'hot-conv'")
+            .groupBy("salt")
             .count()
             .collect()
         )
-        n_parts = len(per_part)
-        biggest = max(r["count"] for r in per_part)
-        assert n_parts >= 8        # hot key spread over many partitions
-        assert biggest <= 10_000 * 0.25  # no partition holds the bulk
+        biggest = max(r["count"] for r in per_salt)
+        assert len(per_salt) >= 8        # hot key takes >= 8 of 16 salts
+        assert biggest <= 10_000 * 0.25  # no salt value holds the bulk
 
 
 class TestGogstashConfigAdapter:
@@ -454,12 +457,25 @@ class TestRunnerE2E:
         assert res.metrics["pipeline"]["rows_total"] == 5000
         assert res.metrics["pipeline"]["rows_routed"] == sum(res.sink_rows.values())
 
+    def test_full_resume_reports_committed_rows(self, spark, sf_data_dir, run_out):
+        """A re-run on a fully committed out_dir writes nothing and
+        reports the first run's sink_rows and agg_rows from the ledger."""
+        out_dir, res = run_out
+        again = run_pipeline(
+            spark, standard_spec(sf_data_dir), out_dir=out_dir, base_dir=sf_data_dir,
+            resume=True,
+        )
+        assert again.metrics["table_format"]["resumed_from_commit"] is True
+        assert "pipeline" not in again.metrics  # the routed plan never ran
+        assert again.sink_rows == res.sink_rows
+        assert list(again.sink_rows) == list(res.sink_rows)
+        assert again.agg_rows == res.agg_rows
+
     def test_default_path_never_localcheckpoints(self, spark, tmp_path, monkeypatch):
-        """The default (partitioned) path must not materialize the routed
-        frame: localCheckpoint serializes on local mode's single block
-        manager (measured round 1: flat 27s at 8 AND 32 cores) and on a
-        cluster stores the whole routed dataset to executor storage. It
-        belongs only to the opt-in per_sink path."""
+        """The write path must not materialize the routed frame:
+        localCheckpoint serializes on local mode's single block manager
+        (measured round 1: flat 27s at 8 AND 32 cores) and on a cluster
+        stores the whole routed dataset to executor storage."""
         events = spark.createDataFrame(
             [("C1", 1, "user", "hi"), ("C2", 2, "tool", "x")],
             "conv_id string, turn_idx int, role string, text string",
@@ -484,45 +500,36 @@ class TestRunnerE2E:
         run_pipeline(spark, spec, input_df=events,
                      out_dir=str(tmp_path / "dflt"), resume=False)
         assert calls == []
-        run_pipeline(spark, spec, input_df=events,
-                     out_dir=str(tmp_path / "ps"), resume=False,
-                     write_mode="per_sink")
-        assert calls == [1]
 
 
 class TestResume:
-    def test_kill_and_resume_no_dup_no_loss(self, spark, sf_data_dir, tmp_path):
-        """per-sink resume granularity is the per_sink mode's feature —
-        the partitioned default commits all table sinks in one atomic
-        rename — so this test opts into write_mode='per_sink'."""
+    def test_kill_and_resume_no_dup_no_loss(self, spark, sf_data_dir, tmp_path, monkeypatch):
+        """A run killed after the by_route commit resumes from that
+        commit: no route row is lost or duplicated, and the resumed run
+        reports the clean run's sink_rows and agg_rows."""
+        from gogstash_spark import runner
+
         out_a = str(tmp_path / "full")
         out_b = str(tmp_path / "interrupted")
         spec = standard_spec(sf_data_dir)
-        full = run_pipeline(
-            spark, spec, out_dir=out_a, base_dir=sf_data_dir, write_mode="per_sink"
-        )
-        with pytest.raises(RuntimeError):
-            run_pipeline(
-                spark, spec, out_dir=out_b, base_dir=sf_data_dir,
-                write_mode="per_sink", fail_after_sink="sink_tool_calls",
-            )
-        resumed = run_pipeline(
-            spark, spec, out_dir=out_b, base_dir=sf_data_dir,
-            write_mode="per_sink", resume=True,
-        )
-        assert set(resumed.skipped_sinks) == {"sink_errors", "sink_tool_calls"}
-        for sink, n in full.sink_rows.items():
-            keys_a = {
-                (r["conv_id"], r["turn_idx"])
-                for r in spark.read.parquet(os.path.join(out_a, sink))
-                .select("conv_id", "turn_idx").collect()
-            }
-            keys_b = {
-                (r["conv_id"], r["turn_idx"])
-                for r in spark.read.parquet(os.path.join(out_b, sink))
-                .select("conv_id", "turn_idx").collect()
-            }
-            assert keys_a == keys_b, sink
+        full = run_pipeline(spark, spec, out_dir=out_a, base_dir=sf_data_dir)
+
+        def killed(*a, **k):
+            raise RuntimeError("killed after the by_route commit")
+
+        with monkeypatch.context() as m:
+            m.setattr(runner, "compute_aggregate", killed)
+            with pytest.raises(RuntimeError, match="killed"):
+                run_pipeline(spark, spec, out_dir=out_b, base_dir=sf_data_dir)
+        resumed = run_pipeline(spark, spec, out_dir=out_b, base_dir=sf_data_dir, resume=True)
+        assert resumed.metrics["table_format"].get("resumed_from_commit") is True
+        for sink in full.sink_rows:
+            keys_a = _read_sink(spark, out_a, sink).select("conv_id", "turn_idx").collect()
+            keys_b = _read_sink(spark, out_b, sink).select("conv_id", "turn_idx").collect()
+            assert len(keys_b) == len(set(keys_b)), sink
+            assert set(keys_a) == set(keys_b), sink
+        assert resumed.sink_rows == full.sink_rows
+        assert resumed.agg_rows == full.agg_rows
 
     def test_fresh_rerun_overwrites_cleanly(self, spark, sf_data_dir, tmp_path):
         out = str(tmp_path / "twice")

@@ -133,10 +133,9 @@ def main():
     # the driver gate always runs at sf0.01; when the replica sweeps
     # another scale, re-point the transcripts-CTE oracles at it
     import gogstash_spark.entrypoints as _ep
-    import gogstash_spark.mlops.entries as _me
     from gogstash_spark.sources.transcripts import ensure_transcripts
 
-    _ep.ORACLE_SF_DIR = _me.ORACLE_SF_DIR = ensure_transcripts(sf_dir)
+    _ep.ORACLE_SF_DIR = ensure_transcripts(sf_dir)
 
     spark = get_spark()
     con = duckdb.connect()
