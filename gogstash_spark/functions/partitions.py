@@ -16,11 +16,19 @@ partitions — a no-op on well-partitioned input, so at 100 TB (where
 scans and shuffles already exceed core count) it never fires and never
 adds an exchange. Values are row-local or order-insensitive in every
 caller, so results are unchanged.
+
+The join-shape helpers the mlops ops share live here too: cap_groups
+(drop over-cap groups before a bucket self-join, hot_groups to audit
+them) and fits_broadcast (one size check for broadcast-if-small).
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def spread(df: DataFrame, target: int | None = None) -> DataFrame:
@@ -37,12 +45,47 @@ def spread(df: DataFrame, target: int | None = None) -> DataFrame:
 
 def plan_bytes(df: DataFrame) -> int | None:
     """Optimizer size estimate of a frame (bytes) — file-size-derived
-    for scans; None when the JVM plan is unavailable. Used to pick
-    broadcast-vs-shuffle shapes from DATA SIZE with a conservative env
-    budget (GOGSTASH_BROADCAST_CELLS_MB), so local byte-light runs get
-    shuffle-free joins while cluster-scale inputs keep the shuffled
-    plan."""
+    for scans; None when the JVM plan is unavailable."""
     try:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:
         return None
+
+
+# broadcast budget for fits_broadcast: local byte-light runs get
+# shuffle-free joins while cluster-scale inputs keep the shuffled plan
+BROADCAST_BUDGET_BYTES = 256 << 20
+
+
+def fits_broadcast(frame: DataFrame) -> bool:
+    """True when the optimizer's size estimate of `frame` — the frame
+    that would be broadcast, or a frame that bounds it — is within
+    BROADCAST_BUDGET_BYTES. An unknown size never fits."""
+    return 0 < (plan_bytes(frame) or 0) <= BROADCAST_BUDGET_BYTES
+
+
+def hot_groups(df: DataFrame, keys: list[str], cap: int) -> DataFrame:
+    """(*keys, cnt) for every group of `keys` holding more than `cap`
+    rows — the groups cap_groups drops, for audit logs."""
+    return (
+        df.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .filter(F.col("cnt") > cap)
+    )
+
+
+def cap_groups(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
+    """Drop every group of `keys` holding more than `cap` rows (None:
+    no cap). A bucket's self-join cost is quadratic in its size, so one
+    hot bucket dominates everything; report what was dropped with
+    hot_groups on the same frame — capping is never silent.
+
+    Rows with a NULL key are dropped first: they can never equi-join,
+    and dropping them keeps exactly the rows an inner join against the
+    under-cap key list keeps. A left-anti join can only build on the
+    over-cap key list (tiny by the capping premise), so the planner can
+    never pick the capped frame as the broadcast side."""
+    if cap is None:
+        return df
+    df = df.where(reduce(operator.and_, [F.col(k).isNotNull() for k in keys]))
+    return df.join(hot_groups(df, keys, cap).select(*keys), keys, "left_anti")

@@ -12,11 +12,10 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from gogstash_spark.functions.partitions import cap_groups, fits_broadcast
 
 
 def _cos(a, b):
@@ -119,21 +118,6 @@ def hyperplane_tables_df(spark, dim: int, n_bits: int, n_tables: int, seed: int 
     return pdf.agg(F.sort_array(F.collect_list(F.struct("t", "ws"))).alias("tables"))
 
 
-def _cap_buckets(df: DataFrame, keys: list[str], cap: int | None) -> DataFrame:
-    """Drop buckets holding more than `cap` rows (mass-duplicate
-    clusters); callers surface dropped counts via a groupBy on the same
-    keys — never a silent truncation at the API level."""
-    if cap is None:
-        return df
-    ok = (
-        df.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("__bcnt"))
-        .filter(F.col("__bcnt") <= cap)
-        .select(*keys)
-    )
-    return df.join(ok, keys)
-
-
 def lsh_topk_multi(
     emb: DataFrame,
     dim: int,
@@ -167,7 +151,7 @@ def lsh_topk_multi(
             hyperplane_bucket(F.col("vec"), F.col("tb.ws")).alias("b"),
         )
     )
-    keyed = _cap_buckets(keyed, ["t", "b"], bucket_cap)
+    keyed = cap_groups(keyed, ["t", "b"], bucket_cap)
     q = keyed.select(F.col("id").alias("q_id"), "t", "b")
     if max_query_id is not None:
         q = q.filter(F.col("q_id") < max_query_id)
@@ -227,9 +211,6 @@ def lsh_topk(
         .filter(F.col("rk") <= k)
         .select("q_id", "n_id", "cos", "rk")
     )
-
-
-from gogstash_spark.functions.partitions import plan_bytes as _plan_bytes
 
 
 def ivf_assign(
@@ -523,7 +504,7 @@ def cosine_near_dup_pairs(
         F.col(vec_col).alias("vec"),
         sign_bucket(F.col(vec_col), n_bits).alias("bucket"),
     )
-    with_b = _cap_buckets(with_b, ["bucket"], bucket_cap)
+    with_b = cap_groups(with_b, ["bucket"], bucket_cap)
     a = with_b.select(F.col("id").alias("id_a"), F.col("vec").alias("va"), "bucket")
     b = with_b.select(F.col("id").alias("id_b"), F.col("vec").alias("vb"), "bucket")
     return (
@@ -660,7 +641,7 @@ def semantic_dedup(
         )
     )
     # (vid, vec, nrm, cell) — cell NULL for zero-norm vectors. Feeds
-    # three plan branches (both self-join sides + the final anti-join),
+    # three plan branches (cap count, kernel + the final anti-join),
     # so persist: re-deriving the assignment means re-scoring the
     # corpus against every centroid per branch. The norm is staged HERE
     # — once per ROW — because the pair filter below would otherwise
@@ -677,68 +658,27 @@ def semantic_dedup(
         .select("vid", "vec", F.element_at("probes", 1)["cid"].alias("cell"))
         .withColumn("nrm", F.sqrt(F.aggregate("vec", F.lit(0.0), sq)))
     ).persist()
-    placed = a.where(F.col("cell").isNotNull())
-    if cluster_cap is None:
-        capped = placed
-    else:
-        # unlike the generic _cap_buckets (whose keep-list can be
-        # corpus-sized for LSH band keys), the cell keep-list here is
-        # AT MOST n_centroids rows — broadcast it EXPLICITLY. Left to
-        # its estimates the planner has broadcast the corpus side of
-        # this join instead (both sides fit), which demotes the
-        # quadratic pair stage's stream to the 1-partition keep-list:
-        # observed at sf1 as the whole 25M-pair loop on ONE core.
-        ok = (
-            placed.groupBy("cell")
-            .agg(F.count(F.lit(1)).alias("__bcnt"))
-            .filter(F.col("__bcnt") <= cluster_cap)
-            .select("cell")
-        )
-        capped = placed.join(F.broadcast(ok), "cell")
-    if os.environ.get("GOGSTASH_SEMDEDUP_ARROW", "1") != "0":
-        # the quadratic stage as ONE vectorized Arrow kernel per cell
-        # (guide §4.2): the pair loop is O(sum cell² x d) arithmetic
-        # over byte-light rows, exactly the regime where JVM expression
-        # evaluation loses — HOF folds are interpreted per pair, and a
-        # codegen'd unrolled chain lands in a >8 KB generated method
-        # that HotSpot refuses to JIT (measured round 6: 10 us/pair
-        # interpreted, 38 us/pair "codegen", 0.05 us/pair numpy).
-        # Arithmetic is reproduced EXACTLY: the k-loop accumulates
-        # fl(acc + fl(a_k*b_k)) per pair in index order (vectorized
-        # ACROSS pairs, not within), norms ride in from the staged
-        # Spark column, and the round-6 >= threshold test is folded
-        # into one exact double bound (_round6_ge_bound). cluster_cap
-        # bounds the per-group memory the same way it bounds the join.
-        drops = _semdedup_drops_arrow(capped, threshold)
-    else:
-        dot = F.aggregate(
-            F.zip_with(
-                F.col("va"), F.col("vb"),
-                lambda x, y: x.cast("double") * y.cast("double"),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        b_side = capped.select(
-            "cell", F.col("vid").alias("id_b"),
-            F.col("vec").alias("vb"), F.col("nrm").alias("nb"),
-        )
-        drops = capped.select(
-            "cell", F.col("vid").alias("id_a"),
-            F.col("vec").alias("va"), F.col("nrm").alias("na"),
-        ).join(
-            b_side, "cell",
-        ).where(
-            (F.col("id_a") < F.col("id_b"))
-            & (F.round(dot / (F.col("na") * F.col("nb")), 6) >= F.lit(threshold))
-        ).select(F.col("id_b").alias("vid")).distinct()
+    # the quadratic stage as ONE vectorized Arrow kernel per cell: the
+    # pair loop is O(sum cell² x d) arithmetic over byte-light rows,
+    # exactly the regime where JVM expression evaluation loses — HOF
+    # folds are interpreted per pair, and a codegen'd unrolled chain
+    # lands in a >8 KB generated method that HotSpot refuses to JIT
+    # (measured round 6: 10 us/pair interpreted, 38 us/pair "codegen",
+    # 0.05 us/pair numpy). Arithmetic is reproduced EXACTLY: the k-loop
+    # accumulates fl(acc + fl(a_k*b_k)) per pair in index order
+    # (vectorized ACROSS pairs, not within), norms ride in from the
+    # staged Spark column, and the round-6 >= threshold test is folded
+    # into one exact double bound (_round6_ge_bound). cluster_cap
+    # bounds the per-group memory.
+    capped = cap_groups(a.where(F.col("cell").isNotNull()), ["cell"], cluster_cap)
+    drops = _semdedup_drops_arrow(capped, threshold)
     # the drop set is distinct ids (narrow); broadcast it into the
-    # anti-join when the corpus scan estimate says it surely fits, so
-    # the kept-rows pass is shuffle-free at bench scale and degrades to
-    # the shuffled anti-join at cluster scale
-    bcast_mb = int(os.environ.get("GOGSTASH_BROADCAST_CELLS_MB", "256"))
-    small = (_plan_bytes(emb) or (bcast_mb << 20) + 1) <= (bcast_mb << 20)
-    drops = F.broadcast(drops) if small else drops
+    # anti-join when the corpus scan estimate says it surely fits
+    # (drops ⊆ ids, so emb bounds it — the drop frame's own estimate
+    # is wildly pessimistic), so the kept-rows pass is shuffle-free at
+    # bench scale and degrades to the shuffled anti-join at cluster
+    # scale
+    drops = F.broadcast(drops) if fits_broadcast(emb) else drops
     return a.join(drops, "vid", "left_anti").select(
         F.col("vid").alias(id_col), "cell"
     )

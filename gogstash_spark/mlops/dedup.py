@@ -18,13 +18,11 @@ the dedup semantics).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from gogstash_spark.functions.hof import staged
-from gogstash_spark.functions.partitions import spread
+from gogstash_spark.functions.partitions import cap_groups, fits_broadcast, hot_groups, spread
 from gogstash_spark.mlops.textops import tokens, ws_token_len
 
 
@@ -152,30 +150,7 @@ def lsh_hot_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
     """(band, v, cnt) for buckets over the cap — the rows a capped run
     skips. Surface this to the caller/logs: capping must never be a
     silent truncation."""
-    return (
-        buckets.groupBy("band", "v")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") > bucket_cap)
-    )
-
-
-def _cap_buckets(buckets: DataFrame, bucket_cap: int) -> DataFrame:
-    """Drop every (band, v) bucket holding more than bucket_cap members
-    BEFORE the self-join — the join cost of a bucket is quadratic in its
-    size, so one hot bucket dominates everything. Pair with
-    lsh_hot_buckets to report what was dropped (never silently)."""
-    hot = (
-        buckets.groupBy("band", "v")
-        .agg(F.count(F.lit(1)).alias("__bcnt"))
-        .filter(F.col("__bcnt") > bucket_cap)
-        .select("band", "v")
-    )
-    # anti-join against the OVER-cap keys (complement of the old inner
-    # join on the under-cap list — identical rows: band/v are never
-    # null). hot is tiny by the capping premise, so AQE's runtime join
-    # switching broadcasts it and the buckets side keeps its shuffle
-    # only where the candidate self-join needs it anyway.
-    return buckets.join(hot, ["band", "v"], "left_anti")
+    return hot_groups(buckets, ["band", "v"], bucket_cap)
 
 
 def minhash_lsh_pairs(
@@ -223,16 +198,8 @@ def minhash_lsh_pairs(
     # bands at rows_per_band=1), so the distinct was a full extra
     # shuffle buying nothing — the far smaller post-verify survivor set
     # is deduped instead (identical result: jaccard is a pure function
-    # of the pair). The build side of the self-join is broadcast when
-    # the input's size estimate fits the budget (bucket keys are a few
-    # dozen bytes/row), keeping the candidate stage shuffle-free.
-    from gogstash_spark.functions.partitions import plan_bytes
-
-    bcast_mb = int(os.environ.get("GOGSTASH_BROADCAST_CELLS_MB", "256"))
-    small = (plan_bytes(df) or (bcast_mb << 20) + 1) <= (bcast_mb << 20)
-    buckets = lsh_band_buckets(sig, bands, rows_per_band)
-    if bucket_cap is not None:
-        buckets = _cap_buckets(buckets, bucket_cap)
+    # of the pair).
+    buckets = cap_groups(lsh_band_buckets(sig, bands, rows_per_band), ["band", "v"], bucket_cap)
     cand = (
         buckets.alias("x")
         .join(buckets.alias("y"), ["band", "v"])
@@ -241,17 +208,22 @@ def minhash_lsh_pairs(
     )
 
     # exact jaccard verify per candidate pair. The shingle-set frame is
-    # BROADCAST into both attach joins when the input's size estimate
-    # fits the budget: candidate pairs outnumber documents ~100x here
-    # (4.2M pairs vs 50k docs at sf1), so the default sort-merge joins
-    # shuffled the multi-KB shingle arrays once per PAIR — the dominant
-    # cost of the whole op (measured 10.8s of 14.5). With the arrays on
-    # the build side only ids cross the wire and the interpreted
-    # array_intersect runs at the spread() parallelism. Past the budget
-    # (cluster-scale corpora) the shuffled join shape is kept.
+    # BROADCAST into both attach joins when its MATERIALIZED size fits
+    # the budget — the input's scan estimate understates it (12x on
+    # 5k documents: wide shingle arrays), and so does the persisted
+    # frame's own plan, whose stats predate the cache; a fresh
+    # projection reads the cached size. Candidate pairs outnumber
+    # documents ~100x here (4.2M pairs vs 50k docs at sf1), so the
+    # default sort-merge joins shuffled the multi-KB shingle arrays
+    # once per PAIR — the dominant cost of the whole op (measured 10.8s
+    # of 14.5). With the arrays on the build side only ids cross the
+    # wire and the interpreted array_intersect runs at the spread()
+    # parallelism. Past the budget (cluster-scale corpora) the shuffled
+    # join shape is kept.
+    sets.count()
     a = sets.select(F.col("id").alias("id_a"), F.col("sh_set").alias("sh_a"))
     b = sets.select(F.col("id").alias("id_b"), F.col("sh_set").alias("sh_b"))
-    if small:
+    if fits_broadcast(sets.select("id", "sh_set")):
         a, b = F.broadcast(a), F.broadcast(b)
         cand = spread(cand)
     inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
@@ -561,8 +533,7 @@ def simhash_near_dup_pairs(
             for i in range(bands)
         ])).alias("b"),
     ).select("id", F.col("b.band").alias("band"), F.col("b.v").alias("v"))
-    if bucket_cap is not None:
-        bandv = _cap_buckets(bandv, bucket_cap)
+    bandv = cap_groups(bandv, ["band", "v"], bucket_cap)
     cand = (
         bandv.alias("x")
         .join(bandv.alias("y"), ["band", "v"])
@@ -597,16 +568,7 @@ def ngram_jaccard_pairs(
     shingles appearing in > max_df docs (biases Jaccard low for pairs
     sharing only hot shingles, but bounds the join at larger scales).
     """
-    sh = shingle_df(df, text_col, id_col, n)
-    if max_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .filter(F.col("__df") <= max_df)
-            .select("shingle")
-        )
-        sh = sh.join(rare, "shingle")
-    sh = sh.persist()
+    sh = cap_groups(shingle_df(df, text_col, id_col, n), ["shingle"], max_df).persist()
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
     inter = (
         sh.alias("a")
@@ -907,8 +869,9 @@ def neardup_incremental(
             sig_b.withColumnRenamed("id", id_col), id_col, "left"
         )
     bands_b = lsh_band_buckets(sig_b, bands, rows_per_band)
-    bands_l = _cap_buckets(
+    bands_l = cap_groups(
         lsh_band_buckets(ledger_sig.withColumnRenamed(id_col, "id"), bands, rows_per_band),
+        ["band", "v"],
         bucket_cap,
     ).select(F.col("id").alias("lid"), "band", "v")
     cand = (

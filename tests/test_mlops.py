@@ -5,6 +5,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from gogstash_spark.functions.partitions import cap_groups
 from gogstash_spark.mlops import ann, dedup, multimodal, textops
 
 
@@ -316,6 +317,91 @@ FROM r WHERE rn = 1"""
         def hamming(a, b):
             return sum(x != y for x, y in zip(a, b))
         assert hamming(sig[1], sig[3]) <= hamming(sig[1], sig[4]) + 2
+
+
+class TestCapGroups:
+    """cap_groups keeps exactly the rows the inner join against the
+    under-cap key list kept."""
+
+    @staticmethod
+    def _rows(df):
+        return sorted(df.collect(), key=lambda r: tuple((v is None, v) for v in r))
+
+    def test_at_cap_kept_one_over_dropped_whole(self, spark):
+        df = spark.createDataFrame(
+            [("a", i) for i in range(3)] + [("b", i) for i in range(4)],
+            "k string, i int",
+        )
+        got = cap_groups(df, ["k"], 3).collect()
+        assert sorted((r["k"], r["i"]) for r in got) == [("a", 0), ("a", 1), ("a", 2)]
+        assert cap_groups(df, ["k"], None) is df
+
+    def test_multi_key_groups(self, spark):
+        # per-column counts (k1: 5 and 2; k2: 4 and 3) all exceed the
+        # cap, only the (k1, k2) groups decide
+        df = spark.createDataFrame(
+            [(1, "x", i) for i in range(2)]
+            + [(1, "y", i) for i in range(3)]
+            + [(2, "x", i) for i in range(2)],
+            "k1 int, k2 string, i int",
+        )
+        got = cap_groups(df, ["k1", "k2"], 2).collect()
+        assert sorted({(r["k1"], r["k2"]) for r in got}) == [(1, "x"), (2, "x")]
+        assert len(got) == 4
+
+    def test_null_keys_dropped_like_inner_join(self, spark):
+        df = spark.createDataFrame(
+            [(None, "x", 0), (None, "x", 1), (1, None, 2), (1, "x", 3),
+             (1, "x", 4), (2, "y", 5), (2, "y", 6), (2, "y", 7)],
+            "k1 int, k2 string, i int",
+        )
+        for keys in (["k1"], ["k1", "k2"]):
+            ok = (
+                df.groupBy(*keys).count().filter(F.col("count") <= 2).select(*keys)
+            )
+            want = self._rows(df.join(ok, keys).select(*df.columns))
+            got = self._rows(cap_groups(df, keys, 2))
+            assert got == want, keys
+            assert all(r[k] is not None for r in got for k in keys)
+        assert [r["i"] for r in self._rows(cap_groups(df, ["k1", "k2"], 2))] == [3, 4]
+
+
+class TestMinhashBroadcastGate:
+    def test_gate_sizes_the_materialized_shingle_sets(self, spark, tmp_path, monkeypatch):
+        """The verify joins broadcast the shingle-set frame, whose
+        materialized size dwarfs the input's scan estimate on wide
+        shingles: a budget between the two must keep the shuffled
+        verify, while the default budget broadcasts it."""
+        import random
+
+        from gogstash_spark.functions import partitions
+
+        rng = random.Random(11)
+        vocab = ["w%05d" % i for i in range(5000)]
+        rows = [(i, " ".join(rng.choice(vocab) for _ in range(200))) for i in range(300)]
+        path = str(tmp_path / "docs")
+        spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
+        docs = spark.read.parquet(path)
+
+        sets = dedup.shingle_sets(
+            dedup.collapse_exact_texts(docs, "text", "doc_id"), "text", "doc_id", 3
+        ).persist()
+        sets.count()
+        input_est = partitions.plan_bytes(docs)
+        sets_size = partitions.plan_bytes(sets.select("id", "sh_set"))
+        sets.unpersist()
+        assert 4 * input_est < sets_size, (input_est, sets_size)
+
+        def verify_broadcasts():
+            pairs = dedup.minhash_lsh_pairs(docs, n=3, threshold=0.5)
+            plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+            return plan.count("strategy=broadcast")
+
+        assert verify_broadcasts() == 2
+        monkeypatch.setattr(
+            partitions, "BROADCAST_BUDGET_BYTES", int(math.sqrt(input_est * sets_size))
+        )
+        assert verify_broadcasts() == 0
 
 
 @pytest.fixture(scope="module")

@@ -1,7 +1,7 @@
 """Round-6 optimization invariants.
 
 The optimizations must be invisible in results: the SemDeDup Arrow
-kernel vs the join formulation, the exact round-6 threshold bound, the
+kernel vs a pure-Python reference, the exact round-6 threshold bound, the
 spread() parallelism repair, and the literal-merge BPE loop all have to
 produce byte-identical answers to the shapes they replaced.
 """
@@ -64,7 +64,9 @@ class TestRound6GeBound:
 
 
 class TestSemanticDedupKernelParity:
-    def test_arrow_kernel_equals_join_formulation(self, spark, monkeypatch):
+    def test_arrow_kernel_matches_reference(self, spark):
+        from gogstash_spark.mlops.ann import ivf_assign, ivf_train
+
         rng = random.Random(3)
         rows = [
             (i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(300)
@@ -73,20 +75,45 @@ class TestSemanticDedupKernelParity:
         rows += [(1000 + i, [x * 1.0000001 for x in rows[i][1]]) for i in range(20)]
         rows.append((2000, [0.0] * 16))
         emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        cent = spark.createDataFrame(
+            ivf_train(emb, n_centroids=4, iters=2).collect(),
+            "cid long, cvec array<double>",
+        )
+        got = sorted(
+            (r[0], r[1])
+            for r in semantic_dedup(emb, threshold=0.9, centroids=cent).collect()
+        )
 
-        def run():
-            out = semantic_dedup(
-                emb, n_centroids=4, iters=2, threshold=0.9,
-                id_col="vec_id", vec_col="embedding",
-            ).collect()
-            return sorted((r[0], r[1]) for r in out)
+        # reference over the engine's own cell assignment: left-fold
+        # double dot and norm, Spark's round(x, 6) >= threshold
+        cell = {
+            r[0]: r[1]
+            for r in ivf_assign(emb, nprobe=1, centroids=cent)
+            .select("vid", F.element_at("probes", 1)["cid"])
+            .collect()
+        }
+        vec = {r[0]: r[1] for r in emb.collect()}  # float32-rounded values
 
-        monkeypatch.setenv("GOGSTASH_SEMDEDUP_ARROW", "0")
-        join_rows = run()
-        monkeypatch.setenv("GOGSTASH_SEMDEDUP_ARROW", "1")
-        arrow_rows = run()
-        assert arrow_rows == join_rows
-        assert any(r[1] is None for r in arrow_rows)  # zero vector survives
+        def dot(u, v):
+            acc = 0.0
+            for x, y in zip(u, v):
+                acc += x * y
+            return acc
+
+        nrm = {i: math.sqrt(dot(v, v)) for i, v in vec.items()}
+        dropped = {
+            b
+            for a in vec
+            for b in vec
+            if a < b
+            and cell[a] is not None
+            and cell[a] == cell[b]
+            and _spark_round6(dot(vec[a], vec[b]) / (nrm[a] * nrm[b])) >= 0.9
+        }
+        want = sorted((i, cell[i]) for i in vec if i not in dropped)
+        assert got == want
+        assert {1000 + i for i in range(20)} <= dropped  # planted near-dups
+        assert (2000, None) in got  # zero vector survives unplaced
 
     def test_threshold_tightness_monotone(self, spark):
         rng = random.Random(5)

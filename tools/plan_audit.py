@@ -67,6 +67,9 @@ def main() -> None:
 
     audit("dedup_exact", dedup.exact_dup_groups(docs))
     audit("minhash_lsh_pairs", dedup.minhash_lsh_pairs(docs))
+    audit("minhash_lsh_pairs(cap)", dedup.minhash_lsh_pairs(docs, bucket_cap=1000))
+    audit("simhash_pairs(cap)", dedup.simhash_near_dup_pairs(docs, bucket_cap=1000))
+    audit("ngram_jaccard(max_df)", dedup.ngram_jaccard_pairs(docs, max_df=1000))
     audit("conv_dedup", dedup.conv_dedup(turns))
     s1 = docs.where("doc_id % 2 = 0")
     audit("dedup_incremental", dedup.dedup_incremental(
@@ -81,6 +84,11 @@ def main() -> None:
     audit("ivf_assign", ann.ivf_assign(emb))
     audit("ivf_topk", ann.ivf_topk(emb, max_query_id=50))
     audit("lsh_topk", ann.lsh_topk(emb, max_query_id=50))
+    dim = len(emb.first()["embedding"])
+    audit("lsh_topk_multi(cap)",
+          ann.lsh_topk_multi(emb, dim, max_query_id=50, bucket_cap=1000))
+    audit("cosine_pairs(cap)", ann.cosine_near_dup_pairs(emb, bucket_cap=1000))
+    audit("semantic_dedup", ann.semantic_dedup(emb, iters=1))
     audit("embedding_report", ann.embedding_report(emb))
     audit("cluster_balanced(exact)", ann.cluster_balanced_sample(emb, 20, iters=1))
     audit("cluster_balanced(rate)",
