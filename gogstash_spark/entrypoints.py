@@ -68,12 +68,13 @@ def tx_cte() -> str:
 
 
 def q_grok_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """grok multi-pattern first-match-wins via the vectorized pandas-UDF
-    path (reference filter/grok/filtergrok.go:86-117)."""
+    """grok multi-pattern first-match-wins, native Java regex in codegen
+    (reference filter/grok/filtergrok.go:86-117). The stage's observe
+    node keeps the response filter above the regex, out of the scan."""
     df = _tx(spark, sf_dir)
     stage = _stage(
         spark, sf_dir,
-        {"type": "grok", "match": GROK_MATCHES, "patterns": EXTRA_PATTERNS, "use_pandas": True},
+        {"type": "grok", "match": GROK_MATCHES, "patterns": EXTRA_PATTERNS},
     )
     out = stage(df)
     return out.filter(F.col("response").isNotNull()).select(
@@ -157,7 +158,7 @@ def q_date_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _tx(spark, sf_dir)
     grok = _stage(
         spark, sf_dir,
-        {"type": "grok", "match": GROK_MATCHES, "patterns": EXTRA_PATTERNS, "use_pandas": True},
+        {"type": "grok", "match": GROK_MATCHES, "patterns": EXTRA_PATTERNS},
     )
     stage = _stage(
         spark, sf_dir,
@@ -206,7 +207,7 @@ def q_syslog_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     grok = _stage(
         spark, sf_dir,
         {"type": "grok", "source": "sysline", "match": ["%{SYSLOGLINE}"],
-         "use_pandas": False, "tag_on_failure": False},
+         "tag_on_failure": False},
     )
     dt = _stage(
         spark, sf_dir,
@@ -647,7 +648,7 @@ def q_url_param(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _tx(spark, sf_dir)
     grok = _stage(
         spark, sf_dir,
-        {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"], "use_pandas": False},
+        {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"]},
     )
     up = _stage(
         spark, sf_dir,
@@ -679,7 +680,7 @@ def q_useragent_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _tx(spark, sf_dir)
     grok = _stage(
         spark, sf_dir,
-        {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"], "use_pandas": False},
+        {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"]},
     )
     ua = _stage(spark, sf_dir, {"type": "useragent", "source": "agent", "target": "ua"})
     out = ua(grok(df))
@@ -888,7 +889,7 @@ def q_geoip_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _tx(spark, sf_dir)
     data_dir = ensure_transcripts(sf_dir)
     grok = _stage(
-        spark, sf_dir, {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"], "use_pandas": True}
+        spark, sf_dir, {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"]}
     )
     geo = _stage(
         spark, sf_dir,
@@ -930,7 +931,7 @@ def q_ip2location_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _tx(spark, sf_dir)
     data_dir = ensure_transcripts(sf_dir)
     grok = _stage(
-        spark, sf_dir, {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"], "use_pandas": True}
+        spark, sf_dir, {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"]}
     )
     loc = _stage(
         spark, sf_dir,
@@ -974,7 +975,7 @@ def q_ip2proxy_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = _tx(spark, sf_dir)
     data_dir = ensure_transcripts(sf_dir)
     grok = _stage(
-        spark, sf_dir, {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"], "use_pandas": True}
+        spark, sf_dir, {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"]}
     )
     prx = _stage(
         spark, sf_dir,

@@ -3,9 +3,10 @@
 
 Spark-first realization: compile to per-column CASE WHEN over a SINGLE
 plan — never branch-split + union. A split would make Catalyst evaluate
-the whole upstream subtree twice (two scans and, if a pandas-UDF grok
-ran upstream, two ArrowEvalPython evals — the 2x-regex trap measured in
-BASELINE.md item 1). Instead:
+the whole upstream subtree twice: two scans and two evaluations of an
+upstream grok's regex. (The 2x-regex trap of BASELINE.md item 1, a
+filter on a capture copied below the regex, is blocked by the grok
+stage's observe node.) Instead:
 
 1. materialize the predicate once as a boolean column (the reference
    also evaluates the condition once per event, filtercond.go:145),
@@ -16,7 +17,7 @@ BASELINE.md item 1). Instead:
 
 Rows outside the branch compute branch expressions whose results are
 discarded — cheap codegen work traded against never re-reading or
-re-UDF-ing the upstream subtree.
+re-parsing the upstream subtree.
 
 Row-REMOVING stages inside a branch (drop, ratelimit) cannot be undone
 by a column merge, so branch chains compile with ctx.guard set: those

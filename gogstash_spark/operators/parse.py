@@ -1,19 +1,18 @@
 """Parse-family filters: grok, gonx, json, kv, url_param, useragent, date.
 
 Each compiler returns a DataFrame->DataFrame stage built from native
-column expressions where possible; the multi-pattern grok path uses ONE
-vectorized Arrow/pandas UDF per batch (Series.str.extract on a
-precompiled regex — no per-row Python).
+column expressions where possible. Grok runs entirely in the JVM: Java
+regex, whose \\d \\w \\s are ASCII-only like the reference's Go regexp,
+inside whole-stage codegen — no Python worker touches a row.
 """
 
 from __future__ import annotations
 
 import re
+import uuid
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from gogstash_spark import logevent
 from gogstash_spark.functions.datefmt import to_spark_pattern
@@ -27,10 +26,13 @@ DATE_ERROR_TAG = "gogstash_filter_date_error"
 
 
 def _typed(col: Column, typ: str | None) -> Column:
+    # try_cast: "" (a group that took no part in the match) or a value
+    # the type cannot hold becomes NULL; under ANSI a plain cast fails
+    # the whole job
     if typ in ("int", "long", "int64"):
-        return col.cast("long")
+        return col.try_cast("long")
     if typ in ("float", "double", "float64"):
-        return col.cast("double")
+        return col.try_cast("double")
     return col
 
 
@@ -95,20 +97,15 @@ def _single_eval_form(cg: CompiledGrok) -> tuple[str, str] | None:
 
 
 def _grok_native(df: DataFrame, source: str, compiled: list[CompiledGrok]) -> tuple[DataFrame, Column]:
-    """Single/few-pattern fast path: everything inside codegen.
+    """Grok as native column expressions, all inside codegen.
 
     first-match-wins via a matched-index column. Captures come from ONE
     regexp_replace per matched pattern that rewrites the line into a
     delimiter-joined string of all groups, then a split — a single
-    regex evaluation instead of one per capture. Measured: the isolated
-    extraction expression is 2.4x faster at 6 captures (sf0.1), but the
-    FULL syslog query A/Bs flat (~2.0s either way) — scan + rlike +
-    date-parse dominate, and codegen subexpression elimination already
-    dedupes much of the per-capture form. Kept because the advantage
-    grows with capture count and pattern complexity, and the fallback
-    keeps it correctness-free: rows whose source contains the delimiter
-    byte (or patterns with mid-pattern anchors) fall back to
-    per-capture regexp_extract via coalesce on the NULL fast column.
+    regex evaluation instead of one per capture. Rows whose source
+    contains the delimiter byte (or patterns with mid-pattern anchors)
+    fall back to per-capture regexp_extract via coalesce on the NULL
+    fast column, so the fast form never changes a result.
     """
     src = F.col(source)
     matched_exprs = [src.rlike(cg.positional()) for cg in compiled]
@@ -157,72 +154,6 @@ def _grok_native(df: DataFrame, source: str, compiled: list[CompiledGrok]) -> tu
     return df, applied
 
 
-def _grok_pandas(
-    df: DataFrame,
-    source: str,
-    compiled: list[CompiledGrok],
-    accumulators: dict | None = None,
-) -> tuple[DataFrame, Column]:
-    """Multi-pattern path: one Arrow-batched pandas UDF doing ordered
-    Series.str.extract (first hit wins), returning a struct of strings.
-
-    `accumulators`: optional {"rows": <LongAccumulator>, "misses": ...}
-    incremented task-side per Arrow batch — executor-level row-count
-    lineage with zero extra passes.
-    """
-    field_names: list[str] = []
-    for cg in compiled:
-        for c in cg.captures:
-            if c not in field_names:
-                field_names.append(c)
-    out_schema = T.StructType(
-        [T.StructField("__midx", T.IntegerType())]
-        + [T.StructField(n, T.StringType()) for n in field_names]
-    )
-    regexes = [cg.named("python") for cg in compiled]
-    acc_rows = (accumulators or {}).get("rows")
-    acc_miss = (accumulators or {}).get("misses")
-
-    @F.pandas_udf(out_schema)
-    def grok_extract(s: pd.Series) -> pd.DataFrame:
-        res = pd.DataFrame(index=s.index, columns=["__midx", *field_names], dtype=object)
-        res["__midx"] = -1
-        remaining = s.index
-        for i, rx in enumerate(regexes):
-            if len(remaining) == 0:
-                break
-            crx = re.compile(rx)
-            ext = s.loc[remaining].str.extract(crx)
-            hit = ext.notna().any(axis=1)
-            hit_ix = remaining[hit.to_numpy()]
-            if len(hit_ix):
-                res.loc[hit_ix, "__midx"] = i
-                for c in ext.columns:
-                    res.loc[hit_ix, c] = ext.loc[hit_ix, c]
-            remaining = remaining[~hit.to_numpy()]
-        res["__midx"] = res["__midx"].astype("int32")
-        if acc_rows is not None:
-            acc_rows.add(len(s))
-        if acc_miss is not None:
-            acc_miss.add(int((res["__midx"] == -1).sum()))
-        return res
-
-    # block predicate/projection pushdown THROUGH the UDF: a filter on a
-    # UDF-derived column would otherwise duplicate the ArrowEvalPython
-    # node (2x regex + 2x Arrow transfer). The function is pure; the
-    # nondeterministic mark is purely an optimizer fence.
-    grok_extract = grok_extract.asNondeterministic()
-
-    df = df.withColumn("__grok", grok_extract(F.col(source)))
-    new_cols: dict[str, Column] = {}
-    for name in field_names:
-        typ = next((cg.types.get(name) for cg in compiled if name in cg.types), None)
-        new_cols[name] = _typed(F.col("__grok")[name], typ)
-    new_cols["__grok_idx"] = F.col("__grok")["__midx"]
-    df = df.withColumns(new_cols).drop("__grok")
-    return df, F.col("__grok_idx") >= 0
-
-
 def _load_pattern_file(path: str | None, ctx: Context) -> dict[str, str]:
     """`NAME regex` lines, the grok pattern-file format (reference
     filter/grok/filtergrok.go:23 patterns_path; format as in
@@ -255,13 +186,6 @@ def compile_grok_filter(cfg: dict, ctx: Context) -> Stage:
     extra = dict(_load_pattern_file(cfg.get("patterns_path"), ctx))
     extra.update(cfg.get("patterns") or {})
     compiled = [compile_grok(p, extra) for p in patterns]
-    # native path evaluates the regex once per capture (regexp_extract has
-    # no multi-group form), so it only wins for few patterns AND few
-    # captures; otherwise the single-eval Arrow/pandas path is cheaper
-    use_pandas = cfg.get("use_pandas")
-    if use_pandas is None:
-        n_caps = max((len(cg.captures) for cg in compiled), default=0)
-        use_pandas = len(compiled) > 2 or n_caps > 5
     error_tag = cfg.get("error_tag", GROK_ERROR_TAG)
     # default TRUE in the reference (filter/grok/filtergrok.go:27,44):
     # captures that matched the empty string become null, not ""
@@ -273,17 +197,8 @@ def compile_grok_filter(cfg: dict, ctx: Context) -> Stage:
         if cg.types.get(name) not in ("int", "long", "int64", "float", "double", "float64")
     })
 
-    accumulators = None
-    if cfg.get("with_accumulators", True) and ctx.spark is not None:
-        sc = ctx.spark.sparkContext
-        accumulators = {"rows": sc.accumulator(0), "misses": sc.accumulator(0)}
-        ctx.options.setdefault("accumulators", {})["grok"] = accumulators
-
     def apply(df: DataFrame) -> DataFrame:
-        if use_pandas:
-            df, applied = _grok_pandas(df, source, compiled, accumulators)
-        else:
-            df, applied = _grok_native(df, source, compiled)
+        df, applied = _grok_native(df, source, compiled)
         if remove_empty:
             df = df.withColumns(
                 {name: F.nullif(F.col(name), F.lit("")) for name in string_captures}
@@ -296,9 +211,38 @@ def compile_grok_filter(cfg: dict, ctx: Context) -> Stage:
             ).otherwise(logevent.tags_col(df)),
         )
         df = apply_common(df, cfg, applied)
-        return df.drop("__grok_idx")
+        return _observe_grok(df, ctx).drop("__grok_idx")
 
     return apply
+
+
+def _observe_grok(df: DataFrame, ctx: Context) -> DataFrame:
+    """End the grok stage with one CollectMetrics node counting the rows
+    it parsed and the ones no pattern matched.
+
+    The node is also the optimizer fence: Catalyst pushes no Filter
+    through CollectMetrics, so a filter on a capture (or a join
+    predicate inferred from one) stays above the regex instead of
+    being copied, RLIKE chain and all, into the scan's DataFilters.
+
+    A batch frame gets a fresh unnamed Observation, listed under
+    ctx.options["grok_observations"] for the runner to read after its
+    write. Observation rejects streaming frames; those observe under a
+    unique name, which keeps the fence.
+
+    Inside a cond branch the stage sees every row but owns only the
+    guarded ones (ctx.guard), so only those are counted.
+    """
+    owned = F.expr(ctx.guard) if ctx.guard else F.lit(True)
+    metrics = (
+        F.count(F.when(owned, 1)).alias("rows"),
+        F.count(F.when(owned & (F.col("__grok_idx") < 0), 1)).alias("misses"),
+    )
+    if df.isStreaming:
+        return df.observe("grok_" + uuid.uuid4().hex, *metrics)
+    obs = Observation()
+    ctx.options.setdefault("grok_observations", []).append(obs)
+    return df.observe(obs, *metrics)
 
 
 def gonx_format_to_regex(fmt: str) -> CompiledGrok:

@@ -35,7 +35,7 @@ ANY_ROUTE = "(%s) || (%s) || (%s) || (%s)" % (E_ERR, E_TOOL, E_USER, E_DEAD)
 SINKS = ["sink_errors", "sink_tool_calls", "sink_user_turns", "sink_deadletter", "sink_rest"]
 
 
-def standard_spec(data_dir: str, use_pandas_grok: bool = True) -> PipelineSpec:
+def standard_spec(data_dir: str) -> PipelineSpec:
     """data_dir: directory holding transcripts/ + lookup tables
     (from sources.transcripts.ensure_transcripts).
     """
@@ -48,7 +48,6 @@ def standard_spec(data_dir: str, use_pandas_grok: bool = True) -> PipelineSpec:
                     "source": "text",
                     "match": GROK_MATCHES,
                     "patterns": EXTRA_PATTERNS,
-                    "use_pandas": use_pandas_grok,
                 },
                 {
                     "type": "json",

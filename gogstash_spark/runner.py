@@ -395,10 +395,11 @@ def run_pipeline(
         # Observation.get BLOCKS until the observed node runs, so it is
         # read only here, where the routed plan has executed this run
         result.metrics["pipeline"] = dict(obs.get)
-        # task-side accumulators registered by stages (e.g. grok rows/misses)
-        for stage_name, accs in (ctx.options.get("accumulators") or {}).items():
-            result.metrics["acc_%s" % stage_name] = {
-                k: int(a.value) for k, a in accs.items()
+        # rows/misses observed by every grok stage, summed
+        grok = [o.get for o in ctx.options.get("grok_observations", [])]
+        if grok:
+            result.metrics["acc_grok"] = {
+                k: sum(int(g[k]) for g in grok) for k in ("rows", "misses")
             }
 
     # protocol sinks (http/socket/gelf/loki) emit from the written

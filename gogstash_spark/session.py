@@ -24,7 +24,8 @@ def get_spark(
       reference config/logevent/logevent.go:122; duckdb oracle timestamps
       are UTC-naive)
     - AQE on: runtime coalesce + skew-join handling for hot conv_ids
-    - Arrow on: vectorized pandas UDFs for the grok path
+    - Arrow on: vectorized pandas UDFs for the mlops kernels (grok is
+      native and needs none)
     """
     master = master or os.environ.get("SPARK_GRAFT_MASTER") or "local[%s]" % (
         os.environ.get("SPARK_GRAFT_CPUS", "*")

@@ -1,4 +1,4 @@
-"""Gated connectors (fallback paths) + accumulator lineage metrics."""
+"""Gated connectors (fallback paths) + lineage and grok metrics."""
 
 import os
 
@@ -97,11 +97,9 @@ class TestLineageMetrics:
             base_dir=sf_data_dir,
             write_mode="partitioned",
         )
-        acc = res.metrics.get("acc_grok")
-        assert acc is not None
-        # at-least-once semantics: every row passed the UDF >= once
-        assert acc["rows"] >= 5000
-        assert 0 < acc["misses"] < acc["rows"]
+        # observed once per row on the write: exact, never double-counted
+        assert res.metrics["acc_grok"] == {"rows": 5000, "misses": 780}
+        assert res.sink_rows["sink_deadletter"] == 780
         lineage = res.metrics["lineage"]
         assert lineage["files"] > 0
         # per-file lineage lives in a parquet sidecar (never on the
@@ -113,6 +111,38 @@ class TestLineageMetrics:
         }
         assert by_route == res.sink_rows
         assert per_file.count() == lineage["files"]
+
+
+class TestGrokMetrics:
+    """acc_grok comes from the grok stage's observe node, for every
+    spec and every grok stage in the chain."""
+
+    LINES = ["level=warn a", "level=error b", "no level here", "level=info c"]
+
+    def run(self, spark, tmp_path, filters):
+        df = spark.createDataFrame([(i, t) for i, t in enumerate(self.LINES)], "id int, text string")
+        return run_pipeline(
+            spark,
+            {"filter": filters,
+             "output": [{"type": "table", "name": "all", "condition": "true"}],
+             "aggregate": [{"name": "counts", "group_by": ["lvl"]}]},
+            input_df=df, out_dir=str(tmp_path / "out"), resume=False,
+        )
+
+    def test_one_pattern_counts_rows_and_misses(self, spark, tmp_path):
+        res = self.run(spark, tmp_path, [{"type": "grok", "match": ["^level=%{WORD:lvl}"]}])
+        assert res.metrics["acc_grok"] == {"rows": 4, "misses": 1}
+
+    def test_two_grok_stages_one_in_cond_branch(self, spark, tmp_path):
+        """Both stages report and are summed; the branch stage counts only
+        the rows its cond owns (2 rows whose id is odd, 1 of them a miss)."""
+        res = self.run(spark, tmp_path, [
+            {"type": "grok", "match": ["^level=%{WORD:lvl}"]},
+            {"type": "cond", "condition": "id % 2 == 1",
+             "filter": [{"type": "grok", "match": ["^level=error %{WORD:w}"]}]},
+        ])
+        assert res.metrics["acc_grok"] == {"rows": 4 + 2, "misses": 1 + 1}
+        assert res.sink_rows == {"all": 4}
 
 
 class TestTableFormatProbe:

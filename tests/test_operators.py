@@ -35,13 +35,11 @@ def events(spark):
 
 
 class TestGrok:
-    @pytest.mark.parametrize("use_pandas", [False, True])
-    def test_first_match_wins_and_error_tag(self, spark, events, use_pandas):
+    def test_first_match_wins_and_error_tag(self, spark, events):
         stage = compile_filter(
             {
                 "type": "grok",
                 "match": ["%{COMMONAPACHELOG}", "^level=%{WORD:lvl}"],
-                "use_pandas": use_pandas,
             },
             ctx(spark),
         )
@@ -60,7 +58,6 @@ class TestGrok:
             {
                 "type": "grok",
                 "match": ["%{COMMONAPACHELOG}"],
-                "use_pandas": False,
                 "add_tag": ["parsed"],
             },
             ctx(spark),
@@ -68,6 +65,30 @@ class TestGrok:
         got = {r["id"]: r for r in stage(events).collect()}
         assert "parsed" in list(got[1]["tags"])
         assert "parsed" not in list(got[4]["tags"])
+
+
+    def test_typed_capture_without_match_is_null_not_an_error(self, spark):
+        """A group that takes no part in the match extracts as "": the
+        typed cast must give NULL, not fail the job (ANSI cast). `١٢`
+        are not digits to Java regex (nor to RE2 or Go regexp), so the
+        INT pattern misses that line instead of capturing it."""
+        df = spark.createDataFrame(
+            [
+                (1, '1.2.3.4 - - [18/Jul/2017:16:10:16 +0000] "GET / HTTP/1.1" 304 - "-" "curl/8"'),
+                (2, "x=\u0661\u0662"),
+            ],
+            "id int, text string",
+        )
+        stage = compile_filter(
+            {"type": "grok", "match": ["%{COMBINEDAPACHELOG}", "x=%{INT:n:int}"]},
+            ctx(spark),
+        )
+        got = {r["id"]: r for r in stage(df).collect()}
+        assert got[1]["response"] == 304
+        assert got[1]["bytes"] is None
+        assert list(got[1]["tags"] or []) == []
+        assert got[2]["n"] is None
+        assert list(got[2]["tags"]) == ["gogstash_filter_grok_error"]
 
 
 class TestGonx:
@@ -362,7 +383,7 @@ class TestEnrich:
     @pytest.mark.parametrize("dedup_join", [False, True])
     def test_useragent(self, spark, events, dedup_join):
         grok = compile_filter(
-            {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"], "use_pandas": False},
+            {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"]},
             ctx(spark),
         )
         ua = compile_filter(
@@ -479,7 +500,7 @@ class TestGrokPatternsPath:
         df = spark.createDataFrame([(1, "lvl=error")], "id int, text string")
         stage = compile_filter(
             {"type": "grok", "match": ["%{MYLINE}"], "patterns_path": str(p),
-             "use_pandas": False, "tag_on_failure": False},
+             "tag_on_failure": False},
             ctx(spark, base=str(tmp_path)),
         )
         assert stage(df).collect()[0]["lvl"] == "error"
@@ -487,7 +508,7 @@ class TestGrokPatternsPath:
         stage2 = compile_filter(
             {"type": "grok", "match": ["%{MYLINE}"], "patterns_path": str(p),
              "patterns": {"MYLEVEL": r"(?:info)"},
-             "use_pandas": False, "tag_on_failure": False},
+             "tag_on_failure": False},
             ctx(spark, base=str(tmp_path)),
         )
         r = stage2(df).collect()[0]
@@ -501,7 +522,7 @@ class TestGrokRemoveEmpty:
         stage = compile_filter(
             {"type": "grok", "source": "text",
              "match": [r"a=%{DATA:fa} b=%{WORD:fb}"],
-             "use_pandas": False, "tag_on_failure": False},
+             "tag_on_failure": False},
             ctx(spark),
         )
         r = stage(df).collect()[0]
@@ -512,7 +533,7 @@ class TestGrokRemoveEmpty:
         stage = compile_filter(
             {"type": "grok", "source": "text",
              "match": [r"a=%{DATA:fa} b=%{WORD:fb}"],
-             "use_pandas": False, "tag_on_failure": False,
+             "tag_on_failure": False,
              "remove_empty_values": False},
             ctx(spark),
         )
@@ -536,7 +557,7 @@ class TestGrokMultilineDotall:
         stage = compile_filter(
             {"type": "grok", "source": "text",
              "match": [r"msg=%{GREEDYDATA:m}"],
-             "use_pandas": False, "tag_on_failure": False},
+             "tag_on_failure": False},
             ctx(spark),
         )
         got = {r["id"]: r for r in stage(df).collect()}
@@ -545,17 +566,20 @@ class TestGrokMultilineDotall:
         # wrapper affixes must still span newlines to find a match on line 2
         assert got[2]["m"] == "second line"
 
-    def test_fast_path_agrees_with_pandas_path_on_multiline(self, spark):
+    def test_multiline_source_explicit_values(self, spark):
+        """`$` without MULTILINE matches only at the end of input (or
+        before a final line terminator): row 1's b=two is followed by
+        another line, so it does not match at all."""
         rows = [(1, "a=1 b=two\nnextline"), (2, "junk\na=9 b=ten tail\nz")]
         df = spark.createDataFrame(rows, "id int, text string")
-        cfg = {"type": "grok", "source": "text",
-               "match": [r"a=%{INT:a:int} b=%{DATA:b}(?: |$)"],
-               "tag_on_failure": False}
-        native = compile_filter({**cfg, "use_pandas": False}, ctx(spark))
-        pandas_ = compile_filter({**cfg, "use_pandas": True}, ctx(spark))
-        n = {r["id"]: (r["a"], r["b"]) for r in native(df).collect()}
-        p = {r["id"]: (r["a"], r["b"]) for r in pandas_(df).collect()}
-        assert n == p
+        stage = compile_filter(
+            {"type": "grok", "source": "text",
+             "match": [r"a=%{INT:a:int} b=%{DATA:b}(?: |$)"],
+             "tag_on_failure": False},
+            ctx(spark),
+        )
+        got = {r["id"]: (r["a"], r["b"]) for r in stage(df).collect()}
+        assert got == {1: (None, None), 2: (9, "ten")}
 
 
 class TestKvAutoType:

@@ -1,8 +1,9 @@
 """Physical-plan invariants: the properties that make the pipeline fast
 at scale, asserted so a regression is a test failure, not a silent 10x.
 
-- the grok pandas UDF evaluates exactly ONCE per plan (filters on its
-  outputs must not duplicate the ArrowEvalPython node)
+- grok runs in the JVM (no Python eval node), and its regex evaluates
+  exactly ONCE per plan (filters on its captures stay above the stage's
+  CollectMetrics fence instead of being copied into the scan)
 - lookup enriches are broadcast hash joins (never sort-merge)
 - native predicates push down into the parquet scan
 - the full pipeline plan keeps a single transcripts scan
@@ -33,7 +34,9 @@ def pipeline_plan(spark, sf_data_dir):
 
 class TestPlanInvariants:
     def test_single_arrow_eval_in_pipeline(self, pipeline_plan):
-        assert pipeline_plan.count("ArrowEvalPython") == 1
+        """No row of the standard pipeline crosses into a Python worker."""
+        assert pipeline_plan.count("ArrowEvalPython") == 0
+        assert pipeline_plan.count("BatchEvalPython") == 0
 
     def test_single_transcripts_scan(self, pipeline_plan):
         scans = [
@@ -50,12 +53,19 @@ class TestPlanInvariants:
         import __spark_entry__ as e
 
         df = e.queries()["grok_parse"](spark, "/root/testdata/sf0.001")
-        assert physical_plan(df).count("ArrowEvalPython") == 1
+        lines = physical_plan(df).splitlines()
+        scan = next(ln for ln in lines if "FileScan parquet" in ln)
+        data_filters = scan.split("DataFilters: ", 1)[1].split("], ", 1)[0]
+        assert "RLIKE" not in data_filters, scan
+        # the response filter sits above the grok stage's observe node
+        fence = next(i for i, ln in enumerate(lines) if "CollectMetrics" in ln)
+        flt = next(i for i, ln in enumerate(lines) if "Filter isnotnull(response" in ln)
+        assert flt < fence, "\n".join(lines)
 
     def test_midchain_cond_does_not_duplicate_subtree(self, spark, sf_data_dir):
         """A cond filter after grok compiles to per-column CASE WHEN, not
-        branch-split + union: one scan, one ArrowEvalPython — a split
-        would run the regex UDF (the most expensive stage) twice."""
+        branch-split + union: one scan, one grok stage — a split would
+        run the regex (the most expensive stage) twice."""
         from gogstash_spark.operators import Context, compile_chain
         from gogstash_spark.pipelines import EXTRA_PATTERNS, GROK_MATCHES
 
@@ -63,7 +73,7 @@ class TestPlanInvariants:
         chain = compile_chain(
             [
                 {"type": "grok", "source": "text", "match": GROK_MATCHES,
-                 "patterns": EXTRA_PATTERNS, "use_pandas": True},
+                 "patterns": EXTRA_PATTERNS},
                 {"type": "cond",
                  "condition": "role == 'tool'",
                  "filter": [
@@ -78,7 +88,7 @@ class TestPlanInvariants:
         )
         df = chain(spark.read.parquet(os.path.join(sf_data_dir, "transcripts")))
         plan = physical_plan(df)
-        assert plan.count("ArrowEvalPython") == 1, plan
+        assert plan.count("CollectMetrics") == 1, plan
         scans = [
             ln for ln in plan.splitlines()
             if "FileScan parquet" in ln and "transcripts" in ln

@@ -43,6 +43,31 @@ class TestStreaming:
         row = spark.read.parquet(os.path.join(out, "s_user")).select("src").first()
         assert row["src"].startswith("user/")
 
+    def test_grok_chain_streams(self, spark, sf_data_dir, tmp_path):
+        """The grok stage observes by name on a streaming frame (an
+        Observation would reject it): the query runs, and its sinks and
+        observed counts match the batch run's."""
+        from gogstash_spark.pipelines import EXTRA_PATTERNS, GROK_MATCHES
+
+        out = str(tmp_path / "stream_grok")
+        q = run_pipeline_streaming(
+            spark,
+            {
+                "filter": [{"type": "grok", "source": "text", "match": GROK_MATCHES,
+                            "patterns": EXTRA_PATTERNS}],
+                "output": [{"type": "table", "name": "s_dead",
+                            "condition": "'gogstash_filter_grok_error' IN tags"}],
+            },
+            os.path.join(sf_data_dir, "transcripts"), out, base_dir=sf_data_dir,
+        )
+        assert spark.read.parquet(os.path.join(out, "s_dead")).count() == 780
+        observed = [
+            m for p in q.recentProgress for k, m in p.observedMetrics.items()
+            if k.startswith("grok_")
+        ]
+        assert sum(m["rows"] for m in observed) == 5000
+        assert sum(m["misses"] for m in observed) == 780
+
     def test_epoch_replay_is_idempotent(self, spark, tmp_path):
         """Re-running an epoch (Structured Streaming's failure recovery)
         must not duplicate rows in already-written sinks."""

@@ -1,6 +1,8 @@
 """Physical-plan audit table for every training-data op: one line per
 op with the operator counts that matter at 100 TB (broadcast vs
-sort-merge joins, hash exchanges, windows, nested-loop/cartesian).
+sort-merge joins, hash exchanges, windows, nested-loop/cartesian,
+Python eval nodes), plus the grok query and the routed standard
+pipeline.
 
     python tools/plan_audit.py [sf_dir]
 
@@ -23,7 +25,7 @@ from pyspark.sql import functions as F  # noqa: E402
 def audit(name: str, df) -> None:
     p = df._jdf.queryExecution().executedPlan().toString()
     print(
-        "%-24s BHJ:%d SMJ:%d hashExch:%d Window:%d BNLJ/Cart:%d"
+        "%-24s BHJ:%d SMJ:%d hashExch:%d Window:%d BNLJ/Cart:%d PyEval:%d"
         % (
             name,
             p.count("BroadcastHashJoin"),
@@ -31,6 +33,7 @@ def audit(name: str, df) -> None:
             p.count("Exchange hashpartitioning"),
             p.count("Window"),
             p.count("NestedLoop") + p.count("Cartesian"),
+            p.count("ArrowEvalPython") + p.count("BatchEvalPython"),
         )
     )
 
@@ -44,7 +47,17 @@ def main() -> None:
     spark = get_spark(app_name="plan_audit", master="local[8]")
     docs = spark.read.parquet(sf_dir + "/documents.parquet")
     emb = spark.read.parquet(sf_dir + "/embeddings.parquet")
-    turns = spark.read.parquet(ensure_transcripts("/root/testdata/sf0.001") + "/transcripts")
+    data_dir = ensure_transcripts("/root/testdata/sf0.001")
+    turns = spark.read.parquet(data_dir + "/transcripts")
+
+    import __spark_entry__ as entry
+    from gogstash_spark.operators import Context
+    from gogstash_spark.pipelines import standard_spec
+    from gogstash_spark.plans.compile import compile_pipeline
+
+    audit("grok_parse", entry.queries()["grok_parse"](spark, sf_dir))
+    plan = compile_pipeline(standard_spec(data_dir), Context(spark=spark, base_dir=data_dir))
+    audit("standard_spec(routed)", plan.run(turns))
 
     audit("lang_id", textops.lang_id(docs))
     audit("quality_score", textops.quality_score(docs))
