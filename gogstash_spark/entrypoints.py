@@ -675,7 +675,7 @@ FROM r WHERE request LIKE '%?%'"""
 
 
 def q_useragent_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """UA parse via dedup-parse-broadcast-join
+    """UA parse with inline native regexes
     (reference filter/useragent/filteruseragent.go:116-157)."""
     df = _tx(spark, sf_dir)
     grok = _stage(

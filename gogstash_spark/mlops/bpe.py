@@ -7,8 +7,8 @@ words weighted by frequency), not the corpus — one corpus-wide
 groupBy(word) up front, then every merge iteration runs on a frame of
 |V| rows (10^5-10^7) regardless of corpus size. Each iteration is:
 pair-explode -> ONE map-side-combinable groupBy(pair) weighted count ->
-top-1 via TakeOrdered (never a global sort) -> broadcast the winning
-pair back as a 1-row crossJoin -> rewrite symbols with a plain string
+top-1 via TakeOrdered (never a global sort) -> the winning pair
+re-enters as string literals -> rewrite symbols with a plain string
 replace. Merging is inherently sequential (merge i+1's counts depend on
 merge i) — the per-iteration work is what can and does stay distributed.
 
@@ -37,6 +37,10 @@ from .textops import tokens
 SEP = "\x1f"  # US control char: never in printable text; guarded below
 _SEP_RX = "\x1f"  # literal, regex-safe
 _CHAR_SPLIT_RX = r"(?!^)(?=.)"  # split between chars, no trailing ''
+# bpe_train truncates its vocab plan every this many merges: each merge
+# stacks ONE replace on it (linear growth, no doubled reference), so a
+# fixed cadence bounds the plan while keeping one job per merge
+CHECKPOINT_EVERY = 4
 
 
 def _wrap(l: Column | str, r: Column | str | None = None) -> Column:
@@ -92,7 +96,6 @@ def bpe_train(
     n_merges: int = 4,
     text_col: str = "text",
     lowercase: bool = True,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Learn `n_merges` BPE merges: (merge_idx, left_sym, right_sym,
     pair_freq), merge_idx ascending in learning order. Ties in pair
@@ -104,7 +107,7 @@ def bpe_train(
     of adjacent pairs — a truncated merges table is the honest result,
     never padding.
 
-    The vocab frame is localCheckpoint'ed every `checkpoint_every`
+    The vocab frame is localCheckpoint'ed every CHECKPOINT_EVERY
     merges: each merge stacks a replace on the plan. The winning pair
     itself is collected per merge (one TakeOrdered job — it is one row
     by construction) and re-enters the rewrite as string literals."""
@@ -155,7 +158,7 @@ def bpe_train(
             ).alias("s"),
             "freq",
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < n_merges:
+        if (i + 1) % CHECKPOINT_EVERY == 0 and i + 1 < n_merges:
             vocab = vocab.localCheckpoint(eager=True)
     vocab0.unpersist()
     return df.sparkSession.createDataFrame(

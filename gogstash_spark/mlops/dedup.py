@@ -18,12 +18,13 @@ the dedup semantics).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from gogstash_spark.functions.hof import staged
 from gogstash_spark.functions.partitions import cap_groups, fits_broadcast, hot_groups, spread
 from gogstash_spark.mlops.textops import tokens, ws_token_len
+from gogstash_spark.session import observed
 
 
 def exact_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -101,6 +102,15 @@ def minhash_signatures_from_sets(sets: DataFrame, k: int = 4) -> DataFrame:
     return sets.filter(F.size("sh_set") > 0).select("id", *[mh(j) for j in range(k)])
 
 
+def _text_key(text_col: str, id_col: str) -> Column:
+    """Exact-dup key: md5(text), or "\\x00" || id for a NULL text, so
+    every NULL-text row is its own group (the prefix cannot collide
+    with md5's hex alphabet)."""
+    return F.when(F.col(text_col).isNotNull(), F.md5(F.col(text_col))).otherwise(
+        F.concat(F.lit("\x00"), F.col(id_col).cast("string"))
+    )
+
+
 def collapse_exact_texts(
     df: DataFrame,
     text_col: str = "text",
@@ -117,16 +127,12 @@ def collapse_exact_texts(
 
     NULL-text rows are NOT duplicates of each other: md5(NULL) is NULL
     and groupBy puts every NULL key in one group, which would silently
-    collapse N distinct missing-text docs into one. Key those rows by
-    their own id instead (the "\\x00" prefix cannot collide with md5's
-    hex alphabet)."""
+    collapse N distinct missing-text docs into one. `_text_key` keys
+    those rows by their own id instead."""
     aggs = [F.min(id_col).alias(id_col), F.min(text_col).alias(text_col)]
     aggs += [F.min_by(c, F.col(id_col)).alias(c) for c in keep_cols or []]
-    key = F.when(F.col(text_col).isNotNull(), F.md5(F.col(text_col))).otherwise(
-        F.concat(F.lit("\x00"), F.col(id_col).cast("string"))
-    )
     return (
-        df.groupBy(key.alias("__th"))
+        df.groupBy(_text_key(text_col, id_col).alias("__th"))
         .agg(*aggs)
         .select(id_col, text_col, *(keep_cols or []))
     )
@@ -250,14 +256,13 @@ def dedup_groups(
     threshold: float = 0.5,
     bucket_cap: int | None = None,
     max_iter: int = 20,
-    checkpoint_every: int = 5,
-    strict: bool = True,
 ) -> DataFrame:
     """The PRODUCTION dedup pipeline, end to end: collapse exact dups ->
     MinHash-LSH candidates -> exact-Jaccard verify -> connected
     components -> every document labeled with its dedup group
     (group_id = min doc id of its component). One row per input doc;
-    keep rows where doc_id == group_id to deduplicate a corpus.
+    keep rows where doc_id == group_id to deduplicate a corpus. A
+    NULL-text doc is its own group (the collapse_exact_texts key).
 
     Scale shape per stage:
     - exact collapse: one md5 hash-groupBy (the dedup_exact shape);
@@ -266,24 +271,22 @@ def dedup_groups(
     - components: iterative min-label propagation over the near-dup
       edges ONLY (isolated reps skip the loop entirely — at corpus
       scale the edge graph is orders of magnitude smaller than the
-      corpus). Each iteration is one equi-join + groupBy(min); dup
-      clusters have tiny diameters so this converges in a few rounds
-      (the standard scalable CC shape). The label frame is
-      localCheckpoint'ed every `checkpoint_every` iterations — it is
-      tiny, and without truncation a max_iter-deep pathological graph
-      nests max_iter join generations in one plan. A component whose
+      corpus), one hop per round. The edge frame is localCheckpoint'ed
+      once, and each round is ONE job: the label join, an observe of
+      how many labels shrink, and a localCheckpoint of the new labels.
+      The label frame is referenced twice per round, so without the
+      per-round truncation the plan would triple every round; with it
+      every round plans the same fixed tree. A component whose
       diameter exceeds max_iter would exit with PARTIALLY merged
-      groups; strict=True (default) raises instead of returning that
-      silently-wrong answer (the same no-silent-truncation rule as
-      bucket_cap), strict=False downgrades to a log warning for
-      callers that prefer best-effort labels.
+      groups, so that raises instead of returning a silently wrong
+      answer (the same no-silent-truncation rule as bucket_cap).
 
     Non-SQL-expressible in one query? No: the DuckDB oracle replicates
     the whole thing, components via a recursive CTE — full value-hash
     parity, no rows-only waiver.
     """
     mapping = df.select(
-        F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("__h")
+        F.col(id_col).alias("doc_id"), _text_key(text_col, id_col).alias("__h")
     )
     reps = mapping.groupBy("__h").agg(F.min("doc_id").alias("rep"))
     doc_rep = mapping.join(reps, "__h").select("doc_id", "rep")
@@ -293,17 +296,17 @@ def dedup_groups(
         bucket_cap, collapse_exact=True,
     )
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    # truncated once, so no round re-analyzes the minhash_lsh_pairs plan
     edges_sym = edges.union(
         edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).persist()
+    ).localCheckpoint(eager=True)
 
     labels = (
         edges_sym.select(F.col("src").alias("id")).distinct()
         .withColumn("lbl", F.col("id"))
-        .persist()
     )
     changed = 0
-    for it in range(max_iter):
+    for _ in range(max_iter):
         nbr = (
             edges_sym.join(
                 labels.select(F.col("id").alias("dst"), F.col("lbl").alias("dlbl")),
@@ -312,65 +315,34 @@ def dedup_groups(
             .groupBy("src").agg(F.min("dlbl").alias("nlbl"))
             .withColumnRenamed("src", "id")
         )
-        nxt = (
+        obs = Observation()
+        labels = (
             labels.join(nbr, "id", "left")
+            .observe(obs, F.sum((F.col("nlbl") < F.col("lbl")).cast("long")).alias("changed"))
             .select(
                 "id",
                 F.least(F.col("lbl"), F.coalesce(F.col("nlbl"), F.col("lbl"))).alias("lbl"),
             )
-            .persist()
+            .localCheckpoint(eager=True)
         )
-        changed = (
-            nxt.withColumnRenamed("lbl", "nl")
-            .join(labels.withColumnRenamed("lbl", "ol"), "id")
-            .filter(F.col("nl") != F.col("ol"))
-            .count()
-        )
-        labels.unpersist()
-        labels = nxt
+        # a pruned observation reads {}; a sum over no rows is NULL
+        changed = int(observed(obs).get("changed") or 0)
         if changed == 0:
             break
-        if checkpoint_every > 0 and (it + 1) % checkpoint_every == 0:
-            # truncate mid-loop lineage: each round adds a join
-            # generation to the plan, so a long-diameter graph would
-            # otherwise hand Catalyst a max_iter-deep tree; the label
-            # frame is tiny (connected reps only), materializing is free.
-            # Unpersist the persisted frame being replaced — rebinding
-            # without it pins its cache blocks for the session
-            ckpt = labels.localCheckpoint(eager=True)
-            labels.unpersist()
-            labels = ckpt
     if changed > 0:
-        msg = (
+        raise RuntimeError(
             "dedup_groups did not reach a fixpoint in max_iter=%d rounds "
             "(%d labels still changing): a near-dup chain has diameter > "
             "max_iter and its groups are PARTIALLY merged. Raise max_iter "
-            "(label propagation needs one round per hop) or pass "
-            "strict=False to accept best-effort labels." % (max_iter, changed)
+            "(label propagation needs one round per hop)." % (max_iter, changed)
         )
-        if strict:
-            edges_sym.unpersist()
-            labels.unpersist()
-            raise RuntimeError(msg)
-        import logging
-
-        logging.getLogger(__name__).warning(msg)
-    # truncate the iterative lineage and RELEASE the loop caches before
-    # returning the (lazy) result: the component-label frame is tiny
-    # (candidate-connected reps only), so materializing it is cheap,
-    # and without the unpersists every invocation would leave
-    # edges_sym + labels pinned in executor storage for the session
-    final = labels.localCheckpoint(eager=True)
-    labels.unpersist()
-    edges_sym.unpersist()
-    out = (
-        doc_rep.join(final.withColumnRenamed("id", "rep"), "rep", "left")
+    return (
+        doc_rep.join(labels.withColumnRenamed("id", "rep"), "rep", "left")
         .select(
             "doc_id",
             F.coalesce(F.col("lbl"), F.col("rep")).alias("group_id"),
         )
     )
-    return out
 
 
 def dedup_keep_best(

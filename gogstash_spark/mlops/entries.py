@@ -110,6 +110,8 @@ def o_dedup_groups() -> str:
     mh = ", ".join(
         "min(md5('%d|' || shingle)) AS m%d" % (j, j) for j in range(4)
     )
+    # m keys a NULL text by its doc id (dedup._text_key): a NULL md5
+    # never equi-joins, so each NULL-text doc is its own group
     return f"""WITH RECURSIVE reps AS (
   SELECT min(doc_id) AS doc_id, min(text) AS text FROM documents GROUP BY md5(text)
 ),
@@ -149,7 +151,9 @@ reach AS (
   SELECT e.dst AS id, r.lbl FROM reach r JOIN edges e ON e.src = r.id
 ),
 comp AS (SELECT id, min(lbl) AS lbl FROM reach GROUP BY id),
-m AS (SELECT doc_id, md5(text) AS h FROM documents),
+m AS (
+  SELECT doc_id, coalesce(md5(text), chr(0) || CAST(doc_id AS VARCHAR)) AS h FROM documents
+),
 r AS (SELECT h, min(doc_id) AS rep FROM m GROUP BY h),
 docmap AS (SELECT m.doc_id, r.rep FROM m JOIN r USING (h))
 SELECT d.doc_id, coalesce(c.lbl, d.rep) AS group_id

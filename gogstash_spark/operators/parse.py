@@ -575,18 +575,12 @@ def load_uap_rules(path: str) -> list[tuple[str, str, str]]:
 def compile_useragent(cfg: dict, ctx: Context) -> Stage:
     """UA parse (reference filter/useragent/filteruseragent.go:81-157).
 
-    Default: inline native regexes — with a small ruleset the parse is
-    pure codegen, no extra pass. `regexes` loads a uap-core
-    regexes.yaml ruleset (the reference's own config knob).
-    `dedup_join: true` switches to the dedup-parse-broadcast-join shape
-    (the set-based analog of the reference's LRU cache) — worth it only
-    when the ruleset is large enough that per-row parse cost beats a
-    second scan+shuffle; note it re-evaluates the upstream plan to
-    build the distinct set.
+    Inline native regexes: the parse is pure codegen, no extra pass.
+    `regexes` loads a uap-core regexes.yaml ruleset (the reference's
+    own config knob).
     """
     source = cfg.get("source", "agent")
     target = cfg.get("target", "ua")
-    dedup_join = bool(cfg.get("dedup_join", False))
     uap_mode = bool(cfg.get("regexes"))
     if uap_mode:
         import os
@@ -630,29 +624,10 @@ def compile_useragent(cfg: dict, ctx: Context) -> Stage:
 
     def apply(df: DataFrame) -> DataFrame:
         strip = F.regexp_replace(F.coalesce(F.col(source), F.lit("")), r'^"|"$', "")
-        if not dedup_join:
-            fam, ver, osf = parse_cols(strip)
-            out = df.withColumn(
-                target,
-                F.struct(fam.alias("family"), ver.alias("version"), osf.alias("os")),
-            )
-            return apply_common(out, cfg, None)
-        df = df.withColumn("__ua_src", strip)
-        distinct = df.select(F.col("__ua_src").alias("__ua_key")).distinct()
-        parsed = distinct.select(
-            F.col("__ua_key"), *parse_cols(F.col("__ua_key"))
-        )
-        joined = df.join(F.broadcast(parsed), df["__ua_src"] == parsed["__ua_key"], "left")
-        out = (
-            joined.withColumn(
-                target,
-                F.struct(
-                    F.col("__ua_family").alias("family"),
-                    F.col("__ua_version").alias("version"),
-                    F.col("__ua_os").alias("os"),
-                ),
-            )
-            .drop("__ua_src", "__ua_key", "__ua_family", "__ua_version", "__ua_os")
+        fam, ver, osf = parse_cols(strip)
+        out = df.withColumn(
+            target,
+            F.struct(fam.alias("family"), ver.alias("version"), osf.alias("os")),
         )
         return apply_common(out, cfg, None)
 

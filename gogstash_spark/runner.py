@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 from gogstash_spark.operators import Context
 from gogstash_spark.plans.compile import DOC_ID, ROUTES, CompiledPipeline, compile_pipeline
 from gogstash_spark.plans.spec import PipelineSpec
+from gogstash_spark.session import observed
 
 
 @dataclass
@@ -333,6 +334,13 @@ def run_pipeline(
             # no table format on the classpath: atomic commit = write to
             # a temp dir + one rename
             _commit_dir(exploded.write.mode("overwrite").partitionBy("route").parquet, part_dir)
+            if not observed(obs).get("rows_routed"):
+                # zero rows leave no route= directory to infer the reads'
+                # schema from: commit a schema-only file in its place
+                _commit_dir(
+                    spark.createDataFrame([], exploded.schema).write.mode("overwrite").parquet,
+                    part_dir,
+                )
         elif fmt == "iceberg":
             # ACID snapshot commit via DataFrameWriterV2: the v1 writer's
             # save(path) requires a pre-existing table and rejects
@@ -393,13 +401,13 @@ def run_pipeline(
             },
         )
         # Observation.get BLOCKS until the observed node runs, so it is
-        # read only here, where the routed plan has executed this run
-        result.metrics["pipeline"] = dict(obs.get)
+        # read only after the write, which executed the routed plan
+        result.metrics["pipeline"] = observed(obs)
         # rows/misses observed by every grok stage, summed
-        grok = [o.get for o in ctx.options.get("grok_observations", [])]
+        grok = [observed(o) for o in ctx.options.get("grok_observations", [])]
         if grok:
             result.metrics["acc_grok"] = {
-                k: sum(int(g[k]) for g in grok) for k in ("rows", "misses")
+                k: sum(int(g.get(k) or 0) for g in grok) for k in ("rows", "misses")
             }
 
     # protocol sinks (http/socket/gelf/loki) emit from the written
@@ -445,7 +453,7 @@ def run_pipeline(
         agg_obs = Observation(key)
         agg_df = agg_df.observe(agg_obs, F.count(F.lit(1)).alias("rows"))
         _commit_dir(agg_df.write.mode("overwrite").parquet, os.path.join(out_dir, key))
-        n = int(agg_obs.get.get("rows") or 0)
+        n = int(observed(agg_obs).get("rows") or 0)
         result.agg_rows[name] = n
         ledger.commit(key, n)
     result.wall_sec = time.time() - t0

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 
 
 def get_spark(
@@ -68,3 +68,12 @@ def get_spark(
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def observed(obs: Observation) -> dict:
+    """`obs`'s metrics, {} when its node never ran. On an empty input
+    Catalyst or AQE can prune the observed node; pyspark's
+    Observation.get then fails on the schema-less row, while the JVM's
+    get returns an empty map. Blocks, like get, until the observing
+    action has run."""
+    return dict(obs._jo.getAsJava())

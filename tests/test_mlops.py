@@ -98,37 +98,58 @@ class TestDedup:
             "doc_id long, text string",
         )
 
-    def test_dedup_groups_long_chain_checkpoint_cadence(self, spark):
-        """A 13-doc near-dup PATH (diameter 12) forces >10 propagation
-        rounds, crossing the checkpoint_every=5 lineage truncations
-        twice — the loop must still converge to one group and the plan
-        must not nest 12 join generations."""
+    def test_dedup_groups_long_chain_truncates_every_round(self, spark, monkeypatch):
+        """A 13-doc near-dup PATH (diameter 12) needs 13 propagation
+        rounds: 12 hops plus one that sees no change. Each round ends in
+        ONE localCheckpoint, and every round after the first (whose
+        label frame is still the distinct edge sources) checkpoints a
+        plan of the same size — the plan does not grow with the round
+        count. The chain still ends in one group."""
         chain = self._word_chain(spark, 13)
+        cls = type(chain)
+        orig = cls.localCheckpoint
+        rounds = []
+
+        def spy(self, *a, **k):
+            plan = self._jdf.queryExecution().analyzed().treeString()
+            if "CollectMetrics" in plan:  # a label round, not the edge frame
+                rounds.append(plan.count("\n"))
+            return orig(self, *a, **k)
+
+        monkeypatch.setattr(cls, "localCheckpoint", spy)
         got = {
             r["doc_id"]: r["group_id"]
-            for r in dedup.dedup_groups(
-                chain, n=1, bands=8, threshold=0.4, checkpoint_every=5
-            ).collect()
+            for r in dedup.dedup_groups(chain, n=1, bands=8, threshold=0.4).collect()
         }
         assert set(got) == set(range(13))
         assert all(g == 0 for g in got.values()), got
+        assert len(rounds) == 13, rounds
+        assert len(set(rounds[1:])) == 1 and rounds[1] <= rounds[0], rounds
 
     def test_dedup_groups_nonconvergence_is_loud(self, spark):
         """Exiting by max_iter with labels still changing means groups
-        are PARTIALLY merged — strict mode (default) must raise, never
-        return the silently wrong answer; strict=False downgrades to a
-        warning and returns the best-effort labels."""
+        are PARTIALLY merged — that must raise, never return the
+        silently wrong answer."""
         chain = self._word_chain(spark, 13)
         with pytest.raises(RuntimeError, match="did not reach a fixpoint"):
             dedup.dedup_groups(chain, n=1, bands=8, threshold=0.4, max_iter=3)
-        got = {
-            r["doc_id"]: r["group_id"]
-            for r in dedup.dedup_groups(
-                chain, n=1, bands=8, threshold=0.4, max_iter=3, strict=False
-            ).collect()
-        }
-        assert set(got) == set(range(13))  # every doc still labeled
-        assert got[0] == 0 and got[12] != 0  # far end provably unmerged
+
+    def test_dedup_groups_null_text_docs_are_own_groups(self, spark):
+        """One row per input doc, NULL texts included: each NULL-text
+        doc is its own group, as collapse_exact_texts keys it (a NULL
+        md5 never equi-joins, so keying the doc map by md5 alone
+        dropped them) — and dedup_keep_best keeps each of them."""
+        df = spark.createDataFrame(
+            [(1, "alpha beta gamma"), (2, "alpha beta gamma"), (3, None), (4, None)],
+            "doc_id long, text string",
+        )
+        got = sorted(
+            (r["doc_id"], r["group_id"])
+            for r in dedup.dedup_groups(df, n=1, bands=4, threshold=0.4).collect()
+        )
+        assert got == [(1, 1), (2, 1), (3, 3), (4, 4)]
+        kept = dedup.dedup_keep_best(df, n=1, bands=4, threshold=0.4).collect()
+        assert sorted(r["doc_id"] for r in kept) == [1, 3, 4]
 
     def test_keep_best_prefers_high_score_then_min_id(self, spark):
         """Keep-best retention: one row per group, highest score wins

@@ -1,6 +1,8 @@
-"""The library reads no GOGSTASH_* environment knobs: once a test pins
-the winning formulation, the A/B switch that chose it is deleted."""
+"""The library reads no GOGSTASH_* environment knobs and keeps no
+single-value parameters: once a test pins the winning formulation, the
+switch that chose it is deleted."""
 
+import ast
 import pathlib
 
 LIB = pathlib.Path(__file__).resolve().parent.parent / "gogstash_spark"
@@ -10,4 +12,19 @@ def test_library_has_no_gogstash_env_knobs():
     files = [p for p in LIB.rglob("*") if p.is_file() and "__pycache__" not in p.parts]
     assert files
     hits = [str(p.relative_to(LIB.parent)) for p in files if b"GOGSTASH_" in p.read_bytes()]
+    assert not hits, hits
+
+
+def test_no_checkpoint_cadence_or_strict_parameters():
+    """Iterative loops truncate their plan on a fixed shape (no
+    `checkpoint_every` cadence) and a non-converged loop always raises
+    (no `strict` switch to a best-effort result)."""
+    hits = []
+    for p in LIB.rglob("*.py"):
+        for node in ast.walk(ast.parse(p.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
+                hits += ["%s:%s(%s)" % (p.name, node.name, n)
+                         for n in names & {"checkpoint_every", "strict"}]
     assert not hits, hits

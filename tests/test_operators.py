@@ -380,14 +380,13 @@ class TestEnrich:
         assert got[3]["geo"] is None  # public miss: error tag
         assert "gogstash_filter_geoip2_error" in list(got[3]["tags"])
 
-    @pytest.mark.parametrize("dedup_join", [False, True])
-    def test_useragent(self, spark, events, dedup_join):
+    def test_useragent(self, spark, events):
         grok = compile_filter(
             {"type": "grok", "match": ["%{COMBINEDAPACHELOG}"]},
             ctx(spark),
         )
         ua = compile_filter(
-            {"type": "useragent", "source": "agent", "dedup_join": dedup_join},
+            {"type": "useragent", "source": "agent"},
             ctx(spark),
         )
         got = {r["id"]: r for r in ua(grok(events)).collect()}

@@ -531,6 +531,26 @@ class TestResume:
         assert resumed.sink_rows == full.sink_rows
         assert resumed.agg_rows == full.agg_rows
 
+    def test_empty_input_reports_zero_rows(self, spark, sf_data_dir, tmp_path):
+        """Zero input rows: the partitionBy write leaves no route=
+        directory, yet the run completes, every static sink and every
+        aggregate reports 0, and a resumed run reports the same."""
+        spec = standard_spec(sf_data_dir)
+        empty = spark.read.parquet(os.path.join(sf_data_dir, "transcripts")).limit(0)
+        out = str(tmp_path / "empty")
+        res = run_pipeline(spark, spec, input_df=empty, out_dir=out, base_dir=sf_data_dir)
+        assert res.sink_rows == dict.fromkeys(
+            ["sink_errors", "sink_tool_calls", "sink_user_turns", "sink_deadletter", "sink_rest"], 0
+        )
+        assert res.agg_rows and set(res.agg_rows.values()) == {0}
+        assert res.metrics["acc_grok"] == {"rows": 0, "misses": 0}
+        again = run_pipeline(
+            spark, spec, input_df=empty, out_dir=out, base_dir=sf_data_dir, resume=True
+        )
+        assert again.metrics["table_format"]["resumed_from_commit"] is True
+        assert again.sink_rows == res.sink_rows
+        assert again.agg_rows == res.agg_rows
+
     def test_fresh_rerun_overwrites_cleanly(self, spark, sf_data_dir, tmp_path):
         out = str(tmp_path / "twice")
         spec = PipelineSpec.from_dict(
