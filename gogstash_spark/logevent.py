@@ -37,28 +37,11 @@ TAGS = "tags"
 _FMT_RE = re.compile(r"%\{([^}]+)\}")
 
 
-def has_column(df: DataFrame, name: str) -> bool:
-    return name in df.columns
-
-
 def tags_col(df: DataFrame) -> Column:
     """tags as a non-null array (missing column -> empty array)."""
     if TAGS in df.columns:
         return F.coalesce(F.col(TAGS), F.array().cast(T.ArrayType(T.StringType())))
     return F.array().cast(T.ArrayType(T.StringType()))
-
-
-def add_tags(df: DataFrame, tags: list[str]) -> DataFrame:
-    """Dedup-add tags (reference config/logevent/logevent.go:55-70)."""
-    if not tags:
-        return df
-    return df.withColumn(TAGS, F.array_union(tags_col(df), F.array(*[F.lit(t) for t in tags])))
-
-
-def remove_tags(df: DataFrame, tags: list[str]) -> DataFrame:
-    if not tags or TAGS not in df.columns:
-        return df
-    return df.withColumn(TAGS, F.array_except(tags_col(df), F.array(*[F.lit(t) for t in tags])))
 
 
 def _env_fallback(key: str) -> str | None:

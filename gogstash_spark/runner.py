@@ -7,8 +7,15 @@ Scale design (the part gogstash never faced — one box, one stream):
   partitionBy("route") pass under out_dir/by_route — every output gets
   every event routed to it (the reference's per-path writer goroutines,
   output/file/outputfile.go:190-325, as one dynamic-partitioned write).
-  Lineage, protocol sinks and aggregates read the written columnar
-  output, so the parse/enrich tree runs exactly once.
+  Lineage, protocol sinks and aggregates share ONE read of the written
+  columnar output, given the schema the runner just wrote: one listing,
+  no schema inference, and the parse/enrich tree runs exactly once.
+- The outputs after the write overlap: lineage and every aggregate run
+  as concurrent Spark jobs over that one read, each committing its own
+  directory — the reference hands each event to all outputs at once
+  (errgroup fan-out, config/output.go:94-108). One cached scan feeding
+  them all was measured slower: the concurrent readers wait on the
+  cache while it fills.
 - The fan-out shuffle is sized by data, not cores: an AQE REBALANCE over
   (route, salt) targets advisoryPartitionSizeInBytes per write task. A
   fixed cores-based partition count was slower (sf3 / 15M turns at
@@ -18,8 +25,9 @@ Scale design (the part gogstash never faced — one box, one stream):
   (4 * defaultParallelism), so a conversation with 30% of all turns
   spreads over many write tasks instead of one.
 - Resume: a JSON snapshot ledger (the sincedb analog, reference
-  input/file/sincedb.go:21-91) records the partitioned commit, each
-  protocol sink and each aggregate; a resumed run skips what is
+  input/file/sincedb.go:21-91) records the partitioned commit (with its
+  format and schema), each protocol sink and each aggregate, always in
+  that order and from the calling thread; a resumed run skips what is
   committed and reports its committed row counts. Every directory is
   written to a temp dir and renamed on commit, so a killed write never
   half-commits.
@@ -33,15 +41,21 @@ import json
 import os
 import shutil
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.util import inheritable_thread_target
 
 from gogstash_spark.operators import Context
 from gogstash_spark.plans.compile import DOC_ID, ROUTES, CompiledPipeline, compile_pipeline
 from gogstash_spark.plans.spec import PipelineSpec
 from gogstash_spark.session import observed
+
+# the _lineage sidecar's fixed schema, so its re-read infers nothing
+LINEAGE_SCHEMA = "route string, file string, rows bigint"
 
 
 @dataclass
@@ -123,8 +137,6 @@ def compute_aggregate(exploded: DataFrame, agg: dict) -> DataFrame:
 
 def _hashable_type(dt) -> bool:
     """xxhash64 rejects MapType anywhere in the type tree."""
-    from pyspark.sql import types as T
-
     if isinstance(dt, T.MapType):
         return False
     if isinstance(dt, T.StructType):
@@ -169,6 +181,81 @@ def _commit_dir(write, final_dir: str) -> None:
     os.replace(tmp_dir, final_dir)
 
 
+def _nullable(dt: T.DataType) -> T.DataType:
+    """`dt` with every field, element and value nullable, as a file
+    source reads it back."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _routed_schema(exploded: DataFrame) -> T.StructType:
+    """The schema inference returns for the partitionBy("route") output
+    of `exploded`: the data columns, then the `route` partition column
+    last, all nullable."""
+    data = [f for f in exploded.schema.fields if f.name != "route"]
+    return _nullable(T.StructType(data + [T.StructField("route", T.StringType())]))
+
+
+def _read_routed(
+    spark: SparkSession, part_dir: str, fmt: str, ident: str | None, schema: T.StructType | None
+) -> DataFrame:
+    """The written by_route output. A parquet read takes `schema`, so
+    it lists the directory once and infers nothing; the ACID formats
+    keep their schema in the table's own metadata."""
+    if fmt == "iceberg" and ident:
+        return spark.read.table(ident)
+    reader = spark.read.format(fmt)
+    if fmt == "parquet" and schema is not None:
+        reader = reader.schema(schema)
+    return reader.load(part_dir)
+
+
+def _write_lineage(by_route: DataFrame, file_col, lin_dir: str) -> list:
+    """Per-partition (per output file) row-count lineage in one pruned
+    scan, written to a parquet SIDECAR — at 100 TB the file list is
+    10^5-10^6 entries, which must never ride through the driver or the
+    JSON ledger. Returns only the O(routes) rollup rows (route, rows,
+    files)."""
+    lineage_df = by_route.groupBy("route", file_col.alias("file")).agg(
+        F.count(F.lit(1)).alias("rows")
+    )
+    _commit_dir(lineage_df.write.mode("overwrite").parquet, lin_dir)
+    return (
+        by_route.sparkSession.read.schema(LINEAGE_SCHEMA)
+        .parquet(lin_dir)
+        .groupBy("route")
+        .agg(F.sum("rows").alias("rows"), F.count(F.lit(1)).alias("files"))
+        .collect()
+    )
+
+
+def _write_aggregate(by_route: DataFrame, agg: dict, agg_dir: str) -> int:
+    """Commit one aggregate spec over the written output (report/statsd
+    semantics, reference output/report/outputreport.go:80-92,
+    output/statsd/outputstatsd.go:267-331): the scan is pruned to the
+    aggregate's columns, no parse recompute. Returns its row count."""
+    exploded = by_route.withColumnRenamed("route", "sink")
+    if agg.get("__default__"):
+        # the default aggregate keys on what the events actually have: a
+        # generic (non-transcripts) config has no `tool` and maybe no `ts`
+        agg = {
+            **agg,
+            "group_by": [k for k in agg["group_by"] if k in exploded.columns],
+            "time_bucket": agg["time_bucket"] if "ts" in exploded.columns else None,
+        }
+    obs = Observation(os.path.basename(agg_dir))
+    agg_df = compute_aggregate(exploded, agg).observe(obs, F.count(F.lit(1)).alias("rows"))
+    _commit_dir(agg_df.write.mode("overwrite").parquet, agg_dir)
+    return int(observed(obs).get("rows") or 0)
+
+
 def _route_sink_rows(plan: CompiledPipeline, route_rows: dict[str, int]) -> dict[str, int]:
     """sink_rows from per-route row counts: every static sink (0 when no
     row reached it), then each dynamic %{}-index route value."""
@@ -203,8 +290,9 @@ def run_pipeline(
     table_ident: str | None = None,  # iceberg only: catalog.db.table for writeTo()
 ) -> RunResult:
     """Run `spec` end to end with ONE partitionBy(route) write of every
-    routed event under out_dir/by_route, then protocol sinks and
-    aggregates from that written output.
+    routed event under out_dir/by_route, then lineage, protocol sinks
+    and aggregates from one schema-given read of that written output,
+    with lineage and the aggregates running as concurrent jobs.
 
     write_mode names the write path; "partitioned" is the only one and
     anything else raises ValueError. With resume=True a run skips every
@@ -237,9 +325,9 @@ def run_pipeline(
     os.makedirs(out_dir, exist_ok=True)
     ledger = SnapshotLedger(os.path.join(out_dir, "_ledger.json"))
     # default aggregate (no spec.aggregate): hourly counts per sink,
-    # keyed by tool when the events have one — the group_by is
-    # intersected with the actual columns at compute time because a
-    # generic (non-transcripts) config has no `tool` column.
+    # keyed by tool when the events have one — _write_aggregate drops the
+    # key and the bucket that a generic (non-transcripts) config's
+    # columns lack.
     agg_specs = spec.aggregate or [
         {"name": "counts", "group_by": ["tool"], "time_bucket": "hour",
          "__default__": True}
@@ -281,14 +369,14 @@ def run_pipeline(
     }
 
     part_dir = os.path.join(out_dir, "by_route")
-
-    def _read_routed():
-        if read_fmt == "iceberg" and read_ident:
-            return spark.read.table(read_ident)
-        return spark.read.format(read_fmt).load(part_dir)
+    lin_dir = os.path.join(out_dir, "_lineage")
 
     if write_skipped:
         result.sink_rows = _route_sink_rows(plan, committed_meta.get("route_rows", {}))
+        # a ledger written before the schema was recorded has none: its
+        # by_route read falls back to inferring the schema
+        schema = committed_meta.get("schema")
+        schema = T.StructType.fromJson(json.loads(schema)) if schema else None
     else:
         obs = Observation("pipeline")
         routed = plan.run(input_df).observe(
@@ -330,17 +418,11 @@ def run_pipeline(
                 .drop("__dd")
             )
         exploded = _fanout_distribute(exploded)
+        schema = _routed_schema(exploded)
         if fmt == "parquet":
             # no table format on the classpath: atomic commit = write to
             # a temp dir + one rename
             _commit_dir(exploded.write.mode("overwrite").partitionBy("route").parquet, part_dir)
-            if not observed(obs).get("rows_routed"):
-                # zero rows leave no route= directory to infer the reads'
-                # schema from: commit a schema-only file in its place
-                _commit_dir(
-                    spark.createDataFrame([], exploded.schema).write.mode("overwrite").parquet,
-                    part_dir,
-                )
         elif fmt == "iceberg":
             # ACID snapshot commit via DataFrameWriterV2: the v1 writer's
             # save(path) requires a pre-existing table and rejects
@@ -354,107 +436,100 @@ def run_pipeline(
             # partitioned table creation at a path. UNTESTED on this
             # image (no delta jar; probe-gated).
             exploded.write.format(fmt).mode("overwrite").partitionBy("route").save(part_dir)
-        # per-partition (per output file) row-count lineage in one pruned
-        # scan, written to a parquet SIDECAR — at 100 TB the file list is
-        # 10^5-10^6 entries, which must never ride through the driver or
-        # the JSON ledger. Only O(routes) totals are collected.
+
+    def done(key: str) -> bool:
+        return resume and ledger.committed(key)
+
+    pending_aggs = [a for a in agg_specs if not done("agg_" + a["name"])]
+    pending_sinks = {r.sink for r in plan.routes if r.out_cfg is not None and not done(r.sink)}
+    # ONE listing of the written output, shared by every action below
+    by_route = (
+        _read_routed(spark, part_dir, read_fmt, read_ident, schema)
+        if not write_skipped or pending_aggs or pending_sinks else None
+    )
+    # lineage and the aggregates are independent outputs of by_route, so
+    # they run as concurrent Spark jobs (the reference's errgroup fan-out
+    # of each event to every output, config/output.go:94-108). Each action
+    # inherits the caller's job group and local properties; the ledger is
+    # written from this thread only, in a fixed order.
+    with ThreadPoolExecutor(max_workers=max(len(pending_aggs) + (not write_skipped), 1)) as pool:
+
+        def submit(fn, *args):
+            return pool.submit(inheritable_thread_target(spark)(fn), *args)
+
         # input_file_name() returns '' under DSv2 scans — the ACID formats
         # use their metadata column instead (iceberg: _file, delta:
         # _metadata.file_path); the parquet DSv1 scan keeps
         # input_file_name()
-        if fmt == "iceberg":
-            file_col = F.col("_file")
-        elif fmt == "delta":
-            file_col = F.col("_metadata.file_path")
-        else:
-            file_col = F.input_file_name()
-        lineage_df = (
-            _read_routed()
-            .groupBy("route", file_col.alias("file"))
-            .agg(F.count(F.lit(1)).alias("rows"))
+        file_col = {"iceberg": "_file", "delta": "_metadata.file_path"}.get(read_fmt)
+        lineage = None if write_skipped else submit(
+            _write_lineage, by_route, F.col(file_col) if file_col else F.input_file_name(),
+            lin_dir,
         )
-        lin_dir = os.path.join(out_dir, "_lineage")
-        _commit_dir(lineage_df.write.mode("overwrite").parquet, lin_dir)
-        rollup = (
-            spark.read.parquet(lin_dir)
-            .groupBy("route")
-            .agg(F.sum("rows").alias("rows"), F.count(F.lit(1)).alias("files"))
-            .collect()
-        )
-        counts: dict[str, int] = {rr["route"]: int(rr["rows"]) for rr in rollup}
-        result.sink_rows = _route_sink_rows(plan, counts)
-        result.metrics["lineage"] = {
-            "files": sum(int(r["files"]) for r in rollup),
-            "path": lin_dir,
-            "route_rows": counts,
+        agg_futures = {
+            a["name"]: submit(_write_aggregate, by_route, a, os.path.join(out_dir, "agg_" + a["name"]))
+            for a in pending_aggs
         }
-        ledger.commit(
-            "__partitioned__",
-            sum(result.sink_rows.values()),
-            # the format ACTUALLY used rides in the ledger so a resumed
-            # run reads by_route with it, whatever format the resume
-            # invocation asks for
-            extra={
-                "route_rows": counts, "lineage_path": lin_dir,
-                "table_format": fmt,
-                **({"table_ident": table_ident} if table_ident else {}),
-            },
-        )
-        # Observation.get BLOCKS until the observed node runs, so it is
-        # read only after the write, which executed the routed plan
-        result.metrics["pipeline"] = observed(obs)
-        # rows/misses observed by every grok stage, summed
-        grok = [observed(o) for o in ctx.options.get("grok_observations", [])]
-        if grok:
-            result.metrics["acc_grok"] = {
-                k: sum(int(g.get(k) or 0) for g in grok) for k in ("rows", "misses")
+
+        if lineage is not None:
+            rollup = lineage.result()
+            counts: dict[str, int] = {rr["route"]: int(rr["rows"]) for rr in rollup}
+            result.sink_rows = _route_sink_rows(plan, counts)
+            result.metrics["lineage"] = {
+                "files": sum(int(r["files"]) for r in rollup),
+                "path": lin_dir,
+                "route_rows": counts,
             }
+            ledger.commit(
+                "__partitioned__",
+                sum(result.sink_rows.values()),
+                # the format ACTUALLY used and the schema written ride in
+                # the ledger so a resumed run reads by_route with them,
+                # whatever format the resume invocation asks for
+                extra={
+                    "route_rows": counts, "lineage_path": lin_dir,
+                    "table_format": fmt, "schema": schema.json(),
+                    **({"table_ident": table_ident} if table_ident else {}),
+                },
+            )
+            # Observation.get BLOCKS until the observed node runs, so it is
+            # read only after the write, which executed the routed plan
+            result.metrics["pipeline"] = observed(obs)
+            # rows/misses observed by every grok stage, summed
+            grok = [observed(o) for o in ctx.options.get("grok_observations", [])]
+            if grok:
+                result.metrics["acc_grok"] = {
+                    k: sum(int(g.get(k) or 0) for g in grok) for k in ("rows", "misses")
+                }
 
-    # protocol sinks (http/socket/gelf/loki) emit from the written
-    # columnar output — a pruned per-route scan, committed per sink so a
-    # resumed run replays only the unsent ones
-    for r in plan.routes:
-        if r.out_cfg is None:
-            continue
-        if resume and ledger.committed(r.sink):
-            result.skipped_sinks.append(r.sink)
-            result.sink_rows[r.sink] = ledger.state["sinks"][r.sink]["rows"]
-            continue
-        from gogstash_spark.outputs import emit
+        # protocol sinks (http/socket/gelf/loki) emit from the written
+        # columnar output — a pruned per-route scan, committed per sink so
+        # a resumed run replays only the unsent ones
+        for r in plan.routes:
+            if r.out_cfg is None:
+                continue
+            if r.sink not in pending_sinks:
+                result.skipped_sinks.append(r.sink)
+                result.sink_rows[r.sink] = ledger.state["sinks"][r.sink]["rows"]
+                continue
+            from gogstash_spark.outputs import emit
 
-        df_r = (
-            _read_routed()
-            .filter(F.col("route") == r.sink)
-            .drop("route", DOC_ID)  # internal cols never leave the engine
-        )
-        rows = emit(df_r, r.out_cfg)
-        result.sink_rows[r.sink] = rows
-        ledger.commit(r.sink, rows)
-        result.metrics[r.sink] = {"rows": rows}
+            df_r = (
+                by_route.filter(F.col("route") == r.sink)
+                .drop("route", DOC_ID)  # internal cols never leave the engine
+            )
+            rows = emit(df_r, r.out_cfg)
+            result.sink_rows[r.sink] = rows
+            ledger.commit(r.sink, rows)
+            result.metrics[r.sink] = {"rows": rows}
 
-    # per-sink aggregates (report/statsd semantics,
-    # reference output/report/outputreport.go:80-92,
-    # output/statsd/outputstatsd.go:267-331) from the written columnar
-    # output: the scan is pruned to the aggregate's columns, no parse
-    # recompute
-    for agg in agg_specs:
-        name = agg["name"]
-        key = "agg_%s" % name
-        if resume and ledger.committed(key):
-            result.agg_rows[name] = ledger.state["sinks"][key]["rows"]
-            continue
-        exploded = _read_routed().withColumnRenamed("route", "sink")
-        if agg.get("__default__"):
-            agg = {
-                **agg,
-                "group_by": [k for k in agg["group_by"] if k in exploded.columns],
-            }
-        agg_df = compute_aggregate(exploded, agg)
-        agg_obs = Observation(key)
-        agg_df = agg_df.observe(agg_obs, F.count(F.lit(1)).alias("rows"))
-        _commit_dir(agg_df.write.mode("overwrite").parquet, os.path.join(out_dir, key))
-        n = int(observed(agg_obs).get("rows") or 0)
-        result.agg_rows[name] = n
-        ledger.commit(key, n)
+        for agg in agg_specs:
+            name = agg["name"]
+            if name in agg_futures:
+                n = agg_futures[name].result()
+                ledger.commit("agg_" + name, n)
+            else:
+                n = ledger.state["sinks"]["agg_" + name]["rows"]
+            result.agg_rows[name] = n
     result.wall_sec = time.time() - t0
     return result

@@ -3,6 +3,7 @@ mirroring SURVEY.md §5's oracle layer: a pure-pandas reimplementation
 of the route predicates over the same rows.
 """
 
+import json
 import os
 import re
 import shutil
@@ -10,13 +11,14 @@ import shutil
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from gogstash_spark.functions.grok import compile_grok
 from gogstash_spark.operators import Context
 from gogstash_spark.pipelines import EXTRA_PATTERNS, GROK_MATCHES, standard_spec
 from gogstash_spark.plans.compile import compile_pipeline, flatten_outputs
 from gogstash_spark.plans.spec import PipelineSpec
-from gogstash_spark.runner import run_pipeline
+from gogstash_spark.runner import _read_routed, run_pipeline
 
 
 class TestFlattenOutputs:
@@ -500,6 +502,121 @@ class TestRunnerE2E:
         run_pipeline(spark, spec, input_df=events,
                      out_dir=str(tmp_path / "dflt"), resume=False)
         assert calls == []
+
+
+def _ledger_keys(out_dir):
+    with open(os.path.join(out_dir, "_ledger.json")) as f:
+        return list(json.load(f)["sinks"])
+
+
+class TestPostWritePass:
+    """After the write, one schema-given read of by_route feeds lineage,
+    the protocol sinks and the aggregates, which run as concurrent jobs;
+    the ledger stays in one fixed order."""
+
+    def test_every_output_read_carries_a_schema(self, spark, sf_data_dir, tmp_path, monkeypatch):
+        reader = type(spark.read)
+        orig_schema, orig_load, orig_parquet = reader.schema, reader.load, reader.parquet
+        reads = []  # (path, read was given a schema)
+
+        def schema(self, s):
+            self._given_schema = True
+            return orig_schema(self, s)
+
+        def load(self, path=None, *a, **k):
+            reads.append((str(path), getattr(self, "_given_schema", False) or "schema" in k))
+            return orig_load(self, path, *a, **k)
+
+        def parquet(self, *paths, **k):
+            reads.extend((str(p), getattr(self, "_given_schema", False)) for p in paths)
+            return orig_parquet(self, *paths, **k)
+
+        monkeypatch.setattr(reader, "schema", schema)
+        monkeypatch.setattr(reader, "load", load)
+        monkeypatch.setattr(reader, "parquet", parquet)
+        out = str(tmp_path / "spied")
+        run_pipeline(spark, standard_spec(sf_data_dir), out_dir=out, base_dir=sf_data_dir)
+        ours = [(p, given) for p, given in reads if p.startswith(out)]
+        assert ours and all(given for _, given in ours), ours
+        assert [p for p, _ in ours].count(os.path.join(out, "by_route")) == 1, ours
+
+    def test_given_schema_is_the_inferred_schema(self, spark, run_out):
+        out_dir, _ = run_out
+        with open(os.path.join(out_dir, "_ledger.json")) as f:
+            written = json.load(f)["sinks"]["__partitioned__"]["schema"]
+        part_dir = os.path.join(out_dir, "by_route")
+        given = _read_routed(
+            spark, part_dir, "parquet", None, T.StructType.fromJson(json.loads(written))
+        ).schema
+        inferred = spark.read.parquet(part_dir).schema
+        assert given == inferred
+        assert [f.nullable for f in given.fields] == [f.nullable for f in inferred.fields]
+
+    def test_concurrent_jobs_keep_the_callers_job_group(self, spark, sf_data_dir, tmp_path):
+        sc = spark.sparkContext
+        ungrouped = set(sc.statusTracker().getJobIdsForGroup(None))
+        sc.setJobGroup("runner_post_write", "run_pipeline under one job group")
+        try:
+            run_pipeline(
+                spark, standard_spec(sf_data_dir), out_dir=str(tmp_path / "grouped"),
+                base_dir=sf_data_dir,
+            )
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        assert set(sc.statusTracker().getJobIdsForGroup(None)) - ungrouped == set()
+        assert sc.statusTracker().getJobIdsForGroup("runner_post_write")
+
+    def test_ledger_and_agg_rows_keep_spec_order(self, spark, sf_data_dir, run_out, tmp_path):
+        out_dir, res = run_out
+        spec = standard_spec(sf_data_dir)
+        again = run_pipeline(spark, spec, out_dir=str(tmp_path / "again"), base_dir=sf_data_dir)
+        names = [a["name"] for a in spec.aggregate]
+        want = ["__partitioned__"] + ["agg_" + n for n in names]
+        assert _ledger_keys(out_dir) == _ledger_keys(str(tmp_path / "again")) == want
+        assert list(res.agg_rows) == list(again.agg_rows) == names
+
+    def test_resume_without_recorded_schema_infers_it(self, spark, tmp_path):
+        """A ledger written before the schema was recorded still resumes:
+        its by_route read infers the schema."""
+        events = spark.createDataFrame(
+            [("C1", 1, "user", "hi"), ("C2", 2, "tool", "x")],
+            "conv_id string, turn_idx int, role string, text string",
+        )
+        spec = {
+            "input": {}, "filter": [],
+            "output": [{"type": "table", "name": "users", "condition": "role == 'user'"}],
+            "aggregate": [{"name": "counts", "group_by": ["role"]}],
+        }
+        out = str(tmp_path / "legacy")
+        first = run_pipeline(spark, spec, input_df=events, out_dir=out, resume=False)
+        path = os.path.join(out, "_ledger.json")
+        with open(path) as f:
+            state = json.load(f)
+        del state["sinks"]["__partitioned__"]["schema"], state["sinks"]["agg_counts"]
+        with open(path, "w") as f:
+            json.dump(state, f)
+        again = run_pipeline(spark, spec, input_df=events, out_dir=out, resume=True)
+        assert again.metrics["table_format"]["resumed_from_commit"] is True
+        assert again.agg_rows == first.agg_rows == {"counts": 1}
+
+    def test_default_aggregate_without_ts(self, spark, tmp_path):
+        """The default aggregate buckets by hour only when the events have
+        a `ts` column; without one it counts per sink."""
+        events = spark.createDataFrame(
+            [("C1", 1, "user", "hi"), ("C2", 2, "tool", "x"), ("C3", 1, "user", "yo")],
+            "conv_id string, turn_idx int, role string, text string",
+        )
+        spec = {
+            "input": {}, "filter": [],
+            "output": [{"type": "table", "name": "users", "condition": "role == 'user'"}],
+        }
+        out = str(tmp_path / "no_ts")
+        res = run_pipeline(spark, spec, input_df=events, out_dir=out, resume=False)
+        assert res.sink_rows == {"users": 2}
+        assert res.agg_rows == {"counts": 1}
+        agg = spark.read.parquet(os.path.join(out, "agg_counts"))
+        assert [tuple(r) for r in agg.collect()] == [("users", 2)]
 
 
 class TestResume:
