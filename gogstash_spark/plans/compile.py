@@ -44,8 +44,8 @@ DOC_ID = "_doc_id"
 def route_value_expr(df: DataFrame, route: "Route"):
     """The per-event route value for a sink: the lowercased rendered
     %{} index template, or the static sink name. THE single source of
-    truth — with_routes and the runner's doc-id scoping must agree
-    byte-for-byte or dedup silently stops matching."""
+    truth — CompiledPipeline.run and the runner's write_by_route doc-id
+    scoping must agree byte-for-byte or dedup silently stops matching."""
     from gogstash_spark.logevent import format_expr
 
     if route.index_template:
@@ -59,11 +59,12 @@ class CompiledPipeline:
     transform: Stage
     routes: list[Route] = field(default_factory=list)
 
-    def with_routes(self, df: DataFrame) -> DataFrame:
-        """Materialize the routes array column. Doc ids are NOT computed
-        here: each sink's document_id template renders per sink in the
-        runner (a shared column would carry the wrong sink's id on
-        co-routed rows and leak into plain sinks' output)."""
+    def run(self, df: DataFrame) -> DataFrame:
+        """The filter chain, then the routes array column. Doc ids are
+        NOT computed here: each sink's document_id template renders per
+        sink in the runner (a shared column would carry the wrong sink's
+        id on co-routed rows and leak into plain sinks' output)."""
+        df = self.transform(df)
         if not self.routes:
             return df.withColumn(ROUTES, F.array().cast("array<string>"))
         entries = [
@@ -73,9 +74,6 @@ class CompiledPipeline:
             for r in self.routes
         ]
         return df.withColumn(ROUTES, F.array_compact(F.array(*entries)))
-
-    def run(self, df: DataFrame) -> DataFrame:
-        return self.with_routes(self.transform(df))
 
 
 def flatten_outputs(outputs: list[dict], parent_pred: str = "true") -> list[Route]:
@@ -104,6 +102,11 @@ def flatten_outputs(outputs: list[dict], parent_pred: str = "true") -> list[Rout
 
 
 def compile_pipeline(spec: PipelineSpec, ctx: Context) -> CompiledPipeline:
-    transform = compile_chain(spec.filter, ctx)
     routes = flatten_outputs(spec.output)
+    # duplicate names merge routes and make resume skip work: a config bug
+    for kind, names in (("sink", [r.sink for r in routes]),
+                        ("aggregate", [a["name"] for a in spec.aggregate or []])):
+        if len(names) != len(set(names)):
+            raise ValueError("duplicate %s names: %s" % (kind, sorted(names)))
+    transform = compile_chain(spec.filter, ctx)
     return CompiledPipeline(spec=spec, transform=transform, routes=routes)

@@ -2,9 +2,10 @@
 
 Scale design (the part gogstash never faced — one box, one stream):
 
-- ONE write path, nothing materialized: the routed frame is exploded to
-  one row per (route, event) and written in a single
-  partitionBy("route") pass under out_dir/by_route — every output gets
+- ONE write path, nothing materialized, shared with every streaming
+  epoch (`write_by_route`): the routed frame is exploded to one row per
+  (route, event) and written in a single partitionBy("route") pass under
+  out_dir/by_route (streaming: by_route/epoch=N) — every output gets
   every event routed to it (the reference's per-path writer goroutines,
   output/file/outputfile.go:190-325, as one dynamic-partitioned write).
   Lineage, protocol sinks and aggregates share ONE read of the written
@@ -50,7 +51,7 @@ from pyspark.sql import types as T
 from pyspark.util import inheritable_thread_target
 
 from gogstash_spark.operators import Context
-from gogstash_spark.plans.compile import DOC_ID, ROUTES, CompiledPipeline, compile_pipeline
+from gogstash_spark.plans.compile import DOC_ID, ROUTES, CompiledPipeline, Route, compile_pipeline
 from gogstash_spark.plans.spec import PipelineSpec
 from gogstash_spark.session import observed
 
@@ -173,8 +174,10 @@ def _fanout_distribute(exploded: DataFrame) -> DataFrame:
 def _commit_dir(write, final_dir: str) -> None:
     """Atomic directory commit: `write(tmp)` fills a temp dir next to
     `final_dir`, then one rename replaces it, so a killed write never
-    half-commits."""
-    tmp_dir = final_dir + ".__tmp__"
+    half-commits. The temp dir is dot-named so partition discovery skips
+    it: a killed epoch must not read as an `epoch=N...` partition."""
+    head, name = os.path.split(final_dir)
+    tmp_dir = os.path.join(head, ".%s.__tmp__" % name)
     write(tmp_dir)
     if os.path.exists(final_dir):
         shutil.rmtree(final_dir)
@@ -201,6 +204,65 @@ def _routed_schema(exploded: DataFrame) -> T.StructType:
     last, all nullable."""
     data = [f for f in exploded.schema.fields if f.name != "route"]
     return _nullable(T.StructType(data + [T.StructField("route", T.StringType())]))
+
+
+def write_by_route(
+    routed: DataFrame, routes: list[Route], target: str, fmt: str = "parquet", table_ident=None
+) -> T.StructType:
+    """THE write path, shared by `run_pipeline` and every streaming
+    epoch: explode `routed`'s ROUTES to one row per (route, event),
+    dedup each doc-id sink's copies on its rendered document_id, spread
+    the rows over the write tasks (`_fanout_distribute`) and commit one
+    partitionBy("route") write at `target`. Returns the schema a read
+    of the committed output takes (`_routed_schema`)."""
+    exploded = routed.select(F.explode(ROUTES).alias("route"), "*").drop(ROUTES)
+    doc_routes = [r for r in routes if r.doc_id_template]
+    if doc_routes:
+        from gogstash_spark.logevent import format_expr
+        from gogstash_spark.plans.compile import route_value_expr
+
+        # elastic document_id semantics: one row per (index, doc id).
+        # Dedup applies ONLY to exploded copies whose route belongs to
+        # a doc-id sink, keyed by THAT sink's rendered template —
+        # copies routed to plain sinks get a unique surrogate and pass
+        # through untouched. The _doc_id column is computed HERE per
+        # exploded copy so each route partition carries ITS sink's
+        # doc ids.
+        pieces = []
+        for r in doc_routes:
+            rv = route_value_expr(exploded, r)
+            rendered = format_expr(exploded, str(r.doc_id_template))
+            pieces.append(F.when((F.col("route") == rv) & rendered.isNotNull(), rendered))
+        per_route_id = F.coalesce(*pieces) if len(pieces) > 1 else pieces[0]
+        dd = F.coalesce(
+            F.concat(F.lit("d|"), per_route_id),
+            F.concat(F.lit("r|"), F.monotonically_increasing_id().cast("string")),
+        )
+        exploded = (
+            exploded.withColumn(DOC_ID, per_route_id)
+            .withColumn("__dd", dd)
+            .dropDuplicates(["route", "__dd"])
+            .drop("__dd")
+        )
+    exploded = _fanout_distribute(exploded)
+    schema = _routed_schema(exploded)
+    # the ACID formats run only where resolve_table_format's probe finds
+    # their runtime jar; the test suite has none, so they are UNTESTED
+    if fmt == "parquet":
+        # no table format on the classpath: atomic commit = write to
+        # a temp dir + one rename
+        _commit_dir(exploded.write.mode("overwrite").partitionBy("route").parquet, target)
+    elif fmt == "iceberg":
+        # ACID snapshot commit via DataFrameWriterV2: the v1 writer's
+        # save(path) requires a pre-existing table and rejects
+        # partitionBy for creation; writeTo() creates-or-replaces the
+        # partitioned table in one transaction.
+        exploded.writeTo(table_ident).partitionedBy(F.col("route")).createOrReplace()
+    else:
+        # delta: transaction-log commit; the v1 writer DOES support
+        # partitioned table creation at a path.
+        exploded.write.format(fmt).mode("overwrite").partitionBy("route").save(target)
+    return schema
 
 
 def _read_routed(
@@ -290,9 +352,10 @@ def run_pipeline(
     table_ident: str | None = None,  # iceberg only: catalog.db.table for writeTo()
 ) -> RunResult:
     """Run `spec` end to end with ONE partitionBy(route) write of every
-    routed event under out_dir/by_route, then lineage, protocol sinks
-    and aggregates from one schema-given read of that written output,
-    with lineage and the aggregates running as concurrent jobs.
+    routed event under out_dir/by_route (`write_by_route`), then
+    lineage, protocol sinks and aggregates from one schema-given read of
+    that written output, with lineage and the aggregates running as
+    concurrent jobs.
 
     write_mode names the write path; "partitioned" is the only one and
     anything else raises ValueError. With resume=True a run skips every
@@ -307,14 +370,6 @@ def run_pipeline(
         spec = PipelineSpec.from_dict(spec)
     ctx = Context(spark=spark, base_dir=base_dir)
     plan: CompiledPipeline = compile_pipeline(spec, ctx)
-    # duplicate sink / aggregate names silently merge routes and make the
-    # resume ledger skip work — always a config bug, fail at plan time
-    sink_names = [r.sink for r in plan.routes]
-    if len(sink_names) != len(set(sink_names)):
-        raise ValueError("duplicate sink names in output spec: %s" % sorted(sink_names))
-    agg_names = [a["name"] for a in (spec.aggregate or [])]
-    if len(agg_names) != len(set(agg_names)):
-        raise ValueError("duplicate aggregate names: %s" % sorted(agg_names))
 
     t0 = time.time()
     if input_df is None:
@@ -384,58 +439,7 @@ def run_pipeline(
             F.count(F.lit(1)).alias("rows_total"),
             F.sum(F.size(ROUTES)).alias("rows_routed"),
         )
-        exploded = routed.select(F.explode(ROUTES).alias("route"), "*").drop(ROUTES)
-        doc_routes = [r for r in plan.routes if r.doc_id_template]
-        if doc_routes:
-            from gogstash_spark.logevent import format_expr
-            from gogstash_spark.plans.compile import route_value_expr
-
-            # elastic document_id semantics: one row per (index, doc id).
-            # Dedup applies ONLY to exploded copies whose route belongs to
-            # a doc-id sink, keyed by THAT sink's rendered template —
-            # copies routed to plain sinks get a unique surrogate and pass
-            # through untouched. The _doc_id column is computed HERE per
-            # exploded copy so each route partition carries ITS sink's
-            # doc ids.
-            pieces = []
-            for r in doc_routes:
-                rv = route_value_expr(exploded, r)
-                rendered = format_expr(exploded, str(r.doc_id_template))
-                pieces.append(F.when(
-                    (F.col("route") == rv) & rendered.isNotNull(), rendered
-                ))
-            per_route_id = F.coalesce(*pieces) if len(pieces) > 1 else pieces[0]
-            dd = F.coalesce(
-                F.concat(F.lit("d|"), per_route_id),
-                F.concat(
-                    F.lit("r|"), F.monotonically_increasing_id().cast("string")
-                ),
-            )
-            exploded = (
-                exploded.withColumn(DOC_ID, per_route_id)
-                .withColumn("__dd", dd)
-                .dropDuplicates(["route", "__dd"])
-                .drop("__dd")
-            )
-        exploded = _fanout_distribute(exploded)
-        schema = _routed_schema(exploded)
-        if fmt == "parquet":
-            # no table format on the classpath: atomic commit = write to
-            # a temp dir + one rename
-            _commit_dir(exploded.write.mode("overwrite").partitionBy("route").parquet, part_dir)
-        elif fmt == "iceberg":
-            # ACID snapshot commit via DataFrameWriterV2: the v1 writer's
-            # save(path) requires a pre-existing table and rejects
-            # partitionBy for creation; writeTo() creates-or-replaces the
-            # partitioned table in one transaction. UNTESTED on this
-            # image (no iceberg runtime jar — the probe above guarantees
-            # this branch only runs on a provisioned cluster).
-            exploded.writeTo(table_ident).partitionedBy(F.col("route")).createOrReplace()
-        else:
-            # delta: transaction-log commit; the v1 writer DOES support
-            # partitioned table creation at a path. UNTESTED on this
-            # image (no delta jar; probe-gated).
-            exploded.write.format(fmt).mode("overwrite").partitionBy("route").save(part_dir)
+        schema = write_by_route(routed, plan.routes, part_dir, fmt, table_ident)
 
     def done(key: str) -> bool:
         return resume and ledger.committed(key)

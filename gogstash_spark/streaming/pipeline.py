@@ -1,13 +1,15 @@
 """Structured Streaming variant of the pipeline.
 
 The reference is a daemon: inputs push events through channels forever
-(reference config/input.go:70-85). The streaming runner is the same
-compiled filter chain + routes column applied to a readStream source;
-per-sink fan-out happens inside foreachBatch, writing each (sink,
-epoch) to its own epoch=N partition dir with overwrite semantics so an
-epoch replay is idempotent (exactly-once at the sink level). The
-report-style aggregate becomes a watermarked windowed count
-(reference output/report/outputreport.go:56-92).
+(reference config/input.go:70-85). The streaming runner applies the
+same compiled pipeline (`plan.run`) to a readStream source, and each
+micro-batch commits through the batch runner's one write path
+(`runner.write_by_route`) into out_dir/by_route/epoch=N, with the same
+route=<sink> partitions as a batch run. An epoch replay replaces its
+own dir, so it is idempotent (exactly-once at the sink level). Doc-id
+dedup holds within an epoch (across epochs: `stateful.dedup_stream`);
+protocol outputs are batch-only. The report-style aggregate becomes a
+watermarked windowed count (reference output/report/outputreport.go:56-92).
 
 File-source streaming stands in for kafka here (the kafka connector
 needs its jar; `readStream.format("kafka")` is the one-line swap).
@@ -22,8 +24,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gogstash_spark import runner
 from gogstash_spark.operators import Context
-from gogstash_spark.plans.compile import ROUTES, compile_pipeline
+from gogstash_spark.plans.compile import Route, compile_pipeline
 from gogstash_spark.plans.spec import PipelineSpec
 
 
@@ -38,27 +41,15 @@ def stream_source(spark: SparkSession, path: str, schema=None) -> DataFrame:
     )
 
 
-def make_batch_writer(sinks: list[str], out_dir: str):
-    """foreachBatch fan-out writer, exactly-once per (sink, epoch): each
-    microbatch lands in its own epoch=N subdir with OVERWRITE semantics,
-    so when Structured Streaming replays an epoch after a mid-fanout
-    failure (sink A written, sink B not), the rewrite is idempotent —
-    sink A's epoch dir is replaced, never appended twice. Readers see
-    each sink as one partitioned dataset (epoch is a partition column).
-    """
+def make_batch_writer(routes: list[Route], out_dir: str):
+    """foreachBatch writer: each micro-batch commits through
+    `runner.write_by_route` to out_dir/by_route/epoch=N, replacing that
+    dir, so an epoch replay is idempotent. Readers see by_route as one
+    dataset partitioned by (epoch, route)."""
+    by_route = os.path.join(out_dir, "by_route")
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            for sink in sinks:
-                (
-                    batch_df.filter(F.array_contains(F.col(ROUTES), sink))
-                    .drop(ROUTES)
-                    .write.mode("overwrite")
-                    .parquet(os.path.join(out_dir, sink, "epoch=%d" % epoch_id))
-                )
-        finally:
-            batch_df.unpersist()
+        runner.write_by_route(batch_df, routes, os.path.join(by_route, "epoch=%d" % epoch_id))
 
     return write_batch
 
@@ -71,19 +62,20 @@ def run_pipeline_streaming(
     base_dir: str = ".",
     await_termination: bool = True,
 ):
-    """Run the compiled pipeline as a streaming query with foreachBatch
-    fan-out. Returns the streaming query handle (stopped when
-    await_termination via processAllAvailable)."""
+    """Run the compiled pipeline as a streaming query whose micro-batches
+    commit through the batch write path. Returns the streaming query
+    handle (stopped when await_termination via processAllAvailable).
+    Protocol outputs, which only run_pipeline sends, raise ValueError."""
     if isinstance(spec, dict):
         spec = PipelineSpec.from_dict(spec)
-    ctx = Context(spark=spark, base_dir=base_dir)
-    plan = compile_pipeline(spec, ctx)
-    src = stream_source(spark, input_path)
-    routed = plan.with_routes(plan.transform(src))
-    write_batch = make_batch_writer([r.sink for r in plan.routes], out_dir)
-
+    plan = compile_pipeline(spec, Context(spark=spark, base_dir=base_dir))
+    protocol = [r.sink for r in plan.routes if r.out_cfg is not None]
+    if protocol:
+        raise ValueError("streaming writes table sinks only; protocol outputs %s "
+                         "are sent by run_pipeline" % protocol)
     q = (
-        routed.writeStream.foreachBatch(write_batch)
+        plan.run(stream_source(spark, input_path))
+        .writeStream.foreachBatch(make_batch_writer(plan.routes, out_dir))
         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
         .trigger(availableNow=True)
         .start()

@@ -3,12 +3,18 @@
     python tools/build_zip.py                        # -> dist/gogstash_spark.zip
     spark-submit --py-files dist/gogstash_spark.zip \
         spark_submit_main.py --spec pipeline.json \
-        --input /data/transcripts --out /data/out [--resume]
+        --input /data/transcripts --out /data/out [--no-resume] [--streaming]
 
 On a real cluster the input/output paths are Iceberg/S3/HDFS URIs; the
-runner writes every table sink in one atomic partitioned commit, and its
-ledger lets a re-run on the same --out skip what is committed while
-still reporting the committed sink_rows.
+runner writes every table sink in one atomic partitioned commit under
+out/by_route/route=<sink>/, and its ledger lets a re-run on the same
+--out skip what is committed while still reporting the committed
+sink_rows (resume is the default; --no-resume recomputes everything).
+
+--streaming runs the same spec as a Structured Streaming query over the
+input directory. Each micro-batch commits through the same write into
+out/by_route/epoch=N/route=<sink>/ (checkpoint in out/_checkpoint);
+protocol outputs are rejected, and no JSON line is printed.
 """
 
 from __future__ import annotations

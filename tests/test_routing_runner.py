@@ -326,6 +326,17 @@ output:
                 input_df=df, out_dir=str(tmp_path / "o"), resume=False,
             )
 
+    def test_duplicate_aggregate_names_rejected_by_runner(self, spark, tmp_path):
+        df = spark.createDataFrame([(1,)], "id int")
+        with pytest.raises(ValueError, match="duplicate aggregate"):
+            run_pipeline(
+                spark,
+                {"input": {}, "filter": [],
+                 "output": [{"type": "table", "name": "s"}],
+                 "aggregate": [{"name": "n", "group_by": []}, {"name": "n", "group_by": ["id"]}]},
+                input_df=df, out_dir=str(tmp_path / "o"), resume=False,
+            )
+
     def test_p999_percentile_op(self, spark):
         from gogstash_spark.runner import compute_aggregate
         from pyspark.sql import functions as SF

@@ -1,14 +1,20 @@
-"""Structured Streaming variant: same spec, foreachBatch fan-out,
-windowed watermark aggregate. availableNow trigger drives the whole
+"""Structured Streaming variant: same spec, each epoch committed through
+the batch write path, windowed watermark aggregate. availableNow trigger drives the whole
 file-backed stream to completion synchronously."""
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
 
 from gogstash_spark.plans.spec import PipelineSpec
 from gogstash_spark.streaming.pipeline import run_pipeline_streaming, windowed_counts
+
+
+def _route(spark, out_dir, route):
+    """One route's rows of a streaming run's by_route/epoch=N output."""
+    return spark.read.parquet(os.path.join(out_dir, "by_route")).filter(F.col("route") == route)
 
 
 @pytest.fixture(scope="module")
@@ -37,10 +43,10 @@ class TestStreaming:
         src = spark.read.parquet(os.path.join(sf_data_dir, "transcripts"))
         want_user = src.filter("role = 'user'").count()
         want_tool = src.filter("role = 'tool'").count()
-        assert spark.read.parquet(os.path.join(out, "s_user")).count() == want_user
-        assert spark.read.parquet(os.path.join(out, "s_tool")).count() == want_tool
+        assert _route(spark, out, "s_user").count() == want_user
+        assert _route(spark, out, "s_tool").count() == want_tool
         # enriched field made it through the streaming chain
-        row = spark.read.parquet(os.path.join(out, "s_user")).select("src").first()
+        row = _route(spark, out, "s_user").select("src").first()
         assert row["src"].startswith("user/")
 
     def test_grok_chain_streams(self, spark, sf_data_dir, tmp_path):
@@ -60,7 +66,7 @@ class TestStreaming:
             },
             os.path.join(sf_data_dir, "transcripts"), out, base_dir=sf_data_dir,
         )
-        assert spark.read.parquet(os.path.join(out, "s_dead")).count() == 780
+        assert _route(spark, out, "s_dead").count() == 780
         observed = [
             m for p in q.recentProgress for k, m in p.observedMetrics.items()
             if k.startswith("grok_")
@@ -71,7 +77,7 @@ class TestStreaming:
     def test_epoch_replay_is_idempotent(self, spark, tmp_path):
         """Re-running an epoch (Structured Streaming's failure recovery)
         must not duplicate rows in already-written sinks."""
-        from gogstash_spark.plans.compile import ROUTES
+        from gogstash_spark.plans.compile import ROUTES, Route
         from gogstash_spark.streaming.pipeline import make_batch_writer
 
         out = str(tmp_path / "replay_out")
@@ -84,13 +90,13 @@ class TestStreaming:
                 F.when(F.col("role") == "tool", F.lit("s_tool")),
             )),
         )
-        wb = make_batch_writer(["s_user", "s_tool"], out)
+        wb = make_batch_writer([Route("s_user", "true"), Route("s_tool", "true")], out)
         wb(df, 0)
         wb(df, 0)  # replay of the same epoch
-        assert spark.read.parquet(os.path.join(out, "s_user")).count() == 5
-        assert spark.read.parquet(os.path.join(out, "s_tool")).count() == 5
+        assert _route(spark, out, "s_user").count() == 5
+        assert _route(spark, out, "s_tool").count() == 5
         wb(df, 1)  # a genuinely new epoch appends
-        assert spark.read.parquet(os.path.join(out, "s_user")).count() == 10
+        assert _route(spark, out, "s_user").count() == 10
 
     def test_stateful_dedup_across_microbatches(self, spark, tmp_path):
         """applyInPandasWithState: first event per key wins, duplicates
@@ -285,3 +291,136 @@ class TestStreamingSessionize:
         )
         by_hour = {r["w"]["start"].hour: r["sessions"] for r in agg}
         assert by_hour == {9: 4, 12: 4}  # 4 convs x 1 session per burst
+
+
+class TestOneWritePath:
+    """Streaming epochs commit through the batch runner's write path
+    (runner.write_by_route), so both write the same rows per route."""
+
+    def _stream(self, spark, spec, events, tmp_path):
+        src = str(tmp_path / "src")
+        events.coalesce(1).write.parquet(src)
+        out = str(tmp_path / "stream_out")
+        run_pipeline_streaming(spark, spec, src, out)
+        return out
+
+    def test_docid_index_routes_match_batch(self, spark, tmp_path):
+        """A %{}-index route carries the rendered index, and doc-id dedup
+        runs in each epoch: the elastic spec streams what batch writes."""
+        from gogstash_spark.runner import run_pipeline
+
+        events = spark.createDataFrame(
+            [("C1", 1, "User", "a"), ("C1", 1, "User", "a-dup"), ("C2", 2, "Tool", "b")],
+            "conv_id string, turn_idx int, role string, text string",
+        )
+        spec = {
+            "output": [{"type": "elastic", "name": "es", "index": "Logs-%{role}",
+                        "document_id": "%{conv_id}/%{turn_idx}"}],
+        }
+        batch = run_pipeline(spark, spec, input_df=events, out_dir=str(tmp_path / "batch"),
+                             resume=False)
+        assert batch.sink_rows == {"logs-user": 1, "logs-tool": 1}
+        got = spark.read.parquet(
+            os.path.join(self._stream(spark, spec, events, tmp_path), "by_route")
+        )
+        assert {r["route"]: r["count"] for r in got.groupBy("route").count().collect()} == \
+            batch.sink_rows
+        assert {r["_doc_id"] for r in got.collect()} == {"C1/1", "C2/2"}
+
+    def test_standard_spec_routes_match_batch(self, spark, sf_data_dir, tmp_path):
+        """standard_spec at sf0.001 streams exactly the rows batch writes
+        per route (8 input files, so more than one epoch)."""
+        from gogstash_spark.pipelines import standard_spec
+        from gogstash_spark.runner import run_pipeline
+
+        spec = standard_spec(sf_data_dir)
+        batch_out, stream_out = str(tmp_path / "batch"), str(tmp_path / "stream")
+        res = run_pipeline(spark, spec, out_dir=batch_out, base_dir=sf_data_dir, resume=False)
+        assert res.sink_rows == {
+            "sink_errors": 1462, "sink_tool_calls": 732, "sink_user_turns": 2007,
+            "sink_deadletter": 780, "sink_rest": 1244,
+        }
+        run_pipeline_streaming(spark, spec, spec.input["path"], stream_out, base_dir=sf_data_dir)
+        streamed = spark.read.parquet(os.path.join(stream_out, "by_route"))
+        assert streamed.select("epoch").distinct().count() > 1
+        batch = spark.read.parquet(os.path.join(batch_out, "by_route"))
+        streamed = streamed.select(*batch.columns)
+        assert streamed.exceptAll(batch).count() == 0
+        assert batch.exceptAll(streamed).count() == 0
+
+    def test_both_runners_write_through_write_by_route(self, spark, tmp_path, monkeypatch):
+        from gogstash_spark import runner
+
+        targets = []
+        write = runner.write_by_route
+
+        def spy(routed, routes, target, *args):
+            targets.append(os.path.relpath(target, str(tmp_path)))
+            return write(routed, routes, target, *args)
+
+        monkeypatch.setattr(runner, "write_by_route", spy)
+        events = spark.createDataFrame([(1, "user"), (2, "tool")], "id int, role string")
+        spec = {"output": [{"type": "table", "name": "s"}]}
+        runner.run_pipeline(spark, spec, input_df=events, out_dir=str(tmp_path / "batch"),
+                            resume=False)
+        self._stream(spark, spec, events, tmp_path)
+        assert targets == ["batch/by_route", "stream_out/by_route/epoch=0"]
+        # and no library module filters the routes column per sink
+        pkg = os.path.dirname(runner.__file__)
+        for root, _, files in os.walk(pkg):
+            for name in files:
+                if name.endswith(".py"):
+                    with open(os.path.join(root, name)) as f:
+                        assert not re.search(r"array_contains\([^)]*ROUTES", f.read()), name
+
+    def test_killed_epoch_commit_stays_invisible(self, spark, tmp_path, monkeypatch):
+        """An epoch whose write dies before its rename leaves only a
+        dot-named temp dir, which partition discovery skips: by_route
+        still reads the earlier epochs, with an int `epoch` column."""
+        from gogstash_spark import runner
+        from gogstash_spark.plans.compile import ROUTES, Route
+        from gogstash_spark.streaming.pipeline import make_batch_writer
+
+        out = str(tmp_path / "out")
+        df = spark.createDataFrame([(i,) for i in range(6)], "id int").withColumn(
+            ROUTES, F.array(F.lit("s"))
+        )
+        wb = make_batch_writer([Route("s", "true")], out)
+        wb(df, 0)
+
+        def killed(src, dst):
+            raise RuntimeError("killed before the rename")
+
+        with monkeypatch.context() as m:
+            m.setattr(runner.os, "replace", killed)
+            with pytest.raises(RuntimeError, match="killed"):
+                wb(df, 1)
+        by_route = os.path.join(out, "by_route")
+        leftover = [d for d in os.listdir(by_route) if d != "epoch=0"]
+        assert len(leftover) == 1 and "epoch=1" in leftover[0]  # the killed temp dir
+        got = spark.read.parquet(by_route)
+        assert got.count() == 6
+        assert dict(got.dtypes)["epoch"] == "int"
+        assert [r["epoch"] for r in got.select("epoch").distinct().collect()] == [0]
+
+    def test_duplicate_sink_names_rejected(self, spark, tmp_path):
+        with pytest.raises(ValueError, match="duplicate sink"):
+            run_pipeline_streaming(
+                spark,
+                {"output": [{"type": "table", "name": "s"}, {"type": "table", "name": "s"}]},
+                str(tmp_path / "src"), str(tmp_path / "out"),
+            )
+
+    def test_protocol_sinks_rejected(self, spark, tmp_path):
+        """Protocol outputs are sent only by the batch runner; streaming
+        refuses them by name instead of writing them as parquet."""
+        with pytest.raises(ValueError, match=r"\['hook', 'gl'\]"):
+            run_pipeline_streaming(
+                spark,
+                {"output": [
+                    {"type": "table", "name": "archive"},
+                    {"type": "http", "name": "hook", "url": "http://localhost:9/x"},
+                    {"type": "gelf", "name": "gl", "host": "localhost", "port": 9},
+                ]},
+                str(tmp_path / "src"), str(tmp_path / "out"),
+            )
