@@ -753,7 +753,8 @@ def chunk_documents(
     whitespace-normalizing by construction — byte-exact offsets belong
     to a substring index, not a token chunker).
 
-    Every token lands in at least one chunk; the last chunk may be
+    Every token lands in at least one chunk, and every chunk after the
+    first holds a token the previous one does not; the last chunk may be
     short; a doc shorter than one chunk yields exactly one chunk; blank
     docs yield none. Each (id, chunk_start) is deterministic, so chunk
     ids compose with the dedup/ANN ops downstream (md5(id:chunk_start)
@@ -774,9 +775,9 @@ def chunk_documents(
 
     def chunks(arr):
         n = F.size(arr)
-        # last start: the largest multiple of stride still < n (every
-        # token covered, no empty tail chunk)
-        last = F.floor((n - 1) / stride) * stride
+        # last start: the smallest multiple of stride whose window reaches
+        # token n-1 (every token covered, no tail made only of overlap)
+        last = F.ceil(F.greatest(n - chunk_tokens, F.lit(0)) / stride) * stride
         return F.when(
             (F.length(F.trim(F.col(text_col))) > 0) & (n > 0),
             F.transform(

@@ -1,8 +1,9 @@
-"""Protocol sinks: http POST, tcp/unix socket, GELF UDP.
+"""Protocol sinks: http POST, tcp/unix socket, GELF UDP, loki push,
+redis list/channel, nsq, email (SMTP) and amqp.
 
 The reference's network outputs ship events one connection per process
 (output/http/outputhttp.go, output/socket/outputsocket.go,
-output/gelf). Spark-first shape: `df.foreachPartition` — one
+output/gelf, ...). Spark-first shape: `df.foreachPartition` — one
 connection per TASK, events streamed out of the Arrow batch iterator,
 no driver round-trip. At 1000 executors that is 1000 concurrent
 writers, which is exactly how a log pipeline fans into an ingest tier.
@@ -20,6 +21,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gogstash_spark import logevent
+from gogstash_spark.netproto import resp_encode as _resp
+
+# the output types `emit` dispatches; every other leaf output (not `cond`)
+# is a table sink of the partitioned write
+PROTOCOL_OUTPUTS = frozenset({"http", "socket", "gelf", "loki", "redis", "nsq", "email", "amqp"})
 
 
 def _encoded(df: DataFrame, json_opts: dict | None = None) -> DataFrame:
@@ -250,17 +256,6 @@ def loki_output(
 
     enc.foreachPartition(send_partition)
     return int(sent.value)
-
-
-NET_OUTPUTS = {
-    "http": http_output,
-    "socket": socket_output,
-    "gelf": gelf_output,
-    "loki": loki_output,
-}
-
-
-from gogstash_spark.netproto import resp_encode as _resp
 
 
 def redis_output(

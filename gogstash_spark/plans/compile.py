@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from gogstash_spark.functions.conds import cond_to_sql
 from gogstash_spark.operators import Context, Stage, compile_chain
+from gogstash_spark.outputs import PROTOCOL_OUTPUTS
 from gogstash_spark.plans.spec import PipelineSpec
 
 ROUTES = "routes"
@@ -93,10 +94,7 @@ def flatten_outputs(outputs: list[dict], parent_pred: str = "true") -> list[Rout
                 pred_sql=pred,
                 index_template=out.get("index"),
                 doc_id_template=out.get("document_id"),
-                out_cfg=dict(out)
-                if typ in ("http", "socket", "gelf", "loki", "redis", "nsq",
-                           "email", "amqp")
-                else None,
+                out_cfg=dict(out) if typ in PROTOCOL_OUTPUTS else None,
             ))
     return routes
 

@@ -27,13 +27,15 @@ Scale design (the part gogstash never faced — one box, one stream):
   spreads over many write tasks instead of one.
 - Resume: a JSON snapshot ledger (the sincedb analog, reference
   input/file/sincedb.go:21-91) records the partitioned commit (with its
-  format and schema), each protocol sink and each aggregate, always in
-  that order and from the calling thread; a resumed run skips what is
-  committed and reports its committed row counts. Every directory is
-  written to a temp dir and renamed on commit, so a killed write never
-  half-commits.
-- Metrics: per-stage row counts via `DataFrame.observe` (native
-  aggregates piggybacked on the write action — no extra pass).
+  per-route rows and schema), each protocol sink and each aggregate,
+  always in that order and from the calling thread; a resumed run skips
+  what is committed and reports its committed row counts. Every
+  directory is parquet, written to a temp dir and renamed on commit, so
+  a killed write never half-commits.
+- Metrics: run totals (rows in, rows routed) and the grok stages'
+  rows/misses via `DataFrame.observe` (native aggregates piggybacked on
+  the write action — no extra pass); per-filter row counts are not
+  collected.
 """
 
 from __future__ import annotations
@@ -63,7 +65,7 @@ LINEAGE_SCHEMA = "route string, file string, rows bigint"
 class RunResult:
     sink_rows: dict[str, int] = field(default_factory=dict)
     agg_rows: dict[str, int] = field(default_factory=dict)
-    metrics: dict[str, dict] = field(default_factory=dict)
+    metrics: dict[str, dict | bool] = field(default_factory=dict)
     skipped_sinks: list[str] = field(default_factory=list)
     wall_sec: float = 0.0
 
@@ -206,15 +208,14 @@ def _routed_schema(exploded: DataFrame) -> T.StructType:
     return _nullable(T.StructType(data + [T.StructField("route", T.StringType())]))
 
 
-def write_by_route(
-    routed: DataFrame, routes: list[Route], target: str, fmt: str = "parquet", table_ident=None
-) -> T.StructType:
+def write_by_route(routed: DataFrame, routes: list[Route], target: str) -> T.StructType:
     """THE write path, shared by `run_pipeline` and every streaming
     epoch: explode `routed`'s ROUTES to one row per (route, event),
     dedup each doc-id sink's copies on its rendered document_id, spread
     the rows over the write tasks (`_fanout_distribute`) and commit one
-    partitionBy("route") write at `target`. Returns the schema a read
-    of the committed output takes (`_routed_schema`)."""
+    partitionBy("route") parquet write at `target` (a temp dir and one
+    rename, `_commit_dir`). Returns the schema a read of the committed
+    output takes (`_routed_schema`)."""
     exploded = routed.select(F.explode(ROUTES).alias("route"), "*").drop(ROUTES)
     doc_routes = [r for r in routes if r.doc_id_template]
     if doc_routes:
@@ -246,46 +247,26 @@ def write_by_route(
         )
     exploded = _fanout_distribute(exploded)
     schema = _routed_schema(exploded)
-    # the ACID formats run only where resolve_table_format's probe finds
-    # their runtime jar; the test suite has none, so they are UNTESTED
-    if fmt == "parquet":
-        # no table format on the classpath: atomic commit = write to
-        # a temp dir + one rename
-        _commit_dir(exploded.write.mode("overwrite").partitionBy("route").parquet, target)
-    elif fmt == "iceberg":
-        # ACID snapshot commit via DataFrameWriterV2: the v1 writer's
-        # save(path) requires a pre-existing table and rejects
-        # partitionBy for creation; writeTo() creates-or-replaces the
-        # partitioned table in one transaction.
-        exploded.writeTo(table_ident).partitionedBy(F.col("route")).createOrReplace()
-    else:
-        # delta: transaction-log commit; the v1 writer DOES support
-        # partitioned table creation at a path.
-        exploded.write.format(fmt).mode("overwrite").partitionBy("route").save(target)
+    _commit_dir(exploded.write.mode("overwrite").partitionBy("route").parquet, target)
     return schema
 
 
-def _read_routed(
-    spark: SparkSession, part_dir: str, fmt: str, ident: str | None, schema: T.StructType | None
-) -> DataFrame:
-    """The written by_route output. A parquet read takes `schema`, so
-    it lists the directory once and infers nothing; the ACID formats
-    keep their schema in the table's own metadata."""
-    if fmt == "iceberg" and ident:
-        return spark.read.table(ident)
-    reader = spark.read.format(fmt)
-    if fmt == "parquet" and schema is not None:
+def _read_routed(spark: SparkSession, part_dir: str, schema: T.StructType | None) -> DataFrame:
+    """The written by_route output. Given `schema`, the read lists the
+    directory once and infers nothing."""
+    reader = spark.read
+    if schema is not None:
         reader = reader.schema(schema)
-    return reader.load(part_dir)
+    return reader.parquet(part_dir)
 
 
-def _write_lineage(by_route: DataFrame, file_col, lin_dir: str) -> list:
+def _write_lineage(by_route: DataFrame, lin_dir: str) -> list:
     """Per-partition (per output file) row-count lineage in one pruned
     scan, written to a parquet SIDECAR — at 100 TB the file list is
     10^5-10^6 entries, which must never ride through the driver or the
     JSON ledger. Returns only the O(routes) rollup rows (route, rows,
     files)."""
-    lineage_df = by_route.groupBy("route", file_col.alias("file")).agg(
+    lineage_df = by_route.groupBy("route", F.input_file_name().alias("file")).agg(
         F.count(F.lit(1)).alias("rows")
     )
     _commit_dir(lineage_df.write.mode("overwrite").parquet, lin_dir)
@@ -327,19 +308,6 @@ def _route_sink_rows(plan: CompiledPipeline, route_rows: dict[str, int]) -> dict
     return rows
 
 
-def resolve_table_format(spark: SparkSession, requested: str | None) -> tuple[str, str | None]:
-    """('iceberg'|'delta'|'parquet', fallback_reason): a requested ACID
-    format is used only when its runtime is actually on the classpath
-    (capability probe, same pattern as the kafka jar probe); otherwise
-    the atomic-rename parquet path with the reason recorded."""
-    if requested in (None, "", "parquet"):
-        return "parquet", None
-    from gogstash_spark.sources.connectors import table_format_available
-
-    ok, why = table_format_available(spark, requested)
-    return (str(requested).lower(), None) if ok else ("parquet", why)
-
-
 def run_pipeline(
     spark: SparkSession,
     spec: PipelineSpec | dict,
@@ -348,8 +316,6 @@ def run_pipeline(
     base_dir: str = ".",
     resume: bool = True,
     write_mode: str = "partitioned",
-    table_format: str = "parquet",  # "iceberg"/"delta": ACID commit when jar present
-    table_ident: str | None = None,  # iceberg only: catalog.db.table for writeTo()
 ) -> RunResult:
     """Run `spec` end to end with ONE partitionBy(route) write of every
     routed event under out_dir/by_route (`write_by_route`), then
@@ -360,7 +326,8 @@ def run_pipeline(
     write_mode names the write path; "partitioned" is the only one and
     anything else raises ValueError. With resume=True a run skips every
     step the out_dir ledger has committed and still reports that step's
-    committed rows in sink_rows/agg_rows."""
+    committed rows in sink_rows/agg_rows; a run that skips the write
+    sets metrics["resumed_from_commit"]."""
     if write_mode != "partitioned":
         raise ValueError(
             "write_mode=%r: the only write path is 'partitioned' "
@@ -389,44 +356,14 @@ def run_pipeline(
     ]
 
     result = RunResult()
-    fmt, fb_reason = resolve_table_format(spark, table_format)
-    # resume must read with the format the data was COMMITTED under, not
-    # this run's request: a run committed as parquet then resumed with
-    # table_format=iceberg would otherwise try to read the parquet
-    # by_route dir through the iceberg source. (Ledgers written before
-    # the format was recorded can only be parquet commits on this image
-    # — the ACID branch was probe-gated off — so parquet is the right
-    # default for a missing key.)
-    committed_meta = ledger.state.get("sinks", {}).get("__partitioned__", {})
     write_skipped = resume and ledger.committed("__partitioned__")
-    if write_skipped:
-        read_fmt = committed_meta.get("table_format", "parquet")
-        read_ident = committed_meta.get("table_ident")
-    else:
-        read_fmt, read_ident = fmt, table_ident
-    if fmt == "iceberg" and not table_ident and not write_skipped:
-        # only a run that will actually WRITE iceberg needs the
-        # identifier — a resume serving from an earlier commit reads
-        # with the ledger's format and must not be blocked
-        raise ValueError(
-            "table_format='iceberg' needs table_ident='catalog.db.table': "
-            "Iceberg's v1 save(path) cannot CREATE a partitioned table — "
-            "the V2 writeTo(ident).partitionedBy(...).createOrReplace() "
-            "path is used instead"
-        )
-    # "used" reports what this run actually READS AND SERVES: on a
-    # write-skipping resume that is the ledger's committed format, not
-    # this invocation's request
-    result.metrics["table_format"] = {
-        "requested": table_format, "used": read_fmt,
-        **({"fallback_reason": fb_reason} if fb_reason else {}),
-        **({"resumed_from_commit": True} if write_skipped else {}),
-    }
 
     part_dir = os.path.join(out_dir, "by_route")
     lin_dir = os.path.join(out_dir, "_lineage")
 
     if write_skipped:
+        result.metrics["resumed_from_commit"] = True
+        committed_meta = ledger.state["sinks"]["__partitioned__"]
         result.sink_rows = _route_sink_rows(plan, committed_meta.get("route_rows", {}))
         # a ledger written before the schema was recorded has none: its
         # by_route read falls back to inferring the schema
@@ -439,7 +376,7 @@ def run_pipeline(
             F.count(F.lit(1)).alias("rows_total"),
             F.sum(F.size(ROUTES)).alias("rows_routed"),
         )
-        schema = write_by_route(routed, plan.routes, part_dir, fmt, table_ident)
+        schema = write_by_route(routed, plan.routes, part_dir)
 
     def done(key: str) -> bool:
         return resume and ledger.committed(key)
@@ -448,7 +385,7 @@ def run_pipeline(
     pending_sinks = {r.sink for r in plan.routes if r.out_cfg is not None and not done(r.sink)}
     # ONE listing of the written output, shared by every action below
     by_route = (
-        _read_routed(spark, part_dir, read_fmt, read_ident, schema)
+        _read_routed(spark, part_dir, schema)
         if not write_skipped or pending_aggs or pending_sinks else None
     )
     # lineage and the aggregates are independent outputs of by_route, so
@@ -461,15 +398,7 @@ def run_pipeline(
         def submit(fn, *args):
             return pool.submit(inheritable_thread_target(spark)(fn), *args)
 
-        # input_file_name() returns '' under DSv2 scans — the ACID formats
-        # use their metadata column instead (iceberg: _file, delta:
-        # _metadata.file_path); the parquet DSv1 scan keeps
-        # input_file_name()
-        file_col = {"iceberg": "_file", "delta": "_metadata.file_path"}.get(read_fmt)
-        lineage = None if write_skipped else submit(
-            _write_lineage, by_route, F.col(file_col) if file_col else F.input_file_name(),
-            lin_dir,
-        )
+        lineage = None if write_skipped else submit(_write_lineage, by_route, lin_dir)
         agg_futures = {
             a["name"]: submit(_write_aggregate, by_route, a, os.path.join(out_dir, "agg_" + a["name"]))
             for a in pending_aggs
@@ -487,14 +416,9 @@ def run_pipeline(
             ledger.commit(
                 "__partitioned__",
                 sum(result.sink_rows.values()),
-                # the format ACTUALLY used and the schema written ride in
-                # the ledger so a resumed run reads by_route with them,
-                # whatever format the resume invocation asks for
-                extra={
-                    "route_rows": counts, "lineage_path": lin_dir,
-                    "table_format": fmt, "schema": schema.json(),
-                    **({"table_ident": table_ident} if table_ident else {}),
-                },
+                # what resume reads: the per-route rows it reports and the
+                # schema it reads by_route with
+                extra={"route_rows": counts, "schema": schema.json()},
             )
             # Observation.get BLOCKS until the observed node runs, so it is
             # read only after the write, which executed the routed plan

@@ -1,81 +1,15 @@
-"""Gated connectors: Iceberg table I/O and Kafka streaming.
+"""Gated Kafka connector.
 
-The north-rule deployment target is Iceberg tables read/written by a
-multi-executor cluster and Kafka-style streams; this container ships
-neither the Iceberg runtime jar nor a Kafka broker, so both are gated
-behind capability probes with a parquet/file fallback — the call sites
-are real, only the format string changes on a provisioned cluster.
+The gogstash kafka input and output map to Spark's Kafka source and
+sink. Without the spark-sql-kafka jar on the classpath the stream calls
+raise an error naming the `--packages` coordinate; the option mapping
+from a gogstash kafka block is pure and tested without a jar or broker.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    """True when an Iceberg catalog is on the classpath + configured."""
-    try:
-        spark._jvm.org.apache.iceberg.Table  # noqa: B018
-    except Exception:
-        return False
-    for k in spark.sparkContext.getConf().getAll():
-        if k[0].startswith("spark.sql.catalog.") and "iceberg" in k[1].lower():
-            return True
-    return False
-
-
-def table_format_available(spark: SparkSession, fmt: str) -> tuple[bool, str | None]:
-    """Capability probe for an ACID table format on THIS session's
-    classpath: (available, reason-when-not). Same pattern as the kafka
-    jar probe — call sites are real, only the format string changes on
-    a provisioned cluster.
-    """
-    fmt = (fmt or "").lower()
-    if fmt == "iceberg":
-        try:
-            spark._jvm.java.lang.Class.forName("org.apache.iceberg.Table")
-            return True, None
-        except Exception:
-            return False, (
-                "iceberg runtime not on classpath; submit with --packages "
-                "org.apache.iceberg:iceberg-spark-runtime-4.0_2.13:<version> "
-                "and a spark.sql.catalog.* config"
-            )
-    if fmt == "delta":
-        try:
-            spark._jvm.java.lang.Class.forName("io.delta.tables.DeltaTable")
-            return True, None
-        except Exception:
-            return False, (
-                "delta runtime not on classpath; submit with --packages "
-                "io.delta:delta-spark_2.13:<version> and the "
-                "DeltaSparkSessionExtension"
-            )
-    return False, "unknown table format %r (known: iceberg, delta)" % fmt
-
-
-def read_table(spark: SparkSession, path_or_table: str) -> DataFrame:
-    """Read an Iceberg table name (catalog.db.table) when available,
-    else a parquet path — same DataFrame out."""
-    if "/" not in path_or_table and iceberg_available(spark):
-        return spark.read.table(path_or_table)
-    return spark.read.parquet(path_or_table)
-
-
-def append_table(df: DataFrame, path_or_table: str, partition_by: list[str] | None = None) -> None:
-    """Append to an Iceberg table (atomic snapshot commit) when
-    available, else a parquet directory append. On Iceberg the runner's
-    JSON ledger is replaced by snapshot ids (`table.history()`)."""
-    spark = df.sparkSession
-    if "/" not in path_or_table and iceberg_available(spark):
-        df.writeTo(path_or_table).append()
-        return
-    w = df.write.mode("append")
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path_or_table)
-
 
 _KAFKA_ASSIGNORS = {
     "range": "org.apache.kafka.clients.consumer.RangeAssignor",

@@ -5,8 +5,8 @@
         spark_submit_main.py --spec pipeline.json \
         --input /data/transcripts --out /data/out [--no-resume] [--streaming]
 
-On a real cluster the input/output paths are Iceberg/S3/HDFS URIs; the
-runner writes every table sink in one atomic partitioned commit under
+On a real cluster the input/output paths are S3/HDFS URIs; the runner
+writes every table sink in one atomic partitioned parquet commit under
 out/by_route/route=<sink>/, and its ledger lets a re-run on the same
 --out skip what is committed while still reporting the committed
 sink_rows (resume is the default; --no-resume recomputes everything).

@@ -1,6 +1,4 @@
-"""Gated connectors (fallback paths) + lineage and grok metrics."""
-
-import os
+"""The kafka connector gate, file inputs, lineage and grok metrics."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -11,15 +9,6 @@ from gogstash_spark.sources import connectors
 
 
 class TestConnectors:
-    def test_iceberg_gating_falls_back_to_parquet(self, spark, sf_data_dir, tmp_path):
-        assert connectors.iceberg_available(spark) is False  # no jar in image
-        df = connectors.read_table(spark, os.path.join(sf_data_dir, "transcripts"))
-        assert df.count() == 5000
-        out = str(tmp_path / "append")
-        connectors.append_table(df.limit(10), out)
-        connectors.append_table(df.limit(10), out)
-        assert spark.read.parquet(out).count() == 20
-
     def test_kafka_raises_actionable_error(self, spark):
         with pytest.raises(RuntimeError, match="--packages"):
             connectors.kafka_stream(spark, "localhost:9092", "t")
@@ -143,137 +132,6 @@ class TestGrokMetrics:
         ])
         assert res.metrics["acc_grok"] == {"rows": 4 + 2, "misses": 1 + 1}
         assert res.sink_rows == {"all": 4}
-
-
-class TestTableFormatProbe:
-    """ACID-table capability probe (kafka-probe pattern): the partitioned
-    write uses a real iceberg/delta commit when the runtime is on the
-    classpath, else the atomic-rename parquet path with the reason
-    recorded — this image ships neither jar, so the fallback is the
-    exercised path and the probe's miss must name the fix."""
-
-    def test_probe_names_missing_runtime(self, spark):
-        from gogstash_spark.sources.connectors import table_format_available
-
-        ok, why = table_format_available(spark, "iceberg")
-        assert not ok and "iceberg-spark-runtime" in why
-        ok, why = table_format_available(spark, "delta")
-        assert not ok and "delta-spark" in why
-        ok, why = table_format_available(spark, "hudi")
-        assert not ok and "unknown table format" in why
-
-    def test_resolve_falls_back_and_promotes(self, spark, monkeypatch):
-        from gogstash_spark import runner
-        from gogstash_spark.sources import connectors
-
-        fmt, why = runner.resolve_table_format(spark, "iceberg")
-        assert fmt == "parquet" and "iceberg" in why
-        assert runner.resolve_table_format(spark, "parquet") == ("parquet", None)
-        assert runner.resolve_table_format(spark, None) == ("parquet", None)
-        monkeypatch.setattr(
-            connectors, "table_format_available", lambda s, f: (True, None)
-        )
-        assert runner.resolve_table_format(spark, "iceberg") == ("iceberg", None)
-
-    def test_pipeline_runs_under_fallback_unchanged(self, spark, tmp_path):
-        from gogstash_spark.runner import run_pipeline
-
-        events = spark.createDataFrame(
-            [("C1", 1, "user", "hi"), ("C2", 2, "tool", "x"), ("C3", 3, "user", "y")],
-            "conv_id string, turn_idx int, role string, text string",
-        )
-        spec = {
-            "input": {}, "filter": [],
-            "output": [{"type": "table", "name": "users",
-                        "condition": "role == 'user'"},
-                       {"type": "table", "name": "rest",
-                        "condition": "role != 'user'"}],
-            "aggregate": [{"name": "counts", "group_by": ["role"]}],
-        }
-        base = run_pipeline(spark, spec, input_df=events,
-                            out_dir=str(tmp_path / "pq"), resume=False)
-        fb = run_pipeline(spark, spec, input_df=events,
-                          out_dir=str(tmp_path / "ice"), resume=False,
-                          table_format="iceberg")
-        assert fb.sink_rows == base.sink_rows == {"users": 2, "rest": 1}
-        tf = fb.metrics["table_format"]
-        assert tf["requested"] == "iceberg" and tf["used"] == "parquet"
-        assert "iceberg" in tf["fallback_reason"]
-
-    def test_iceberg_without_ident_raises(self, spark, tmp_path, monkeypatch):
-        """When the probe says iceberg IS available, the write goes
-        through DataFrameWriterV2 (writeTo), which needs a catalog table
-        identifier — a path alone must fail at plan time, not at the
-        first save() against a non-existent table."""
-        import pytest
-
-        from gogstash_spark import runner
-        from gogstash_spark.sources import connectors
-
-        monkeypatch.setattr(
-            connectors, "table_format_available", lambda s, f: (True, None)
-        )
-        events = spark.createDataFrame(
-            [("C1", 1, "user", "hi")],
-            "conv_id string, turn_idx int, role string, text string",
-        )
-        spec = {
-            "input": {}, "filter": [],
-            "output": [{"type": "table", "name": "users"}],
-        }
-        with pytest.raises(ValueError, match="table_ident"):
-            runner.run_pipeline(
-                spark, spec, input_df=events, out_dir=str(tmp_path / "o"),
-                resume=False, table_format="iceberg",
-            )
-
-    def test_resume_reads_with_committed_format(self, spark, tmp_path, monkeypatch):
-        """A run COMMITTED as parquet then RESUMED with
-        table_format=iceberg must read by_route with the committed
-        format from the ledger, not this run's request (otherwise the
-        resume tries to read a parquet directory through the iceberg
-        source and dies)."""
-        import json
-
-        from gogstash_spark import runner
-        from gogstash_spark.sources import connectors
-
-        events = spark.createDataFrame(
-            [("C1", 1, "user", "hi"), ("C2", 2, "tool", "x")],
-            "conv_id string, turn_idx int, role string, text string",
-        )
-        spec = {
-            "input": {}, "filter": [],
-            "output": [{"type": "table", "name": "users",
-                        "condition": "role == 'user'"},
-                       {"type": "table", "name": "rest",
-                        "condition": "role != 'user'"}],
-            "aggregate": [{"name": "counts", "group_by": ["role"]}],
-        }
-        out = str(tmp_path / "o")
-        base = runner.run_pipeline(spark, spec, input_df=events, out_dir=out,
-                                   resume=False)
-        assert base.sink_rows == {"users": 1, "rest": 1}
-        # drop the aggregate commit so the resume has real work that
-        # goes through _read_routed()
-        ledger_path = tmp_path / "o" / "_ledger.json"
-        state = json.loads(ledger_path.read_text())
-        assert state["sinks"]["__partitioned__"]["table_format"] == "parquet"
-        del state["sinks"]["agg_counts"]
-        ledger_path.write_text(json.dumps(state))
-        # pretend iceberg is available now; the resume must STILL read
-        # parquet because that is what the ledger says was committed
-        monkeypatch.setattr(
-            connectors, "table_format_available", lambda s, f: (True, None)
-        )
-        # no table_ident on purpose: a resume that serves from the
-        # parquet commit never writes iceberg, so the ident requirement
-        # must not block it
-        res = runner.run_pipeline(
-            spark, spec, input_df=events, out_dir=out, resume=True,
-            table_format="iceberg",
-        )
-        assert res.agg_rows == {"counts": 2}
 
 
 class TestKafkaContract:

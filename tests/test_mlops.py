@@ -2778,12 +2778,12 @@ class TestChunkDocuments:
             (r["doc_id"], r["chunk_idx"]): r
             for r in chunk_documents(df, chunk_tokens=4, overlap=1).collect()
         }
-        # stride 3: starts 0, 3, 6
-        assert [got[(1, i)]["chunk_start"] for i in range(3)] == [0, 3, 6]
+        # stride 3: starts 0, 3 — the window at 3 already ends on t6, so
+        # no tail chunk holding only the overlap token t6
+        assert [got[(1, i)]["chunk_start"] for i in range(2)] == [0, 3]
+        assert (1, 2) not in got
         assert got[(1, 0)]["chunk_text"] == "t0 t1 t2 t3"
         assert got[(1, 1)]["chunk_text"] == "t3 t4 t5 t6"  # overlap token t3
-        assert got[(1, 2)]["chunk_text"] == "t6"
-        assert got[(1, 2)]["n_chunk_tokens"] == 1
         assert got[(2, 0)]["chunk_text"] == "a b"
         assert (2, 1) not in got
         assert not any(k[0] == 3 for k in got)
@@ -2791,6 +2791,16 @@ class TestChunkDocuments:
         flat = chunk_documents(df, chunk_tokens=3).collect()
         total = sum(r["n_chunk_tokens"] for r in flat if r["doc_id"] == 1)
         assert total == 7
+        # 10 tokens, chunk 4, overlap 2 (stride 2): starts 0, 2, 4, 6, the
+        # last window ends on t9, and each chunk brings a new token
+        ten = spark.createDataFrame([(4, " ".join("t%d" % i for i in range(10)))],
+                                    "doc_id long, text string")
+        rows = sorted(chunk_documents(ten, chunk_tokens=4, overlap=2).collect(),
+                      key=lambda r: r["chunk_idx"])
+        assert [r["chunk_start"] for r in rows] == [0, 2, 4, 6]
+        assert rows[-1]["chunk_text"] == "t6 t7 t8 t9"
+        for prev, cur in zip(rows, rows[1:]):
+            assert set(cur["chunk_text"].split()) - set(prev["chunk_text"].split())
         with pytest.raises(ValueError):
             chunk_documents(df, 0)
         with pytest.raises(ValueError):
@@ -2816,7 +2826,7 @@ class TestChunkDocuments:
 ),
 st AS (
   SELECT doc_id, toks, len(toks) AS n,
-    unnest(range(0, CAST(((len(toks) - 1) // 12) * 12 + 1 AS BIGINT), 12)) AS s
+    unnest(range(0, CAST(((greatest(len(toks) - 16, 0) + 11) // 12) * 12 + 1 AS BIGINT), 12)) AS s
   FROM t WHERE len(toks) > 0
 )
 SELECT doc_id,

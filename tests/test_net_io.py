@@ -327,6 +327,22 @@ class TestBeatsInput:
         assert [_json.loads(ln)["message"] for ln in lines] == ["secure beat"]
 
 
+class TestProtocolOutputTypes:
+    def test_one_list_for_compile_and_emit(self):
+        """`outputs.PROTOCOL_OUTPUTS` is the one list: the compiler gives
+        exactly those types a protocol route and `emit` dispatches each."""
+        import inspect
+        import re
+
+        from gogstash_spark.plans.compile import flatten_outputs
+
+        kinds = sorted(outputs.PROTOCOL_OUTPUTS) + ["table", "elastic"]
+        routes = flatten_outputs([{"type": t, "name": t} for t in kinds])
+        assert {r.sink for r in routes if r.out_cfg is not None} == outputs.PROTOCOL_OUTPUTS
+        dispatched = set(re.findall(r'typ == "(\w+)"', inspect.getsource(outputs.emit)))
+        assert dispatched == outputs.PROTOCOL_OUTPUTS
+
+
 class TestPartitionedProtocolSink:
     def test_http_sink_emits_in_partitioned_mode(self, spark, events_df, http_server, tmp_path):
         res = run_pipeline(

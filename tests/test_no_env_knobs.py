@@ -17,14 +17,16 @@ def test_library_has_no_gogstash_env_knobs():
 
 def test_no_checkpoint_cadence_or_strict_parameters():
     """Iterative loops truncate their plan on a fixed shape (no
-    `checkpoint_every` cadence) and a non-converged loop always raises
-    (no `strict` switch to a best-effort result)."""
+    `checkpoint_every` cadence), a non-converged loop always raises
+    (no `strict` switch to a best-effort result), and the runner writes
+    parquet only (no `table_format`/`table_ident` switch to a table
+    format)."""
+    forbidden = {"checkpoint_every", "strict", "table_format", "table_ident"}
     hits = []
     for p in LIB.rglob("*.py"):
         for node in ast.walk(ast.parse(p.read_text())):
             if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 a = node.args
                 names = {x.arg for x in a.posonlyargs + a.args + a.kwonlyargs}
-                hits += ["%s:%s(%s)" % (p.name, node.name, n)
-                         for n in names & {"checkpoint_every", "strict"}]
+                hits += ["%s:%s(%s)" % (p.name, node.name, n) for n in names & forbidden]
     assert not hits, hits

@@ -478,7 +478,7 @@ class TestRunnerE2E:
             spark, standard_spec(sf_data_dir), out_dir=out_dir, base_dir=sf_data_dir,
             resume=True,
         )
-        assert again.metrics["table_format"]["resumed_from_commit"] is True
+        assert again.metrics["resumed_from_commit"] is True
         assert "pipeline" not in again.metrics  # the routed plan never ran
         assert again.sink_rows == res.sink_rows
         assert list(again.sink_rows) == list(res.sink_rows)
@@ -556,9 +556,7 @@ class TestPostWritePass:
         with open(os.path.join(out_dir, "_ledger.json")) as f:
             written = json.load(f)["sinks"]["__partitioned__"]["schema"]
         part_dir = os.path.join(out_dir, "by_route")
-        given = _read_routed(
-            spark, part_dir, "parquet", None, T.StructType.fromJson(json.loads(written))
-        ).schema
+        given = _read_routed(spark, part_dir, T.StructType.fromJson(json.loads(written))).schema
         inferred = spark.read.parquet(part_dir).schema
         assert given == inferred
         assert [f.nullable for f in given.fields] == [f.nullable for f in inferred.fields]
@@ -608,7 +606,7 @@ class TestPostWritePass:
         with open(path, "w") as f:
             json.dump(state, f)
         again = run_pipeline(spark, spec, input_df=events, out_dir=out, resume=True)
-        assert again.metrics["table_format"]["resumed_from_commit"] is True
+        assert again.metrics["resumed_from_commit"] is True
         assert again.agg_rows == first.agg_rows == {"counts": 1}
 
     def test_default_aggregate_without_ts(self, spark, tmp_path):
@@ -650,7 +648,7 @@ class TestResume:
             with pytest.raises(RuntimeError, match="killed"):
                 run_pipeline(spark, spec, out_dir=out_b, base_dir=sf_data_dir)
         resumed = run_pipeline(spark, spec, out_dir=out_b, base_dir=sf_data_dir, resume=True)
-        assert resumed.metrics["table_format"].get("resumed_from_commit") is True
+        assert resumed.metrics["resumed_from_commit"] is True
         for sink in full.sink_rows:
             keys_a = _read_sink(spark, out_a, sink).select("conv_id", "turn_idx").collect()
             keys_b = _read_sink(spark, out_b, sink).select("conv_id", "turn_idx").collect()
@@ -672,10 +670,11 @@ class TestResume:
         )
         assert res.agg_rows and set(res.agg_rows.values()) == {0}
         assert res.metrics["acc_grok"] == {"rows": 0, "misses": 0}
+        assert "resumed_from_commit" not in res.metrics
         again = run_pipeline(
             spark, spec, input_df=empty, out_dir=out, base_dir=sf_data_dir, resume=True
         )
-        assert again.metrics["table_format"]["resumed_from_commit"] is True
+        assert again.metrics["resumed_from_commit"] is True
         assert again.sink_rows == res.sink_rows
         assert again.agg_rows == res.agg_rows
 
