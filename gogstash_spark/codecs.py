@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gogstash_spark import logevent
+from gogstash_spark.functions import pathvalue
 
 
 def decode_default(df: DataFrame, source: str = "value") -> DataFrame:
@@ -92,8 +93,9 @@ def encode_json(
     - empty message and empty tags are OMITTED (Go omitempty / the
       explicit `if t.Message != ""` guard)
     - remove_field: fields dropped at marshal time — top-level columns,
-      or `map_col.key` entries inside a map column (the reference's
-      removePathValue walks nested maps)
+      or dotted paths into map/struct columns (the reference's
+      removePathValue walk, via pathvalue.remove_path on the event
+      struct being rendered; the returned frame keeps its input columns)
     - sort_map_keys: serialize fields in sorted-by-name order (the
       json-iterator SortMapKeys knob; field order is the struct order
       here, so sorting the struct sorts the output)
@@ -104,13 +106,9 @@ def encode_json(
     # removePathValue walks the serialized map) — translate the reserved
     # names to this engine's column names
     _marshal_alias = {"message": logevent.TEXT, "@timestamp": logevent.TS}
-    remove = {_marshal_alias.get(f, f) for f in (remove_field or [])}
-    nested: dict[str, set[str]] = {}
-    for f in list(remove):
-        if "." in f:
-            root, sub = f.split(".", 1)
-            nested.setdefault(root, set()).add(sub)
-            remove.discard(f)
+    fields = list(dict.fromkeys(_marshal_alias.get(f, f) for f in remove_field or []))
+    remove = {f for f in fields if "." not in f}
+    nested = [f for f in fields if "." in f]
     cols = [c for c in df.columns if c not in (exclude or []) and c not in remove]
     named: list[tuple[str, Column]] = []
     # date_format renders in the SESSION timezone; shift the instant so
@@ -134,31 +132,19 @@ def encode_json(
             named.append(("message", F.nullif(F.col(c), F.lit(""))))
         elif c == logevent.TAGS:
             named.append((c, F.when(F.size(F.col(c)) > 0, F.col(c))))
-        elif c in nested and isinstance(df.schema[c].dataType, MapType):
-            gone = F.array(*[F.lit(k) for k in sorted(nested[c])])
-            named.append((
-                c, F.map_filter(F.col(c), lambda k, _v: ~F.array_contains(gone, k)),
-            ))
-        elif c in nested and isinstance(df.schema[c].dataType, StructType):
-            # struct root: recursive removal mirroring the reference's
-            # removePathValue walk (config/pathvalue.go:150-192) —
-            # handles nested structs (a level whose EVERY field is
-            # removed drops the parent field; an empty struct can't be
-            # expressed), maps nested under structs (single-level key
-            # removal via map_filter), and silently no-ops on missing
-            # nested names like the reference. A fully-emptied ROOT is
-            # omitted (omit-empty rendering).
-            newc = _remove_nested(F.col(c), df.schema[c].dataType, nested[c])
-            named.append((c, newc if newc is not None else F.lit(None)))
         else:
             named.append((c, F.col(c)))
-    # a nested remove_field whose root is missing or not a container
-    # must fail loudly, not serialize the field anyway (the reference
-    # walks and silently no-ops only on MISSING paths; a scalar root is
-    # always a config bug)
-    for root, subs in nested.items():
+    if sort_map_keys:
+        named.sort(key=lambda nc: nc[0])
+    view = df.withColumn("__event", F.struct(*[col.alias(n) for n, col in named]))
+    for path in nested:
+        root = path.split(".", 1)[0]
         if root in (exclude or []) or root in remove:
             continue
+        # a nested remove_field whose root is missing or not a container
+        # must fail loudly, not serialize the field anyway (the reference
+        # walks and silently no-ops only on MISSING paths; a scalar root
+        # is always a config bug)
         if root not in df.columns:
             raise ValueError(
                 "encode_json remove_field: nested root %r is not a column "
@@ -170,77 +156,50 @@ def encode_json(
                 "encode_json remove_field: nested root %r is %s, not a "
                 "map/struct" % (root, dt.simpleString())
             )
-        if isinstance(dt, MapType) and any("." in s for s in subs):
-            # map_filter only matches TOP-LEVEL keys; a deeper dotted
-            # path under a map root would silently serialize the field
-            # the config says to scrub — fail loudly instead
-            raise ValueError(
-                "encode_json remove_field: deeper nested removal under "
-                "map column %r is not supported (got %s); only "
-                "'%s.<key>' single-level keys work on maps"
-                % (root, sorted(s for s in subs if "." in s), root)
-            )
-    if sort_map_keys:
-        named.sort(key=lambda nc: nc[0])
-    return df.withColumn(
-        "encoded", F.to_json(F.struct(*[col.alias(n) for n, col in named]))
-    )
+        scrub = _removal(view.schema["__event"].dataType, path)
+        if scrub:
+            view = pathvalue.remove_path(view, "__event." + scrub)
+    return view.withColumn("encoded", F.to_json("__event")).drop("__event")
 
 
-def _remove_nested(col: Column, dtype, subs) -> Column | None:
-    """`col` (a struct) minus the dotted removal paths; None when every
-    field is removed (an empty struct is inexpressible — the caller
-    drops the parent field / omits the column instead). Missing nested
-    names silently no-op (the reference's removePathValue walk); a path
-    descending through a scalar, or more than one level under a MAP
-    (map keys are opaque strings, not paths), raises."""
+def _removal(event, path: str) -> str | None:
+    """The path remove_path takes out of the `event` struct for the
+    remove_field `path`: None when a field on it is missing (a no-op,
+    like the reference); widened to the outermost struct below the
+    column that the removal leaves without fields, which goes with it
+    (an empty struct is inexpressible, and a null one would render as
+    `{}`). A path through a scalar, or below a map key, raises."""
     from pyspark.sql.types import MapType, StructType
 
-    by_head: dict[str, set[str]] = {}
-    for s in subs:
-        head, _, rest = s.partition(".")
-        by_head.setdefault(head, set())
-        if rest:
-            by_head[head].add(rest)
-    fields = {f.name: f.dataType for f in dtype.fields}
-    whole: set[str] = set()
-    out = col
-    for head, rests in by_head.items():
-        if head not in fields:
-            continue
-        if not rests:
-            whole.add(head)
-            continue
-        ft = fields[head]
-        if isinstance(ft, StructType):
-            child = _remove_nested(col[head], ft, rests)
-            if child is None:
-                whole.add(head)
-            else:
-                out = out.withField(head, child)
-        elif isinstance(ft, MapType):
-            deep = sorted(r for r in rests if "." in r)
-            if deep:
+    steps = pathvalue.parse_path(path)
+
+    def at(i: int) -> str:
+        return ".".join(name for _, name in steps[:i])
+
+    keep, dt = 1, event
+    for i, (kind, name) in enumerate(steps):
+        if isinstance(dt, MapType) and kind == "field":
+            if i < len(steps) - 1:
+                # map keys are opaque strings, not paths: a deeper path
+                # would silently serialize the field the config scrubs
                 raise ValueError(
-                    "encode_json remove_field: deeper nested removal "
-                    "under map field %r is not supported (got %s)"
-                    % (head, deep)
+                    "encode_json remove_field: deeper nested removal under "
+                    "map %r is not supported (got %r); only single-level "
+                    "keys work on maps" % (at(i), path)
                 )
-            gone = F.array(*[F.lit(k) for k in sorted(rests)])
-            out = out.withField(
-                head,
-                F.map_filter(col[head], lambda k, _v: ~F.array_contains(gone, k)),
-            )
-        else:
+            keep = i + 1
+            break
+        if not isinstance(dt, StructType) or kind != "field":
             raise ValueError(
                 "encode_json remove_field: %r is %s, not a map/struct"
-                % (head, ft.simpleString())
+                % (at(i), dt.simpleString())
             )
-    if set(fields) <= whole:
-        return None
-    if whole:
-        out = out.dropFields(*sorted(whole))
-    return out
+        if name not in dt.fieldNames():
+            return None
+        if i <= 1 or len(dt.fields) > 1:
+            keep = i + 1
+        dt = dt[name].dataType
+    return at(keep)
 
 
 def decode_azureeventhubjson(

@@ -33,6 +33,17 @@ def _cos(a, b):
     return F.round(dot / (na * nb), 6)
 
 
+def _rank_topk(pairs: DataFrame, k: int, score: str = "cos") -> DataFrame:
+    """(q_id, n_id, score, rk): each query's k best neighbors by score,
+    ties broken by neighbor id."""
+    w = Window.partitionBy("q_id").orderBy(F.desc(score), F.asc("n_id"))
+    return (
+        pairs.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("q_id", "n_id", score, "rk")
+    )
+
+
 def brute_topk(
     emb: DataFrame,
     query_ids: list[int] | None = None,
@@ -53,12 +64,7 @@ def brute_topk(
         .filter(F.col("q_id") != F.col("n_id"))
         .withColumn("cos", _cos(F.col("q_vec"), F.col("n_vec")))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cos", "rk")
-    )
+    return _rank_topk(pairs, k)
 
 
 def sign_bucket(vec, n_bits: int = 8):
@@ -167,12 +173,7 @@ def lsh_topk_multi(
     pairs = cand.join(qv, "q_id").join(nv, "n_id").withColumn(
         "cos", _cos(F.col("q_vec"), F.col("n_vec"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cos", "rk")
-    )
+    return _rank_topk(pairs, k)
 
 
 def lsh_topk(
@@ -205,12 +206,7 @@ def lsh_topk(
         .filter(F.col("q_id") != F.col("n_id"))
         .withColumn("cos", _cos(F.col("q_vec"), F.col("n_vec")))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cos", "rk")
-    )
+    return _rank_topk(pairs, k)
 
 
 def ivf_assign(
@@ -428,12 +424,7 @@ def ivf_topk(
         .filter(F.col("q_id") != F.col("n_id"))
         .withColumn("cos", _cos(F.col("q_vec"), F.col("n_vec")))
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos"), F.asc("n_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cos", "rk")
-    )
+    return _rank_topk(pairs, k)
 
 
 def l2_normalize(

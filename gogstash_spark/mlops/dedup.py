@@ -682,7 +682,6 @@ def dedup_incremental(
     seen: DataFrame | None,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_seen: bool = False,
 ) -> DataFrame:
     """Incremental exact dedup: keep the rows of `batch` whose text was
     neither kept earlier in THIS batch (min-id within the batch wins)
@@ -699,9 +698,9 @@ def dedup_incremental(
     (map-side combinable), join back on (hash, id) to recover columns,
     then LEFT ANTI join against the ledger on text_md5. Both joins key
     on the hash — at 100 TB bucket the ledger parquet by text_md5 so
-    the anti-join co-locates without a ledger re-shuffle. Set
-    broadcast_seen=True only while the ledger genuinely fits an
-    executor (it stops fitting long before the corpus does).
+    the anti-join co-locates without a ledger re-shuffle. The ledger is
+    broadcast while it fits (fits_broadcast); it stops fitting long
+    before the corpus does.
 
     seen=None (first snapshot) skips the anti-join entirely.
 
@@ -712,10 +711,7 @@ def dedup_incremental(
     (the "\x00" prefix cannot collide with md5 hex) — each survives,
     and cross-snapshot they never match anything.
     """
-    h = F.when(
-        F.col(text_col).isNotNull(), F.md5(F.col(text_col))
-    ).otherwise(F.concat(F.lit("\x00"), F.col(id_col).cast("string")))
-    hashed = batch.withColumn("text_md5", h)
+    hashed = batch.withColumn("text_md5", _text_key(text_col, id_col))
     keep = (
         hashed.groupBy("text_md5")
         .agg(F.min(id_col).alias(id_col))
@@ -724,7 +720,7 @@ def dedup_incremental(
     if seen is None:
         return keep
     ledger = seen.select("text_md5").distinct()
-    if broadcast_seen:
+    if fits_broadcast(ledger):
         ledger = F.broadcast(ledger)
     return keep.join(ledger, "text_md5", "left_anti")
 

@@ -43,7 +43,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hof import staged
 from ..functions.partitions import spread
-from .ann import ivf_assign
+from .ann import _rank_topk, ivf_assign
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -369,9 +369,4 @@ def pq_topk(
         )
         .filter(F.col("cos_pq").isNotNull())
     )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_pq"), F.asc("n_id"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("q_id", "n_id", "cos_pq", "rk")
-    )
+    return _rank_topk(pairs, k, "cos_pq")

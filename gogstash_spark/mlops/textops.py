@@ -193,7 +193,6 @@ def contamination(
     id_col: str = "doc_id",
     bench_text_col: str = "text",
     n: int = 8,
-    broadcast_matches: bool = True,
 ) -> DataFrame:
     """Benchmark-contamination check: flag corpus documents that share
     at least one word n-gram with an evaluation/benchmark set (the
@@ -209,8 +208,7 @@ def contamination(
     DISTINCT md5 hashes and is broadcast, so the explode + inner join
     is map-side; only the MATCHED occurrences (rare by construction)
     shuffle into the per-doc count, and that small aggregate is
-    broadcast back onto the corpus (disable via broadcast_matches=False
-    if a poisoned corpus makes the matched set genuinely large).
+    broadcast back onto the corpus.
     """
     bench_hashes = (
         bench_df.select(
@@ -219,15 +217,13 @@ def contamination(
         .select(F.md5("s").alias("_h"))
         .distinct()
     )
-    matched = (
+    matched = F.broadcast(
         df.select(id_col, F.explode(ngram_shingles(F.col(text_col), n)).alias("s"))
         .select(id_col, F.md5("s").alias("_h"))
         .join(F.broadcast(bench_hashes), "_h")
         .groupBy(id_col)
         .agg(F.count("*").alias("n_matched_ngrams"))
     )
-    if broadcast_matches:
-        matched = F.broadcast(matched)
     # the output branch only needs the COUNT of shingles — arithmetic on
     # the token count, so the shingle arrays are materialized once (in
     # the match branch), not twice
@@ -311,7 +307,6 @@ def lm_perplexity(
     stats: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_lm: bool = True,
 ) -> DataFrame:
     """CCNet-style LM quality scoring: per-document mean token
     log-probability under a (reference-corpus) unigram LM, and the
@@ -326,16 +321,13 @@ def lm_perplexity(
     one would rank empty docs by the frequency of other empty docs).
 
     Scale shape: explode -> broadcast left join on token -> ONE
-    groupBy(id). With broadcast_lm=False the join shuffles on token:
-    stopword keys are heavily skewed — leave AQE skew-join on (it is,
-    by default) if a vocabulary ever genuinely outgrows broadcast.
+    groupBy(id).
     """
     exploded = spread(df).select(
         id_col, F.explode(tokens(F.lower(F.col(text_col)))).alias("token")
     ).where(F.col("token") != "")
-    lm_side = F.broadcast(lm) if broadcast_lm else lm
     scored = (
-        exploded.join(lm_side, "token", "left")
+        exploded.join(F.broadcast(lm), "token", "left")
         .crossJoin(F.broadcast(stats.select("oov_logp")))
         .select(id_col, F.coalesce("logp", "oov_logp").alias("lp"))
     )
@@ -599,9 +591,7 @@ def bigram_lm(
     join) -> ONE map-side-combinable groupBy(w1, w2) plus the
     groupBy(w1) marginal; V rides a 1-row broadcast. Bigram tables run
     ~10-100x the unigram vocabulary — still the model-on-every-worker
-    size class for real corpora (KenLM mmaps far bigger); the scorer
-    takes broadcast_lm=False to shuffle instead when a corpus outgrows
-    that.
+    size class for real corpora (KenLM mmaps far bigger).
     """
     _, stats = unigram_lm(df, text_col)
     pairs = _bigram_pairs(df, text_col, None)
@@ -633,7 +623,6 @@ def bigram_perplexity(
     stats: DataFrame,
     text_col: str = "text",
     id_col: str = "doc_id",
-    broadcast_lm: bool = True,
 ) -> DataFrame:
     """Per-document mean bigram log-probability + perplexity. Each
     adjacent pair scores at: bi.logp if (w1,w2) was seen; miss.miss_logp
@@ -643,16 +632,12 @@ def bigram_perplexity(
     blank-doc exclusion).
 
     Scale shape: one pair-explode -> broadcast left joins on (w1,w2)
-    and w1 -> ONE groupBy(doc). broadcast_lm=False shuffles both joins
-    for bigram tables that outgrow executors (AQE skew-join handles
-    stopword-headed histories).
+    and w1 -> ONE groupBy(doc).
     """
     exploded = _bigram_pairs(df, text_col, id_col)
-    bi_side = F.broadcast(bi) if broadcast_lm else bi
-    miss_side = F.broadcast(miss) if broadcast_lm else miss
     scored = (
-        exploded.join(bi_side, ["w1", "w2"], "left")
-        .join(miss_side, "w1", "left")
+        exploded.join(F.broadcast(bi), ["w1", "w2"], "left")
+        .join(F.broadcast(miss), "w1", "left")
         .crossJoin(F.broadcast(stats.select("oov_logp")))
         .select(
             id_col,

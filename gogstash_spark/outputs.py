@@ -1,26 +1,33 @@
 """Protocol sinks: http POST, tcp/unix socket, GELF UDP, loki push,
 redis list/channel, nsq, email (SMTP) and amqp.
 
-The reference's network outputs ship events one connection per process
-(output/http/outputhttp.go, output/socket/outputsocket.go,
-output/gelf, ...). Spark-first shape: `df.foreachPartition` — one
-connection per TASK, events streamed out of the Arrow batch iterator,
-no driver round-trip. At 1000 executors that is 1000 concurrent
-writers, which is exactly how a log pipeline fans into an ingest tier.
+The reference gives every output one interface, `Output(ctx, LogEvent)`
+(config/output.go:20-23), and ships events over one connection per
+process. Spark-first shape: every sink is a `send(rows) -> n` over one
+partition's rows, and `_send_partitions` runs it with ONE
+`foreachPartition`: one connection per non-empty task (an empty
+partition opens nothing), events streamed out of the batch iterator, no
+driver round-trip, and the events sent counted by one accumulator. At
+1000 executors that is up to 1000 concurrent writers, which is exactly
+how a log pipeline fans into an ingest tier.
 
-Each emitter returns the number of events sent (counted task-side via
-an accumulator). Events are encoded with codecs.encode_json semantics
-(ts rendered UTC as @timestamp, text as message).
+Each emitter returns the number of events sent. Events are encoded
+with codecs.encode_json semantics (ts rendered UTC as @timestamp, text
+as message).
 """
 
 from __future__ import annotations
 
+import itertools
 import json
+import struct
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from gogstash_spark import logevent
+from gogstash_spark.codecs import encode_json
+from gogstash_spark.netproto import nsq_read_frame
 from gogstash_spark.netproto import resp_encode as _resp
 
 # the output types `emit` dispatches; every other leaf output (not `cond`)
@@ -28,10 +35,50 @@ from gogstash_spark.netproto import resp_encode as _resp
 PROTOCOL_OUTPUTS = frozenset({"http", "socket", "gelf", "loki", "redis", "nsq", "email", "amqp"})
 
 
-def _encoded(df: DataFrame, json_opts: dict | None = None) -> DataFrame:
-    from gogstash_spark.codecs import encode_json
+def _send_partitions(df: DataFrame, send) -> int:
+    """Run `send(rows) -> events sent` once per NON-EMPTY partition of
+    `df`, on the executors, and return the total."""
+    sent = df.sparkSession.sparkContext.accumulator(0)
 
-    return encode_json(df, **(json_opts or {})).select("encoded")
+    def run(rows):
+        rows = iter(rows)
+        first = next(rows, None)
+        if first is not None:
+            sent.add(send(itertools.chain([first], rows)))
+
+    df.foreachPartition(run)
+    return int(sent.value)
+
+
+def _encoded(df: DataFrame, json_opts: dict | None = None, **extra: str | Column) -> DataFrame:
+    """The JSON-encoded event as `encoded`, plus each `extra` column: a
+    %{} template rendered per event, or a Column of the encoded frame."""
+    enc = encode_json(df, **(json_opts or {}))
+    return enc.select("encoded", *[
+        (logevent.format_expr(enc, v) if isinstance(v, str) else v).alias(k)
+        for k, v in extra.items()
+    ])
+
+
+def _tcp(address: str, timeout: float):
+    """A TCP connection to `host:port`."""
+    import socket
+
+    host, _, port = address.rpartition(":")
+    return socket.create_connection((host, int(port)), timeout=timeout)
+
+
+def _post_batches(url: str, rows, batch_size: int, body, headers: dict, timeout: float) -> int:
+    """POST `body(batch)` for each batch of up to batch_size rows."""
+    import urllib.request
+
+    n = 0
+    while batch := list(itertools.islice(rows, batch_size)):
+        req = urllib.request.Request(url, data=body(batch), headers=headers, method="POST")
+        with urllib.request.urlopen(req, timeout=timeout):
+            pass
+        n += len(batch)
+    return n
 
 
 def http_output(
@@ -47,34 +94,15 @@ def http_output(
     outputhttp.go:30-43 posts per event; batching amortizes the
     round-trip — batch_size=1 reproduces the reference exactly).
     """
-    sc = df.sparkSession.sparkContext
-    sent = sc.accumulator(0)
     hdrs = {"Content-Type": content_type, **(headers or {})}
 
-    def send_partition(rows):
-        import urllib.request
+    def ndjson(batch) -> bytes:
+        return "".join(r["encoded"] + "\n" for r in batch).encode()
 
-        buf: list[str] = []
+    def send(rows):
+        return _post_batches(url, rows, batch_size, ndjson, hdrs, timeout)
 
-        def flush():
-            if not buf:
-                return
-            req = urllib.request.Request(
-                url, data=("\n".join(buf) + "\n").encode(), headers=hdrs, method="POST"
-            )
-            with urllib.request.urlopen(req, timeout=timeout):
-                pass
-            sent.add(len(buf))
-            buf.clear()
-
-        for r in rows:
-            buf.append(r["encoded"])
-            if len(buf) >= batch_size:
-                flush()
-        flush()
-
-    _encoded(df, json_opts).foreachPartition(send_partition)
-    return int(sent.value)
+    return _send_partitions(_encoded(df, json_opts), send)
 
 
 def socket_output(
@@ -86,32 +114,26 @@ def socket_output(
 ) -> int:
     """Newline-delimited JSON over one tcp/unix connection per task
     (reference output/socket/outputsocket.go:18-20,40-70)."""
-    sc = df.sparkSession.sparkContext
-    sent = sc.accumulator(0)
+    if socket_type not in ("tcp", "unix", "unixpacket"):
+        raise ValueError("socket type must be tcp/unix/unixpacket")
 
-    def send_partition(rows):
-        import socket as so
+    def send(rows):
+        import socket
 
         if socket_type == "tcp":
-            host, _, port = address.rpartition(":")
-            conn = so.create_connection((host, int(port)), timeout=timeout)
-        elif socket_type in ("unix", "unixpacket"):
-            conn = so.socket(so.AF_UNIX, so.SOCK_STREAM)
+            conn = _tcp(address, timeout)
+        else:
+            conn = socket.socket(socket.AF_UNIX, socket.SOCK_STREAM)
             conn.settimeout(timeout)
             conn.connect(address)
-        else:
-            raise ValueError("socket type must be tcp/unix/unixpacket")
         n = 0
-        try:
+        with conn:
             for r in rows:
                 conn.sendall(r["encoded"].encode() + b"\n")
                 n += 1
-        finally:
-            conn.close()
-        sent.add(n)
+        return n
 
-    _encoded(df, json_opts).foreachPartition(send_partition)
-    return int(sent.value)
+    return _send_partitions(_encoded(df, json_opts), send)
 
 
 GELF_MAGIC = b"\x1e\x0f"
@@ -151,55 +173,51 @@ def gelf_output(
     deficit vs the input count — never silently sent-and-discarded)."""
     if on_oversize not in ("error", "drop"):
         raise ValueError("on_oversize must be 'error' or 'drop'")
-    sc = df.sparkSession.sparkContext
-    sent = sc.accumulator(0)
-    cols = [c for c in df.columns]
+    cols = df.columns
+    h, _, port = address.rpartition(":")
+    dest = (h, int(port))
 
-    def send_partition(rows):
-        import os as _os
-        import socket as so
+    def send(rows):
+        import os
+        import socket
 
-        h, _, port = address.rpartition(":")
-        sock = so.socket(so.AF_INET, so.SOCK_DGRAM)
         n = 0
-        for r in rows:
-            rec = {}
-            for c in cols:
-                v = r[c]
-                if c == logevent.TEXT:
-                    rec["message"] = v
-                elif c == logevent.TS:
-                    rec["ts_epoch"] = v.timestamp() if v is not None else 0.0
-                elif isinstance(v, (str, int, float, bool)) or v is None:
-                    rec[c] = v
+        with socket.socket(socket.AF_INET, socket.SOCK_DGRAM) as sock:
+            for r in rows:
+                rec = {}
+                for c in cols:
+                    v = r[c]
+                    if c == logevent.TEXT:
+                        rec["message"] = v
+                    elif c == logevent.TS:
+                        rec["ts_epoch"] = v.timestamp() if v is not None else 0.0
+                    elif isinstance(v, (str, int, float, bool)) or v is None:
+                        rec[c] = v
+                    else:
+                        rec[c] = str(v)
+                payload = _gelf_payload(rec, host)
+                if len(payload) <= chunk_size:
+                    sock.sendto(payload, dest)
                 else:
-                    rec[c] = str(v)
-            payload = _gelf_payload(rec, host)
-            if len(payload) <= chunk_size:
-                sock.sendto(payload, (h, int(port)))
-            else:
-                chunks = [
-                    payload[i : i + chunk_size]
-                    for i in range(0, len(payload), chunk_size)
-                ]
-                if len(chunks) > GELF_MAX_CHUNKS:
-                    if on_oversize == "error":
-                        raise ValueError(
-                            "GELF message needs %d chunks (spec max %d); "
-                            "raise chunk_size or trim the event"
-                            % (len(chunks), GELF_MAX_CHUNKS)
-                        )
-                    continue  # drop: reflected in the returned sent count
-                mid = _os.urandom(8)
-                for i, ck in enumerate(chunks):
-                    header = GELF_MAGIC + mid + bytes([i, len(chunks)])
-                    sock.sendto(header + ck, (h, int(port)))
-            n += 1
-        sock.close()
-        sent.add(n)
+                    chunks = [
+                        payload[i : i + chunk_size]
+                        for i in range(0, len(payload), chunk_size)
+                    ]
+                    if len(chunks) > GELF_MAX_CHUNKS:
+                        if on_oversize == "error":
+                            raise ValueError(
+                                "GELF message needs %d chunks (spec max %d); "
+                                "raise chunk_size or trim the event"
+                                % (len(chunks), GELF_MAX_CHUNKS)
+                            )
+                        continue  # drop: reflected in the returned sent count
+                    mid = os.urandom(8)
+                    for i, ck in enumerate(chunks):
+                        sock.sendto(GELF_MAGIC + mid + bytes([i, len(chunks)]) + ck, dest)
+                n += 1
+        return n
 
-    df.foreachPartition(send_partition)
-    return int(sent.value)
+    return _send_partitions(df, send)
 
 
 def loki_output(
@@ -215,47 +233,23 @@ def loki_output(
     output/loki maps events to the same payload). Events without ts
     stamp 0 (Loki rejects those in production — upstream date parse is
     the fix, same as the reference)."""
-    sc = df.sparkSession.sparkContext
-    sent = sc.accumulator(0)
     lbls = labels or {"job": "gogstash_spark"}
-
-    from gogstash_spark.codecs import encode_json
-
     ns_col = (
         (F.coalesce(F.unix_micros(F.col(logevent.TS)), F.lit(0)) * F.lit(1000))
         if logevent.TS in df.columns
         else F.lit(0).cast("long")
     )
-    enc = encode_json(df, **(json_opts or {})).select(
-        F.col("encoded"), ns_col.alias("ns")
-    )
 
-    def send_partition(rows):
-        import urllib.request
+    def push(batch) -> bytes:
+        values = [[str(r["ns"]), r["encoded"]] for r in batch]
+        return json.dumps({"streams": [{"stream": lbls, "values": values}]}).encode()
 
-        buf: list[list[str]] = []
+    def send(rows):
+        return _post_batches(
+            url, rows, batch_size, push, {"Content-Type": "application/json"}, timeout
+        )
 
-        def flush():
-            if not buf:
-                return
-            payload = json.dumps({"streams": [{"stream": lbls, "values": buf}]})
-            req = urllib.request.Request(
-                url, data=payload.encode(),
-                headers={"Content-Type": "application/json"}, method="POST",
-            )
-            with urllib.request.urlopen(req, timeout=timeout):
-                pass
-            sent.add(len(buf))
-            buf.clear()
-
-        for r in rows:
-            buf.append([str(r["ns"]), r["encoded"]])
-            if len(buf) >= batch_size:
-                flush()
-        flush()
-
-    enc.foreachPartition(send_partition)
-    return int(sent.value)
+    return _send_partitions(_encoded(df, json_opts, ns=ns_col), send)
 
 
 def redis_output(
@@ -273,39 +267,21 @@ def redis_output(
     failure is loud, not dropped."""
     if data_type not in ("list", "channel"):
         raise ValueError("redis data_type must be 'list' or 'channel'")
-    from gogstash_spark.codecs import encode_json
-    from gogstash_spark.logevent import format_expr
-
-    sc = df.sparkSession.sparkContext
-    sent = sc.accumulator(0)
-    enc = encode_json(df, **(json_opts or {}))
-    enc = enc.select(
-        F.col("encoded"), format_expr(enc, key).alias("__key")
-    )
     cmd = b"LPUSH" if data_type == "list" else b"PUBLISH"
 
-    def send_partition(rows):
-        import socket as so
-
-        host, _, port = address.rpartition(":")
-        conn = so.create_connection((host, int(port)), timeout=timeout)
-        rf = conn.makefile("rb")
+    def send(rows):
         n = 0
-        try:
+        with _tcp(address, timeout) as conn, conn.makefile("rb") as rf:
             for r in rows:
-                conn.sendall(_resp(cmd, (r["__key"] or "gogstash").encode(),
+                conn.sendall(_resp(cmd, (r["key"] or "gogstash").encode(),
                                    r["encoded"].encode()))
                 reply = rf.readline()  # :N for LPUSH/PUBLISH, -ERR on failure
                 if reply.startswith(b"-"):
                     raise RuntimeError("redis error: %s" % reply.decode().strip())
                 n += 1
-        finally:
-            rf.close()
-            conn.close()
-        sent.add(n)
+        return n
 
-    enc.foreachPartition(send_partition)
-    return int(sent.value)
+    return _send_partitions(_encoded(df, json_opts, key=key), send)
 
 
 def nsq_output(
@@ -320,46 +296,25 @@ def nsq_output(
     '  V2' magic, then per message `PUB <topic>\\n` + uint32 BE size +
     body; each PUB is answered by a frame (uint32 size, int32 type,
     data 'OK'). One connection per task, responses checked."""
-    import struct
+    pub = b"PUB %s\n" % topic.encode()
 
-    from gogstash_spark.codecs import encode_json
-
-    sc = df.sparkSession.sparkContext
-    sent = sc.accumulator(0)
-    enc = encode_json(df, **(json_opts or {})).select("encoded")
-
-    def send_partition(rows):
-        import socket as so
-
-        host, _, port = nsq.rpartition(":")
-        conn = so.create_connection((host, int(port)), timeout=timeout)
+    def send(rows):
         n = 0
-        try:
-            from gogstash_spark.netproto import nsq_read_frame
-
-            def read_frame():
-                return nsq_read_frame(conn)
-
+        with _tcp(nsq, timeout) as conn:
             conn.sendall(b"  V2")
             for r in rows:
                 body = r["encoded"].encode()
-                conn.sendall(b"PUB %s\n" % topic.encode()
-                             + struct.pack(">I", len(body)) + body)
-                while True:
-                    ftype, data = read_frame()
-                    if data == b"_heartbeat_":  # answer or nsqd drops us
-                        conn.sendall(b"NOP\n")
-                        continue
-                    break
+                conn.sendall(pub + struct.pack(">I", len(body)) + body)
+                ftype, data = nsq_read_frame(conn)
+                while data == b"_heartbeat_":  # answer or nsqd drops us
+                    conn.sendall(b"NOP\n")
+                    ftype, data = nsq_read_frame(conn)
                 if ftype == 1 or data != b"OK":  # FrameTypeError / not OK
                     raise RuntimeError("nsq PUB failed: %r" % data)
                 n += 1
-        finally:
-            conn.close()
-        sent.add(n)
+        return n
 
-    enc.foreachPartition(send_partition)
-    return int(sent.value)
+    return _send_partitions(_encoded(df, json_opts), send)
 
 
 def email_output(
@@ -380,16 +335,9 @@ def email_output(
     template rendered per event, the JSON-encoded event is the body.
     An email sink only makes sense behind a highly-selective condition
     (alerts) — the per-event send IS the reference semantics."""
-    from gogstash_spark.codecs import encode_json
-    from gogstash_spark.logevent import format_expr
-
-    sc = df.sparkSession.sparkContext
-    sent = sc.accumulator(0)
-    enc = encode_json(df, **(json_opts or {}))
-    enc = enc.select(F.col("encoded"), format_expr(enc, subject).alias("__subj"))
     rcpts = [a.strip() for a in (to + ("," + cc if cc else "")).split(",") if a.strip()]
 
-    def send_partition(rows):
+    def send(rows):
         import smtplib
         from email.mime.text import MIMEText
 
@@ -402,7 +350,7 @@ def email_output(
                 srv.login(username, password)
             for r in rows:
                 msg = MIMEText(r["encoded"])
-                msg["Subject"] = r["__subj"] or subject
+                msg["Subject"] = r["subject"] or subject
                 msg["From"] = from_addr
                 msg["To"] = to
                 if cc:
@@ -414,10 +362,9 @@ def email_output(
                 srv.quit()
             except Exception:
                 pass  # already counted; QUIT failure doesn't unsend
-        sent.add(n)
+        return n
 
-    enc.foreachPartition(send_partition)
-    return int(sent.value)
+    return _send_partitions(_encoded(df, json_opts, subject=subject), send)
 
 
 def amqp_output(
@@ -437,52 +384,39 @@ def amqp_output(
     routing-key template, optional persistent delivery). One
     connection+channel per task via the in-repo minimal client
     (amqp091.py) — no external amqp library in this image."""
-    from gogstash_spark.codecs import encode_json
-    from gogstash_spark.logevent import format_expr
-
-    sc = df.sparkSession.sparkContext
-    sent = sc.accumulator(0)
-    enc = encode_json(df, **(json_opts or {}))
-    enc = enc.select(F.col("encoded"), format_expr(enc, routing_key).alias("__rk"))
-
     urls = [url] if isinstance(url, str) else list(url)
 
-    def connect():
-        # the reference's hostpool dials the next URL on failure
-        # (output/amqp/outputamqp.go:30,46); try each in order
+    def send(rows):
         from gogstash_spark.amqp091 import AmqpPublisher
 
-        last: Exception | None = None
+        # the reference's hostpool dials the next URL on failure
+        # (output/amqp/outputamqp.go:30,46); try each in order
+        pub, last = None, None
         for u in urls:
             try:
-                return AmqpPublisher(u, timeout=timeout)
+                pub = AmqpPublisher(u, timeout=timeout)
+                break
             except OSError as e:
                 last = e
-        raise ConnectionError("no amqp broker reachable: %s (%s)" % (urls, last))
-
-    def send_partition(rows):
-        pub = None
+        if pub is None:
+            raise ConnectionError("no amqp broker reachable: %s (%s)" % (urls, last))
         n = 0
         try:
+            pub.declare_exchange(
+                exchange, exchange_type,
+                durable=exchange_durable, auto_delete=exchange_auto_delete,
+            )
             for r in rows:
-                if pub is None:  # connect lazily: empty partitions cost nothing
-                    pub = connect()
-                    pub.declare_exchange(
-                        exchange, exchange_type,
-                        durable=exchange_durable, auto_delete=exchange_auto_delete,
-                    )
                 pub.publish(
-                    exchange, r["__rk"] or "", r["encoded"].encode(),
+                    exchange, r["routing_key"] or "", r["encoded"].encode(),
                     persistent=persistent,
                 )
                 n += 1
         finally:
-            if pub is not None:
-                pub.close()
-        sent.add(n)
+            pub.close()  # raises a broker's Close, so rejected publishes never count
+        return n
 
-    enc.foreachPartition(send_partition)
-    return int(sent.value)
+    return _send_partitions(_encoded(df, json_opts, routing_key=routing_key), send)
 
 
 def emit(df: DataFrame, cfg: dict) -> int:

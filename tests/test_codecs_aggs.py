@@ -116,6 +116,11 @@ class TestCodecs:
             df, remove_field=["rec.keep", "rec.drop", "rec.deep"]
         ).collect()[0]["encoded"]
         assert out2 == '{"message":"m"}'
+        # a path listed next to a deeper path under it still goes whole
+        out3 = codecs.encode_json(
+            df, remove_field=["rec.deep", "rec.deep.b"]
+        ).collect()[0]["encoded"]
+        assert out3 == '{"message":"m","rec":{"keep":"1","drop":"2"}}'
 
     def test_encode_json_struct_deep_sub_does_not_count_as_whole_field(self, spark):
         """'rec.deep.b' removes only deep.b — it must NOT count 'deep'

@@ -2002,9 +2002,6 @@ class TestDedupIncremental:
         )
         kept2 = dedup_incremental(s2, ledger)
         assert sorted(r["doc_id"] for r in kept2.collect()) == [11, 13]
-        # broadcast path agrees
-        kept2b = dedup_incremental(s2, ledger, broadcast_seen=True)
-        assert sorted(r["doc_id"] for r in kept2b.collect()) == [11, 13]
         # appending the delta makes a third pass of the same docs empty
         ledger2 = ledger.unionByName(kept2.select("text_md5"))
         assert dedup_incremental(s2, ledger2).count() == 0

@@ -416,6 +416,31 @@ class TestSocketOutput:
         finally:
             srv.shutdown()
 
+    def test_empty_partitions_open_no_connection(self, spark):
+        """One row over 8 partitions: only the one non-empty task
+        connects."""
+        conns = []
+
+        class _Counting(_TcpRecorder):
+            def handle(self):
+                conns.append(self.client_address)
+                super().handle()
+
+        _TcpRecorder.lines = []
+        srv = socketserver.ThreadingTCPServer(("127.0.0.1", 0), _Counting)
+        t = threading.Thread(target=srv.serve_forever, daemon=True)
+        t.start()
+        try:
+            df = spark.createDataFrame([("e1",)], "text string").repartition(8)
+            assert df.rdd.getNumPartitions() == 8
+            sent = outputs.socket_output(df, "127.0.0.1:%d" % srv.server_address[1])
+        finally:
+            srv.shutdown()
+            srv.server_close()  # joins the handler threads
+        assert sent == 1
+        assert len(conns) == 1
+        assert [json.loads(ln)["message"] for ln in _TcpRecorder.lines] == ["e1"]
+
 
 class TestGelfOutput:
     def _recv_all(self, sock, expect_msgs: int):

@@ -18,10 +18,14 @@ def test_library_has_no_gogstash_env_knobs():
 def test_no_checkpoint_cadence_or_strict_parameters():
     """Iterative loops truncate their plan on a fixed shape (no
     `checkpoint_every` cadence), a non-converged loop always raises
-    (no `strict` switch to a best-effort result), and the runner writes
+    (no `strict` switch to a best-effort result), the runner writes
     parquet only (no `table_format`/`table_ident` switch to a table
-    format)."""
-    forbidden = {"checkpoint_every", "strict", "table_format", "table_ident"}
+    format), and each broadcast join is fixed or size-checked (no
+    `broadcast_lm`/`broadcast_matches`/`broadcast_seen` switch)."""
+    forbidden = {
+        "checkpoint_every", "strict", "table_format", "table_ident",
+        "broadcast_lm", "broadcast_matches", "broadcast_seen",
+    }
     hits = []
     for p in LIB.rglob("*.py"):
         for node in ast.walk(ast.parse(p.read_text())):
