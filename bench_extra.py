@@ -11,7 +11,8 @@ Prints one JSON line {"queries": {name: best_sec}, "sf_dir": ...}.
 
 `--phases` adds a per-phase breakdown of `--reps` `run_pipeline` runs
 of `standard_spec` under "phases": plan build, write and post-write,
-each with its wall and its job count from the status store.
+each with its wall and its job count from the status store, and the
+rep's `by_route` file count.
 """
 
 from __future__ import annotations
@@ -35,7 +36,8 @@ def phase_breakdown(spark, spec, out_dir: str, base_dir: str, run_id: str) -> di
     - post_write: lineage, protocol sinks, aggregates and the ledger.
 
     The boundaries come from wrapping that first `_commit_dir` for the
-    length of the call. Returns {phase: {"wall_s", "jobs"}}."""
+    length of the call. Returns {phase: {"wall_s", "jobs"}} plus
+    "by_route_files", the number of parquet files the write committed."""
     from gogstash_spark import runner
 
     sc = spark.sparkContext
@@ -63,13 +65,19 @@ def phase_breakdown(spark, spec, out_dir: str, base_dir: str, run_id: str) -> di
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
     tracker = sc.statusTracker()
-    return {
+    out: dict = {
         phase: {
             "wall_s": round(end - start, 3),
             "jobs": len(tracker.getJobIdsForGroup("%s/%s" % (run_id, phase))),
         }
         for (phase, start), (_, end) in zip(marks, marks[1:])
     }
+    out["by_route_files"] = sum(
+        f.endswith(".parquet")
+        for _, _, files in os.walk(os.path.join(out_dir, "by_route"))
+        for f in files
+    )
+    return out
 
 
 def main() -> None:

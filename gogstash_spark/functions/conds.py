@@ -54,9 +54,15 @@ def _tokenize(expr: str) -> list[str]:
     return toks
 
 
-def _sql_str(tok: str) -> str:
-    body = tok[1:-1].replace("\\'", "'").replace('\\"', '"').replace("\\\\", "\\")
-    return "'%s'" % body.replace("'", "''")
+def sql_str(s: str) -> str:
+    """`s` as a Spark SQL string literal. The SQL lexer reads a backslash
+    as an escape, so both `\\` and `'` are backslash-escaped."""
+    return "'%s'" % s.replace("\\", "\\\\").replace("'", "\\'")
+
+
+def _unquote(tok: str) -> str:
+    """The body of a quoted condition token."""
+    return tok[1:-1].replace("\\'", "'").replace('\\"', '"').replace("\\\\", "\\")
 
 
 class _Parser:
@@ -157,7 +163,7 @@ class _Parser:
             self.expect(")")
             return "(%s)" % inner
         if tok[0] in "'\"":
-            return _sql_str(tok)
+            return sql_str(_unquote(tok))
         if tok[0].isdigit():
             return tok
         if tok.lower() in _BOOL:

@@ -15,6 +15,7 @@ from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from gogstash_spark import logevent
+from gogstash_spark.functions.conds import sql_str
 from gogstash_spark.functions.datefmt import to_spark_pattern
 from gogstash_spark.functions.grok import CompiledGrok, compile_grok
 from gogstash_spark.operators import Context, Stage, apply_common, register
@@ -96,6 +97,11 @@ def _single_eval_form(cg: CompiledGrok) -> tuple[str, str] | None:
     return wrapped, repl
 
 
+def _sql_col(name: str) -> str:
+    """`name` as a SQL column reference that resolves as F.col(name)."""
+    return ".".join("`%s`" % part.replace("`", "``") for part in name.split("."))
+
+
 def _grok_native(df: DataFrame, source: str, compiled: list[CompiledGrok]) -> tuple[DataFrame, Column]:
     """Grok as native column expressions, all inside codegen.
 
@@ -106,25 +112,28 @@ def _grok_native(df: DataFrame, source: str, compiled: list[CompiledGrok]) -> tu
     contains the delimiter byte (or patterns with mid-pattern anchors)
     fall back to per-capture regexp_extract via coalesce on the NULL
     fast column, so the fast form never changes a result.
+
+    Each column is ONE SQL expression string (patterns quoted by
+    `sql_str`), so building it costs one JVM call instead of one per
+    Column operator; the analyzed plan is the Column API's.
     """
-    src = F.col(source)
-    matched_exprs = [src.rlike(cg.positional()) for cg in compiled]
-    midx = F.coalesce(
-        *[F.when(matched_exprs[i], F.lit(i)) for i in range(len(compiled))],
-        F.lit(-1),
+    src = _sql_col(source)
+    delim = sql_str(GROK_DELIM)
+    midx = "coalesce(%s, -1)" % ", ".join(
+        "CASE WHEN %s RLIKE %s THEN %d END" % (src, sql_str(cg.positional()), i)
+        for i, cg in enumerate(compiled)
     )
-    df = df.withColumn("__grok_idx", midx)
-    fast: dict[int, tuple[str, str]] = {}
+    df = df.withColumn("__grok_idx", F.expr(midx))
     sp_cols: dict[str, Column] = {}
     for i, cg in enumerate(compiled):
         form = _single_eval_form(cg)
         if form is None:
             continue
-        fast[i] = form
         wrapped, repl = form
-        sp_cols["__grok_sp%d" % i] = F.when(
-            (F.col("__grok_idx") == i) & ~src.contains(GROK_DELIM),
-            F.split(F.regexp_replace(src, wrapped, repl), GROK_DELIM),
+        sp_cols["__grok_sp%d" % i] = F.expr(
+            "CASE WHEN __grok_idx = %d AND NOT contains(%s, %s) "
+            "THEN split(regexp_replace(%s, %s, %s), %s) END"
+            % (i, src, delim, src, sql_str(wrapped), sql_str(repl), delim)
         )
     if sp_cols:
         df = df.withColumns(sp_cols)
@@ -136,17 +145,12 @@ def _grok_native(df: DataFrame, source: str, compiled: list[CompiledGrok]) -> tu
     for name, sources in all_fields.items():
         per_pattern = []
         for i, cg in sources:
-            slow = F.regexp_extract(src, cg.positional(), cg.group_index(name))
-            value = (
-                F.coalesce(
-                    F.element_at(F.col("__grok_sp%d" % i), cg.group_index(name)),
-                    slow,
-                )
-                if i in fast
-                else slow
-            )
-            per_pattern.append(F.when(F.col("__grok_idx") == i, value))
-        expr = F.coalesce(*per_pattern)
+            gi = cg.group_index(name)
+            value = "regexp_extract(%s, %s, %d)" % (src, sql_str(cg.positional()), gi)
+            if "__grok_sp%d" % i in sp_cols:
+                value = "coalesce(element_at(__grok_sp%d, %d), %s)" % (i, gi, value)
+            per_pattern.append("CASE WHEN __grok_idx = %d THEN %s END" % (i, value))
+        expr = F.expr("coalesce(%s)" % ", ".join(per_pattern))
         typ = next((cg.types.get(name) for _, cg in sources if name in cg.types), None)
         new_cols[name] = _typed(expr, typ)
     df = df.withColumns(new_cols).drop(*sp_cols.keys())

@@ -17,14 +17,13 @@ Scale design (the part gogstash never faced — one box, one stream):
   (errgroup fan-out, config/output.go:94-108). One cached scan feeding
   them all was measured slower: the concurrent readers wait on the
   cache while it fills.
-- The fan-out shuffle is sized by data, not cores: an AQE REBALANCE over
-  (route, salt) targets advisoryPartitionSizeInBytes per write task. A
-  fixed cores-based partition count was slower (sf3 / 15M turns at
-  local[32]: fixed 32 -> 96 s, rebalance -> 60 s) because each write
-  task's buffered partition grew with the input.
-- Hot conv_ids are salted: salt = xxhash64(conv_id, turn_idx) %
-  (4 * defaultParallelism), so a conversation with 30% of all turns
-  spreads over many write tasks instead of one.
+- The fan-out shuffle is sized by data, not cores: one AQE REBALANCE on
+  `route`. Small routes coalesce into one write task (one file), and a
+  route larger than advisoryPartitionSizeInBytes is split by map blocks
+  (OptimizeSkewInRebalancePartitions), so a hot route still spreads
+  over several write tasks. A fixed cores-based partition count was
+  slower (sf3 / 15M turns at local[32]: fixed 32 -> 96 s, rebalance ->
+  60 s) because each write task's buffered partition grew with the input.
 - Resume: a JSON snapshot ledger (the sincedb analog, reference
   input/file/sincedb.go:21-91) records the partitioned commit (with its
   per-route rows and schema), each protocol sink and each aggregate,
@@ -138,39 +137,13 @@ def compute_aggregate(exploded: DataFrame, agg: dict) -> DataFrame:
     return exploded.groupBy(F.col("sink"), *keys).agg(F.count(F.lit(1)).alias("n"))
 
 
-def _hashable_type(dt) -> bool:
-    """xxhash64 rejects MapType anywhere in the type tree."""
-    if isinstance(dt, T.MapType):
-        return False
-    if isinstance(dt, T.StructType):
-        return all(_hashable_type(f.dataType) for f in dt.fields)
-    if isinstance(dt, T.ArrayType):
-        return _hashable_type(dt.elementType)
-    return True
-
-
-def _salt_col(df: DataFrame, modulus: int):
-    """Deterministic row salt from (conv_id, turn_idx) when present
-    (the transcripts key), else from every hashable column; frames that
-    are ALL maps hash their JSON rendering."""
-    keys = [c for c in ("conv_id", "turn_idx") if c in df.columns]
-    if not keys:
-        keys = [f.name for f in df.schema.fields if _hashable_type(f.dataType)]
-    if not keys:
-        return F.pmod(F.xxhash64(F.to_json(F.struct(*df.columns))), F.lit(modulus))
-    return F.pmod(F.xxhash64(*[F.col(c) for c in keys]), F.lit(modulus))
-
-
 def _fanout_distribute(exploded: DataFrame) -> DataFrame:
     """Distribute the exploded (route, event) frame for the partitionBy
-    write: an AQE REBALANCE over (route, salt), so the partition COUNT
-    follows the data volume and each write task's buffered partition
-    stays constant-size as the input grows. The salt modulus is 4x wider
-    than cores: rebalance can split a hash partition, but distinct
-    (route, salt) keys are what spread hot routes in the first place."""
-    n_salts = 4 * exploded.sparkSession.sparkContext.defaultParallelism
-    salt = _salt_col(exploded.drop("route"), n_salts)
-    return exploded.withColumn("__salt", salt).hint("rebalance", "route", "__salt").drop("__salt")
+    write: an AQE REBALANCE on `route`, so each route lands in as few
+    write tasks as its size needs. AQE coalesces small routes and splits
+    a route above advisoryPartitionSizeInBytes by map blocks, so the
+    file count follows the data volume, not cores x routes."""
+    return exploded.hint("rebalance", "route")
 
 
 def _commit_dir(write, final_dir: str) -> None:
@@ -270,9 +243,14 @@ def _write_lineage(by_route: DataFrame, lin_dir: str) -> list:
         F.count(F.lit(1)).alias("rows")
     )
     _commit_dir(lineage_df.write.mode("overwrite").parquet, lin_dir)
+    # the part files, not the dir: Spark treats a `_`-prefixed root as
+    # hidden and warns that all its paths were ignored (a glob instead
+    # warns that it has no metadata dir). An empty input still commits
+    # one part file.
+    parts = [os.path.join(lin_dir, f) for f in os.listdir(lin_dir) if f.endswith(".parquet")]
     return (
         by_route.sparkSession.read.schema(LINEAGE_SCHEMA)
-        .parquet(lin_dir)
+        .parquet(*parts)
         .groupBy("route")
         .agg(F.sum("rows").alias("rows"), F.count(F.lit(1)).alias("files"))
         .collect()

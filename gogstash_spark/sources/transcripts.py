@@ -16,7 +16,7 @@ downstream grok / kv / json parse yields are known a priori:
     ~15%  free text          (no-match -> grok error tag -> deadletter)
 
 conv_id popularity is skewed (~1% of convs own ~30% of turns) to
-exercise hot-key salting. Everything is seeded (seed=42) and written
+exercise hot keys. Everything is seeded (seed=42) and written
 as a multi-file parquet directory so local Spark gets >=8 input splits
 (one file ≙ one scan task in local mode).
 """

@@ -106,6 +106,23 @@ class TestCond:
         with pytest.raises(CondError):
             cond_to_sql("a ==")
 
+    @pytest.mark.parametrize(
+        "expr,kept",
+        [
+            (r'message =~ "^\\d+$"', ["404"]),
+            (r'message == "a\\b"', ["a\\b"]),
+            (r"message !~ '\\\\'", ["404", "abc", "d", "dd"]),
+        ],
+    )
+    def test_backslashes_reach_spark(self, spark, expr, kept):
+        """A backslash in a condition string is the regex's (or the
+        literal's) own, not an escape of the Spark SQL lexer."""
+        df = spark.createDataFrame(
+            [(m,) for m in ("404", "abc", "a\\b", "d", "dd")], "message string"
+        )
+        got = [r["message"] for r in df.filter(cond_to_sql(expr)).collect()]
+        assert sorted(got) == kept
+
 
 class TestPathValue:
     """Nested dotted-path get/set/remove with array indexing

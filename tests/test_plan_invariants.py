@@ -7,9 +7,12 @@ at scale, asserted so a regression is a test failure, not a silent 10x.
 - lookup enriches are broadcast hash joins (never sort-merge)
 - native predicates push down into the parquet scan
 - the full pipeline plan keeps a single transcripts scan
+- the routed plan of the standard pipeline is pinned, so building grok
+  as SQL text cannot move it
 """
 
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -167,21 +170,54 @@ class TestHyperplanePlanSize:
         )
 
 
+GOLDEN_ROUTED_PLAN = os.path.join(os.path.dirname(__file__), "golden", "standard_spec_routed_plan.txt")
+
+
+class TestGrokPlanPinned:
+    def test_standard_spec_routed_plan_unchanged(self, spark, sf_data_dir):
+        """grok builds its columns as SQL text (one JVM call each) and
+        must analyze to the plan its Column-API build gave: the optimized
+        plan of standard_spec's routed frame equals the pinned text, with
+        expression ids, common-subexpression names and observation names
+        and ids normalised. Regenerate the file from this test's `got`
+        only for an intended plan change."""
+        plan = compile_pipeline(
+            standard_spec(sf_data_dir), Context(spark=spark, base_dir=sf_data_dir)
+        )
+        routed = plan.run(spark.read.parquet(os.path.join(sf_data_dir, "transcripts")))
+        key = "spark.sql.debug.maxToStringFields"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "100000")
+        try:
+            got = routed._jdf.queryExecution().optimizedPlan().toString()
+        finally:
+            spark.conf.set(key, prev)
+        got = re.sub(r"#\d+L?", "#N", re.sub(r"_common_expr_\d+", "_common_expr_N", got))
+        got = re.sub(r"[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}", "UUID", got)
+        got = re.sub(r"(CollectMetrics .*), \d+$", r"\1, N", got, flags=re.M)
+        with open(GOLDEN_ROUTED_PLAN, newline="") as f:
+            assert got == f.read()
+
+
 class TestFanoutDistribution:
     def test_default_path_is_rebalance_not_fixed_repartition(self, spark):
         """the fan-out shuffle must size itself by DATA (AQE rebalance),
         not by a fixed cores-derived count — the fixed count made write
-        partitions grow with the input (sf3 measured 96s vs 54s)."""
-        from pyspark.sql import functions as F
-
+        partitions grow with the input (sf3 measured 96s vs 54s). It
+        rebalances on `route` alone: no per-row salt (one hash per row)
+        multiplies the files by cores."""
         from gogstash_spark.runner import _fanout_distribute
 
         df = spark.range(1000).select(
-            (F.col("id") % 3).cast("string").alias("route"), "id"
+            (F.col("id") % 3).cast("string").alias("route"),
+            F.lit("c").alias("conv_id"), F.col("id").cast("int").alias("turn_idx"),
         )
         plan = _fanout_distribute(df)._jdf.queryExecution().optimizedPlan().toString()
-        assert "RebalancePartitions" in plan
         assert "RepartitionByExpression" not in plan
+        rebalances = [ln for ln in plan.splitlines() if "RebalancePartitions" in ln]
+        assert len(rebalances) == 1, plan
+        assert re.search(r"RebalancePartitions \[route#\d+\]", rebalances[0]), rebalances[0]
+        assert "xxhash64" not in plan and "__salt" not in plan, plan
 
 
 class TestPQPlans:

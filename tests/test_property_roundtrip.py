@@ -4,6 +4,8 @@
   round-trip (quote-aware values with spaces)
 - cond translator: govaluate expression evaluated by Spark SQL matches
   a pure-Python evaluation over the same random rows
+- sql_str: random unicode strings quoted as Spark SQL literals read
+  back unchanged
 """
 
 import random
@@ -11,7 +13,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from gogstash_spark.functions.conds import cond_to_sql
+from gogstash_spark.functions.conds import cond_to_sql, sql_str
 from gogstash_spark.operators import Context, compile_filter
 
 SEED = 1234
@@ -80,6 +82,28 @@ class TestCondVsPython:
 
         for i, a, b, c, d in rows:
             assert got[i] == py_eval(a, b, c, d), (i, expr, (a, b, c, d))
+
+
+class TestSqlStrRoundtrip:
+    def test_random_unicode_literals_roundtrip(self, spark):
+        """`SELECT sql_str(s)` returns s: quotes, backslashes (also before
+        the lexer's own escape letters), control bytes, newlines and
+        non-BMP code points included."""
+        rng = random.Random(SEED)
+        tricky = ["'", "\\", "\x1f", "\n", "\r", "\t", "\x00", '"', "%", "_", "u", "n", "0"]
+        points = [c for c in range(1, 0x20000) if not 0xD800 <= c <= 0xDFFF]
+        strings = ["", "'", "\\", "''", "\\'", "\\\\", "\\u0041", "\\n", "it's a\\b"]
+        for _ in range(150):
+            strings.append("".join(
+                rng.choice(tricky) if rng.random() < 0.4 else chr(rng.choice(points))
+                for _ in range(rng.randint(1, 12))
+            ))
+        sql = "SELECT " + ", ".join(
+            "%s AS c%d" % (sql_str(s), i) for i, s in enumerate(strings)
+        )
+        row = spark.sql(sql).first()
+        for i, s in enumerate(strings):
+            assert row[i] == s, (i, s, row[i])
 
 
 class TestPathValueRoundtrip:

@@ -148,32 +148,33 @@ class TestElasticSinkSemantics:
         assert not (tmp_path / "x").exists()
 
 
-class TestSkewSalting:
-    def test_hot_conversation_spreads_over_partitions(self, spark):
-        """One conversation holding 50% of all turns must spread over
-        most of the fan-out salt values (a plain hash on conv_id would
-        put it in ONE write task — the straggler that kills a
-        1000-executor job)."""
-        from gogstash_spark.runner import _salt_col
+class TestHotRouteSplit:
+    def test_hot_route_spreads_over_files(self, spark, tmp_path):
+        """A route holding 90% of the rows is split over several write
+        tasks by the REBALANCE itself (AQE splits a rebalance partition
+        above the advisory size by map blocks), not written by ONE task
+        — the straggler that kills a 1000-executor job."""
+        from gogstash_spark.plans.compile import ROUTES, Route
+        from gogstash_spark.runner import write_by_route
 
-        hot = spark.range(10_000).selectExpr(
-            "'hot-conv' AS conv_id", "CAST(id AS INT) AS turn_idx"
+        routed = spark.range(200_000, numPartitions=8).select(
+            "id",
+            F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+            F.array(F.when(F.col("id") % 10 == 0, "cold").otherwise("hot")).alias(ROUTES),
         )
-        cold = spark.range(10_000).selectExpr(
-            "concat('c', CAST(id % 500 AS STRING)) AS conv_id",
-            "CAST(id AS INT) AS turn_idx",
-        )
-        df = hot.unionByName(cold)
-        per_salt = (
-            df.withColumn("salt", _salt_col(df, 16))
-            .filter("conv_id = 'hot-conv'")
-            .groupBy("salt")
-            .count()
-            .collect()
-        )
-        biggest = max(r["count"] for r in per_salt)
-        assert len(per_salt) >= 8        # hot key takes >= 8 of 16 salts
-        assert biggest <= 10_000 * 0.25  # no salt value holds the bulk
+        key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "256k")
+        try:
+            target = str(tmp_path / "by_route")
+            write_by_route(routed, [Route("hot", "true"), Route("cold", "true")], target)
+        finally:
+            spark.conf.set(key, prev)
+
+        hot = [f for f in os.listdir(os.path.join(target, "route=hot")) if f.endswith(".parquet")]
+        assert len(hot) >= 2, hot
+        got = spark.read.parquet(target).groupBy("route").count().collect()
+        assert {r["route"]: r["count"] for r in got} == {"hot": 180_000, "cold": 20_000}
 
 
 class TestGogstashConfigAdapter:

@@ -347,6 +347,18 @@ class TestOneWritePath:
         streamed = streamed.select(*batch.columns)
         assert streamed.exceptAll(batch).count() == 0
         assert batch.exceptAll(streamed).count() == 0
+        # the rebalance on route sizes each epoch's write by data: an
+        # epoch this small writes one file per non-empty route
+        epochs = [e for e in os.listdir(os.path.join(stream_out, "by_route"))
+                  if e.startswith("epoch=")]
+        for epoch in epochs:
+            edir = os.path.join(stream_out, "by_route", epoch)
+            routes = [r for r in os.listdir(edir) if r.startswith("route=")]
+            assert routes, epoch
+            for route in routes:
+                parts = [f for f in os.listdir(os.path.join(edir, route))
+                         if f.endswith(".parquet")]
+                assert len(parts) == 1, (epoch, route, parts)
 
     def test_both_runners_write_through_write_by_route(self, spark, tmp_path, monkeypatch):
         from gogstash_spark import runner
