@@ -44,6 +44,13 @@ def tags_col(df: DataFrame) -> Column:
     return F.array().cast(T.ArrayType(T.StringType()))
 
 
+def add_tags(df: DataFrame, tags: list[str], where: Column | None = None) -> DataFrame:
+    """`df` with `tags` unioned into its tags on the rows where `where`
+    holds (every row when None)."""
+    new = F.array_union(tags_col(df), F.array(*[F.lit(t) for t in tags]))
+    return df.withColumn(TAGS, new if where is None else F.when(where, new).otherwise(tags_col(df)))
+
+
 def _env_fallback(key: str) -> str | None:
     """The reference resolves unknown %{} tokens from the environment,
     with %{HOSTNAME} as a special case (reference

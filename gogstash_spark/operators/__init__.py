@@ -72,13 +72,7 @@ def apply_common(df: DataFrame, cfg: dict, applied: Column | None = None) -> Dat
     remove_field = cfg.get("remove_field") or []
 
     if add_tag:
-        new = F.array_union(
-            logevent.tags_col(df), F.array(*[F.lit(t) for t in add_tag])
-        )
-        df = df.withColumn(
-            logevent.TAGS,
-            new if applied is None else F.when(applied, new).otherwise(logevent.tags_col(df)),
-        )
+        df = logevent.add_tags(df, add_tag, applied)
     if remove_tag:
         new = F.array_except(
             logevent.tags_col(df), F.array(*[F.lit(t) for t in remove_tag])

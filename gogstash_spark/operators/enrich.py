@@ -108,13 +108,7 @@ def compile_lookuptable(cfg: dict, ctx: Context) -> Stage:
         for _, tgt in select.items():
             joined = joined.withColumn(tgt, F.col("__lk_%s" % tgt))
         if tag_on_miss:
-            joined = joined.withColumn(
-                logevent.TAGS,
-                F.when(
-                    ~hit,
-                    F.array_union(logevent.tags_col(joined), F.array(F.lit(miss_tag))),
-                ).otherwise(logevent.tags_col(joined)),
-            )
+            joined = logevent.add_tags(joined, [miss_tag], ~hit)
         joined = apply_common(joined, cfg, hit)
         return joined.drop("__lk_key", *["__lk_%s" % t for _, t in select.items()])
 
@@ -170,13 +164,7 @@ def compile_geoip(cfg: dict, ctx: Context) -> Stage:
         if tag_on_miss:
             # miss = public ip that had no record (private skip is not an error)
             miss = (~hit) & F.col("__geo_probe").isNotNull()
-            joined = joined.withColumn(
-                logevent.TAGS,
-                F.when(
-                    miss,
-                    F.array_union(logevent.tags_col(joined), F.array(F.lit(error_tag))),
-                ).otherwise(logevent.tags_col(joined)),
-            )
+            joined = logevent.add_tags(joined, [error_tag], miss)
         joined = apply_common(joined, cfg, hit)
         return joined.drop("__geo_key", "__geo_rec", "__geo_probe")
 

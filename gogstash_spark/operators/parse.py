@@ -207,13 +207,7 @@ def compile_grok_filter(cfg: dict, ctx: Context) -> Stage:
             df = df.withColumns(
                 {name: F.nullif(F.col(name), F.lit("")) for name in string_captures}
             )
-        df = df.withColumn(
-            logevent.TAGS,
-            F.when(
-                ~applied,
-                F.array_union(logevent.tags_col(df), F.array(F.lit(error_tag))),
-            ).otherwise(logevent.tags_col(df)),
-        )
+        df = logevent.add_tags(df, [error_tag], ~applied)
         df = apply_common(df, cfg, applied)
         return _observe_grok(df, ctx).drop("__grok_idx")
 
@@ -302,12 +296,7 @@ def compile_gonx(cfg: dict, ctx: Context) -> Stage:
                 for name in cg.captures
             }
         )
-        df = df.withColumn(
-            logevent.TAGS,
-            F.when(
-                ~applied, F.array_union(logevent.tags_col(df), F.array(F.lit(error_tag)))
-            ).otherwise(logevent.tags_col(df)),
-        )
+        df = logevent.add_tags(df, [error_tag], ~applied)
         return apply_common(df, cfg, applied)
 
     return apply
@@ -386,12 +375,7 @@ def compile_json(cfg: dict, ctx: Context) -> Stage:
         else:
             df = df.withColumn("__jsonmap", F.col("__json"))
         if tag_on_failure:
-            df = df.withColumn(
-                logevent.TAGS,
-                F.when(
-                    ~applied, F.array_union(logevent.tags_col(df), F.array(F.lit(error_tag)))
-                ).otherwise(logevent.tags_col(df)),
-            )
+            df = logevent.add_tags(df, [error_tag], ~applied)
         df = apply_common(df, cfg, applied)
         return df.drop("__json")
 
@@ -730,12 +714,7 @@ def compile_date(cfg: dict, ctx: Context) -> Stage:
             ),
         )
         if tag_on_failure:
-            df = df.withColumn(
-                logevent.TAGS,
-                F.when(
-                    ~applied, F.array_union(logevent.tags_col(df), F.array(F.lit(error_tag)))
-                ).otherwise(logevent.tags_col(df)),
-            )
+            df = logevent.add_tags(df, [error_tag], ~applied)
         df = apply_common(df, cfg, applied)
         return df.drop("__date")
 

@@ -11,12 +11,13 @@ Scale design (the part gogstash never faced — one box, one stream):
   Lineage, protocol sinks and aggregates share ONE read of the written
   columnar output, given the schema the runner just wrote: one listing,
   no schema inference, and the parse/enrich tree runs exactly once.
-- The outputs after the write overlap: lineage and every aggregate run
-  as concurrent Spark jobs over that one read, each committing its own
-  directory — the reference hands each event to all outputs at once
-  (errgroup fan-out, config/output.go:94-108). One cached scan feeding
-  them all was measured slower: the concurrent readers wait on the
-  cache while it fills.
+- The outputs after the write overlap (`post_write`, also run by every
+  streaming epoch): lineage and every aggregate run as concurrent Spark
+  jobs over that one read, each committing its own directory — the
+  reference hands each event to all outputs at once (errgroup fan-out,
+  config/output.go:94-108). One cached scan feeding them all was
+  measured slower: the concurrent readers wait on the cache while it
+  fills.
 - The fan-out shuffle is sized by data, not cores: one AQE REBALANCE on
   `route`. Small routes coalesce into one write task (one file), and a
   route larger than advisoryPartitionSizeInBytes is split by map blocks
@@ -44,6 +45,7 @@ import os
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
@@ -227,10 +229,7 @@ def write_by_route(routed: DataFrame, routes: list[Route], target: str) -> T.Str
 def _read_routed(spark: SparkSession, part_dir: str, schema: T.StructType | None) -> DataFrame:
     """The written by_route output. Given `schema`, the read lists the
     directory once and infers nothing."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(part_dir)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(part_dir)
 
 
 def _write_lineage(by_route: DataFrame, lin_dir: str) -> list:
@@ -271,10 +270,37 @@ def _write_aggregate(by_route: DataFrame, agg: dict, agg_dir: str) -> int:
             "group_by": [k for k in agg["group_by"] if k in exploded.columns],
             "time_bucket": agg["time_bucket"] if "ts" in exploded.columns else None,
         }
-    obs = Observation(os.path.basename(agg_dir))
+    obs = Observation("agg_" + agg["name"])
     agg_df = compute_aggregate(exploded, agg).observe(obs, F.count(F.lit(1)).alias("rows"))
     _commit_dir(agg_df.write.mode("overwrite").parquet, agg_dir)
     return int(observed(obs).get("rows") or 0)
+
+
+def aggregate_specs(spec: PipelineSpec) -> list[dict]:
+    """The spec's aggregates, or the default: hourly counts per sink by
+    tool (`_write_aggregate` drops the keys a generic config lacks)."""
+    return spec.aggregate or [
+        {"name": "counts", "group_by": ["tool"], "time_bucket": "hour", "__default__": True}
+    ]
+
+
+@contextmanager
+def post_write(by_route: DataFrame, lin_dir: str | None, aggs: dict[str, tuple[dict, str]]):
+    """THE pass after the write, run once by `run_pipeline` and once per
+    streaming epoch: lineage into `lin_dir` (None skips it) and each
+    aggregate of `aggs` ({name: (agg, dir)}) as concurrent Spark jobs
+    over `by_route`, each committing its own dir. Yields (lineage rollup
+    future or None, {name: rows future}); the jobs inherit the caller's
+    job group, and the caller works while they run."""
+    with ThreadPoolExecutor(max_workers=len(aggs) + 1) as pool:
+
+        def submit(fn, *args):
+            return pool.submit(inheritable_thread_target(by_route.sparkSession)(fn), *args)
+
+        yield (
+            None if lin_dir is None else submit(_write_lineage, by_route, lin_dir),
+            {name: submit(_write_aggregate, by_route, agg, d) for name, (agg, d) in aggs.items()},
+        )
 
 
 def _route_sink_rows(plan: CompiledPipeline, route_rows: dict[str, int]) -> dict[str, int]:
@@ -296,10 +322,9 @@ def run_pipeline(
     write_mode: str = "partitioned",
 ) -> RunResult:
     """Run `spec` end to end with ONE partitionBy(route) write of every
-    routed event under out_dir/by_route (`write_by_route`), then
-    lineage, protocol sinks and aggregates from one schema-given read of
-    that written output, with lineage and the aggregates running as
-    concurrent jobs.
+    routed event under out_dir/by_route (`write_by_route`), then the
+    protocol sinks and the pass after the write (`post_write`: lineage
+    and aggregates as concurrent jobs) over one schema-given read of it.
 
     write_mode names the write path; "partitioned" is the only one and
     anything else raises ValueError. With resume=True a run skips every
@@ -324,14 +349,7 @@ def run_pipeline(
 
     os.makedirs(out_dir, exist_ok=True)
     ledger = SnapshotLedger(os.path.join(out_dir, "_ledger.json"))
-    # default aggregate (no spec.aggregate): hourly counts per sink,
-    # keyed by tool when the events have one — _write_aggregate drops the
-    # key and the bucket that a generic (non-transcripts) config's
-    # columns lack.
-    agg_specs = spec.aggregate or [
-        {"name": "counts", "group_by": ["tool"], "time_bucket": "hour",
-         "__default__": True}
-    ]
+    agg_specs = aggregate_specs(spec)
 
     result = RunResult()
     write_skipped = resume and ledger.committed("__partitioned__")
@@ -366,22 +384,13 @@ def run_pipeline(
         _read_routed(spark, part_dir, schema)
         if not write_skipped or pending_aggs or pending_sinks else None
     )
-    # lineage and the aggregates are independent outputs of by_route, so
-    # they run as concurrent Spark jobs (the reference's errgroup fan-out
-    # of each event to every output, config/output.go:94-108). Each action
-    # inherits the caller's job group and local properties; the ledger is
-    # written from this thread only, in a fixed order.
-    with ThreadPoolExecutor(max_workers=max(len(pending_aggs) + (not write_skipped), 1)) as pool:
-
-        def submit(fn, *args):
-            return pool.submit(inheritable_thread_target(spark)(fn), *args)
-
-        lineage = None if write_skipped else submit(_write_lineage, by_route, lin_dir)
-        agg_futures = {
-            a["name"]: submit(_write_aggregate, by_route, a, os.path.join(out_dir, "agg_" + a["name"]))
-            for a in pending_aggs
-        }
-
+    # the ledger is written from this thread only, in a fixed order, while
+    # lineage and the aggregates run
+    with post_write(
+        by_route,
+        None if write_skipped else lin_dir,
+        {a["name"]: (a, os.path.join(out_dir, "agg_" + a["name"])) for a in pending_aggs},
+    ) as (lineage, agg_futures):
         if lineage is not None:
             rollup = lineage.result()
             counts: dict[str, int] = {rr["route"]: int(rr["rows"]) for rr in rollup}

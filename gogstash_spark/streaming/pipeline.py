@@ -4,12 +4,14 @@ The reference is a daemon: inputs push events through channels forever
 (reference config/input.go:70-85). The streaming runner applies the
 same compiled pipeline (`plan.run`) to a readStream source, and each
 micro-batch commits through the batch runner's one write path
-(`runner.write_by_route`) into out_dir/by_route/epoch=N, with the same
-route=<sink> partitions as a batch run. An epoch replay replaces its
-own dir, so it is idempotent (exactly-once at the sink level). Doc-id
-dedup holds within an epoch (across epochs: `stateful.dedup_stream`);
-protocol outputs are batch-only. The report-style aggregate becomes a
-watermarked windowed count (reference output/report/outputreport.go:56-92).
+(`runner.write_by_route`) into out_dir/by_route/epoch=N, then runs the
+batch pass after the write (`runner.post_write`) into
+out_dir/_lineage/epoch=N and out_dir/agg_<name>/epoch=N. An epoch
+replay replaces its own dirs, so it is idempotent. After RQL, a query
+over the epochs is answered from per-epoch partials: count, sum, min and
+max merge by re-aggregating; avg and pNN do not and raise, as protocol
+outputs do. Doc-id dedup holds within an epoch (across epochs:
+`stateful.dedup_stream`).
 
 File-source streaming stands in for kafka here (the kafka connector
 needs its jar; `readStream.format("kafka")` is the one-line swap).
@@ -20,9 +22,9 @@ maps to the streaming checkpointLocation.
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from gogstash_spark import runner
 from gogstash_spark.operators import Context
@@ -41,15 +43,24 @@ def stream_source(spark: SparkSession, path: str, schema=None) -> DataFrame:
     )
 
 
-def make_batch_writer(routes: list[Route], out_dir: str):
+def make_batch_writer(routes: list[Route], aggs: list[dict], out_dir: str):
     """foreachBatch writer: each micro-batch commits through
-    `runner.write_by_route` to out_dir/by_route/epoch=N, replacing that
-    dir, so an epoch replay is idempotent. Readers see by_route as one
-    dataset partitioned by (epoch, route)."""
-    by_route = os.path.join(out_dir, "by_route")
+    `runner.write_by_route` to out_dir/by_route/epoch=N, then
+    `runner.post_write` over that output to out_dir/_lineage/epoch=N and
+    out_dir/agg_<name>/epoch=N for each of `aggs`. Each dir replaces its
+    previous commit, so an epoch replay is idempotent."""
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        runner.write_by_route(batch_df, routes, os.path.join(by_route, "epoch=%d" % epoch_id))
+        epoch = "epoch=%d" % epoch_id
+        part_dir = os.path.join(out_dir, "by_route", epoch)
+        schema = runner.write_by_route(batch_df, routes, part_dir)
+        with runner.post_write(
+            runner._read_routed(batch_df.sparkSession, part_dir, schema),
+            os.path.join(out_dir, "_lineage", epoch),
+            {a["name"]: (a, os.path.join(out_dir, "agg_" + a["name"], epoch)) for a in aggs},
+        ) as (lineage, agg_rows):
+            for job in [lineage, *agg_rows.values()]:
+                job.result()
 
     return write_batch
 
@@ -63,9 +74,10 @@ def run_pipeline_streaming(
     await_termination: bool = True,
 ):
     """Run the compiled pipeline as a streaming query whose micro-batches
-    commit through the batch write path. Returns the streaming query
-    handle (stopped when await_termination via processAllAvailable).
-    Protocol outputs, which only run_pipeline sends, raise ValueError."""
+    commit through the batch write path and post-write pass; returns the
+    query handle, terminated when await_termination. Protocol outputs,
+    which only run_pipeline sends, and aggregates with an avg or pNN op,
+    which do not merge over epochs, raise ValueError."""
     if isinstance(spec, dict):
         spec = PipelineSpec.from_dict(spec)
     plan = compile_pipeline(spec, Context(spark=spark, base_dir=base_dir))
@@ -73,9 +85,15 @@ def run_pipeline_streaming(
     if protocol:
         raise ValueError("streaming writes table sinks only; protocol outputs %s "
                          "are sent by run_pipeline" % protocol)
+    aggs = runner.aggregate_specs(spec)
+    unmerged = [a["name"] for a in aggs
+                if any(re.match(r"(avg|p\d+):", op) for op in a.get("ops", []))]
+    if unmerged:
+        raise ValueError("streaming aggregates merge over epochs by re-aggregating; "
+                         "aggregates %s have avg/pNN ops, which do not" % unmerged)
     q = (
         plan.run(stream_source(spark, input_path))
-        .writeStream.foreachBatch(make_batch_writer(plan.routes, out_dir))
+        .writeStream.foreachBatch(make_batch_writer(plan.routes, aggs, out_dir))
         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
         .trigger(availableNow=True)
         .start()
@@ -83,31 +101,3 @@ def run_pipeline_streaming(
     if await_termination:
         q.awaitTermination()
     return q
-
-
-def windowed_counts(
-    spark: SparkSession,
-    input_path: str,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-    queryName: str = "windowed_counts",
-):
-    """Watermarked windowed aggregate (late data handled by watermark):
-    counts by (tool, window). Memory sink for tests."""
-    src = stream_source(spark, input_path)
-    # parquet NTZ timestamps can't carry a watermark; session tz is UTC
-    src = src.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = (
-        src.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window), F.col("tool"))
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.sql("SELECT window.start AS ws, tool, n FROM %s" % queryName)

@@ -13,15 +13,21 @@ sink_rows (resume is the default; --no-resume recomputes everything).
 
 --streaming runs the same spec as a Structured Streaming query over the
 input directory. Each micro-batch commits through the same write into
-out/by_route/epoch=N/route=<sink>/ (checkpoint in out/_checkpoint);
-protocol outputs are rejected, and no JSON line is printed.
+out/by_route/epoch=N/route=<sink>/ and the same pass after it into
+out/_lineage/epoch=N and out/agg_<name>/epoch=N (checkpoint in
+out/_checkpoint); protocol outputs and avg/pNN aggregates are rejected.
+Its JSON line gives sink_rows summed over every epoch's lineage under
+--out, and the epoch count.
 """
 
 from __future__ import annotations
 
 import argparse
+import glob
 import json
+import os
 import sys
+import time
 
 from pyspark.sql import SparkSession
 
@@ -46,10 +52,26 @@ def main(argv: list[str] | None = None) -> int:
         spec.input["path"] = args.input
 
     if args.streaming:
+        from gogstash_spark.runner import LINEAGE_SCHEMA
         from gogstash_spark.streaming.pipeline import run_pipeline_streaming
 
+        t0 = time.time()
         run_pipeline_streaming(
             spark, spec, spec.input["path"], args.out, base_dir=args.base_dir
+        )
+        parts = glob.glob(os.path.join(args.out, "_lineage", "epoch=*", "*.parquet"))
+        routes = (
+            spark.read.schema(LINEAGE_SCHEMA).parquet(*parts).groupBy("route").sum("rows").collect()
+            if parts else []
+        )
+        print(
+            json.dumps(
+                {
+                    "sink_rows": {r[0]: int(r[1]) for r in routes},
+                    "epochs": len({os.path.dirname(p) for p in parts}),
+                    "wall_sec": round(time.time() - t0, 2),
+                }
+            )
         )
         return 0
 

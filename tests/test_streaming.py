@@ -1,20 +1,51 @@
 """Structured Streaming variant: same spec, each epoch committed through
-the batch write path, windowed watermark aggregate. availableNow trigger drives the whole
-file-backed stream to completion synchronously."""
+the batch write path and the batch pass after it (lineage and the spec's
+aggregates per epoch), checked exactly against batch runs: per-epoch
+aggregates re-aggregated over the epochs equal the batch aggregates.
+The availableNow trigger drives the whole file-backed stream to
+completion synchronously."""
 
+import glob
 import os
 import re
 
 import pytest
 from pyspark.sql import functions as F
 
+from gogstash_spark import runner
 from gogstash_spark.plans.spec import PipelineSpec
-from gogstash_spark.streaming.pipeline import run_pipeline_streaming, windowed_counts
+from gogstash_spark.streaming.pipeline import run_pipeline_streaming
 
 
 def _route(spark, out_dir, route):
     """One route's rows of a streaming run's by_route/epoch=N output."""
     return spark.read.parquet(os.path.join(out_dir, "by_route")).filter(F.col("route") == route)
+
+
+# how each per-epoch aggregate column merges over epochs, by name prefix
+_MERGE = {"n": F.sum, "sum": F.sum, "min": F.min, "max": F.max}
+
+
+def _merged(spark, out_dir, name):
+    """A streaming run's agg_<name>/epoch=N partials merged over the
+    epochs: regrouped on the key columns, each measure re-aggregated."""
+    parts = spark.read.parquet(os.path.join(out_dir, "agg_" + name)).drop("epoch")
+    merge = {c: _MERGE[c.split("_")[0]] for c in parts.columns if c.split("_")[0] in _MERGE}
+    keys = [c for c in parts.columns if c not in merge]
+    return parts.groupBy(*keys).agg(*[fn(c).alias(c) for c, fn in merge.items()])
+
+
+def _assert_same_rows(got, want):
+    got = got.select(*want.columns)
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def _lineage_rows(spark, out_dir):
+    """{route: rows} summed over every epoch's _lineage sidecar."""
+    parts = glob.glob(os.path.join(out_dir, "_lineage", "epoch=*", "*.parquet"))
+    rows = spark.read.schema(runner.LINEAGE_SCHEMA).parquet(*parts).groupBy("route").sum("rows")
+    return {r[0]: r[1] for r in rows.collect()}
 
 
 @pytest.fixture(scope="module")
@@ -35,10 +66,17 @@ def mini_spec(sf_data_dir):
 
 class TestStreaming:
     def test_foreachbatch_fanout_matches_batch(self, spark, sf_data_dir, mini_spec, tmp_path):
-        out = str(tmp_path / "stream_out")
+        out, batch_out = str(tmp_path / "stream_out"), str(tmp_path / "batch")
         run_pipeline_streaming(
             spark, mini_spec, os.path.join(sf_data_dir, "transcripts"), out,
             base_dir=sf_data_dir,
+        )
+        runner.run_pipeline(spark, mini_spec, out_dir=batch_out, base_dir=sf_data_dir,
+                            resume=False)
+        # the default aggregate, merged over the epochs, is the batch one
+        _assert_same_rows(
+            _merged(spark, out, "counts"),
+            spark.read.parquet(os.path.join(batch_out, "agg_counts")),
         )
         src = spark.read.parquet(os.path.join(sf_data_dir, "transcripts"))
         want_user = src.filter("role = 'user'").count()
@@ -48,6 +86,32 @@ class TestStreaming:
         # enriched field made it through the streaming chain
         row = _route(spark, out, "s_user").select("src").first()
         assert row["src"].startswith("user/")
+
+    def test_spark_submit_streaming_prints_json_line(
+        self, spark, sf_data_dir, mini_spec, tmp_path, capsys
+    ):
+        """spark_submit_main --streaming prints one JSON line: sink_rows
+        (the batch line's key) summed over the epochs' lineage, and the
+        epoch count (8 input files, 4 per trigger)."""
+        import dataclasses
+        import importlib.util
+        import json
+
+        path = os.path.join(os.path.dirname(os.path.dirname(__file__)), "spark_submit_main.py")
+        mod_spec = importlib.util.spec_from_file_location("spark_submit_main", path)
+        submit = importlib.util.module_from_spec(mod_spec)
+        mod_spec.loader.exec_module(submit)
+        spec_path = tmp_path / "spec.json"
+        spec_path.write_text(json.dumps(dataclasses.asdict(mini_spec)))
+        assert submit.main(["--spec", str(spec_path), "--out", str(tmp_path / "out"),
+                            "--base-dir", sf_data_dir, "--streaming"]) == 0
+        line = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        src = spark.read.parquet(os.path.join(sf_data_dir, "transcripts"))
+        assert line["sink_rows"] == {
+            "s_user": src.filter("role = 'user'").count(),
+            "s_tool": src.filter("role = 'tool'").count(),
+        }
+        assert line["epochs"] == 2
 
     def test_grok_chain_streams(self, spark, sf_data_dir, tmp_path):
         """The grok stage observes by name on a streaming frame (an
@@ -90,11 +154,14 @@ class TestStreaming:
                 F.when(F.col("role") == "tool", F.lit("s_tool")),
             )),
         )
-        wb = make_batch_writer([Route("s_user", "true"), Route("s_tool", "true")], out)
+        wb = make_batch_writer([Route("s_user", "true"), Route("s_tool", "true")],
+                               runner.aggregate_specs(PipelineSpec()), out)
         wb(df, 0)
         wb(df, 0)  # replay of the same epoch
         assert _route(spark, out, "s_user").count() == 5
         assert _route(spark, out, "s_tool").count() == 5
+        counts = spark.read.parquet(os.path.join(out, "agg_counts")).groupBy("sink").sum("n")
+        assert {r[0]: r[1] for r in counts.collect()} == {"s_user": 5, "s_tool": 5}
         wb(df, 1)  # a genuinely new epoch appends
         assert _route(spark, out, "s_user").count() == 10
 
@@ -129,22 +196,6 @@ class TestStreaming:
         }
         assert set(got) == {"k1", "k2", "k3"}
         assert got["k2"] == "first" and got["k3"] == "first"
-
-    def test_windowed_counts_with_watermark(self, spark, sf_data_dir):
-        got = windowed_counts(
-            spark, os.path.join(sf_data_dir, "transcripts"),
-            window="1 hour", watermark="2 hours", queryName="wc_test",
-        )
-        src = spark.read.parquet(os.path.join(sf_data_dir, "transcripts"))
-        want = (
-            src.groupBy(F.date_trunc("hour", "ts").alias("ws"), "tool")
-            .agg(F.count(F.lit(1)).alias("n"))
-        )
-        got_set = {(r["ws"], r["tool"], r["n"]) for r in got.collect()}
-        want_set = {(r["ws"], r["tool"], r["n"]) for r in want.collect()}
-        # append-mode watermark may hold back the trailing window(s) only
-        assert got_set <= want_set
-        assert len(got_set) >= 0.8 * len(want_set)
 
 
 class TestStreamingSessionize:
@@ -344,9 +395,15 @@ class TestOneWritePath:
         streamed = spark.read.parquet(os.path.join(stream_out, "by_route"))
         assert streamed.select("epoch").distinct().count() > 1
         batch = spark.read.parquet(os.path.join(batch_out, "by_route"))
-        streamed = streamed.select(*batch.columns)
-        assert streamed.exceptAll(batch).count() == 0
-        assert batch.exceptAll(streamed).count() == 0
+        _assert_same_rows(streamed, batch)
+        # the pass after the write runs per epoch: its aggregates merge
+        # over the epochs to the batch ones, its lineage to sink_rows
+        for name in ("counts", "conv_counts", "statsd"):
+            _assert_same_rows(
+                _merged(spark, stream_out, name),
+                spark.read.parquet(os.path.join(batch_out, "agg_" + name)),
+            )
+        assert _lineage_rows(spark, stream_out) == res.sink_rows
         # the rebalance on route sizes each epoch's write by data: an
         # epoch this small writes one file per non-empty route
         epochs = [e for e in os.listdir(os.path.join(stream_out, "by_route"))
@@ -361,22 +418,27 @@ class TestOneWritePath:
                 assert len(parts) == 1, (epoch, route, parts)
 
     def test_both_runners_write_through_write_by_route(self, spark, tmp_path, monkeypatch):
-        from gogstash_spark import runner
-
-        targets = []
-        write = runner.write_by_route
+        targets, agg_targets = [], []
+        write, post_write = runner.write_by_route, runner.post_write
 
         def spy(routed, routes, target, *args):
             targets.append(os.path.relpath(target, str(tmp_path)))
             return write(routed, routes, target, *args)
 
+        def post_spy(by_route, lin_dir, aggs):
+            agg_targets.extend(os.path.relpath(d, str(tmp_path)) for _, d in aggs.values())
+            return post_write(by_route, lin_dir, aggs)
+
         monkeypatch.setattr(runner, "write_by_route", spy)
+        monkeypatch.setattr(runner, "post_write", post_spy)
         events = spark.createDataFrame([(1, "user"), (2, "tool")], "id int, role string")
         spec = {"output": [{"type": "table", "name": "s"}]}
         runner.run_pipeline(spark, spec, input_df=events, out_dir=str(tmp_path / "batch"),
                             resume=False)
         self._stream(spark, spec, events, tmp_path)
         assert targets == ["batch/by_route", "stream_out/by_route/epoch=0"]
+        # and through the one pass after the write
+        assert agg_targets == ["batch/agg_counts", "stream_out/agg_counts/epoch=0"]
         # and no library module filters the routes column per sink
         pkg = os.path.dirname(runner.__file__)
         for root, _, files in os.walk(pkg):
@@ -389,7 +451,6 @@ class TestOneWritePath:
         """An epoch whose write dies before its rename leaves only a
         dot-named temp dir, which partition discovery skips: by_route
         still reads the earlier epochs, with an int `epoch` column."""
-        from gogstash_spark import runner
         from gogstash_spark.plans.compile import ROUTES, Route
         from gogstash_spark.streaming.pipeline import make_batch_writer
 
@@ -397,7 +458,7 @@ class TestOneWritePath:
         df = spark.createDataFrame([(i,) for i in range(6)], "id int").withColumn(
             ROUTES, F.array(F.lit("s"))
         )
-        wb = make_batch_writer([Route("s", "true")], out)
+        wb = make_batch_writer([Route("s", "true")], runner.aggregate_specs(PipelineSpec()), out)
         wb(df, 0)
 
         def killed(src, dst):
@@ -414,6 +475,8 @@ class TestOneWritePath:
         assert got.count() == 6
         assert dict(got.dtypes)["epoch"] == "int"
         assert [r["epoch"] for r in got.select("epoch").distinct().collect()] == [0]
+        counts = spark.read.parquet(os.path.join(out, "agg_counts"))
+        assert [tuple(r) for r in counts.select("epoch", "sink", "n").collect()] == [(0, "s", 6)]
 
     def test_duplicate_sink_names_rejected(self, spark, tmp_path):
         with pytest.raises(ValueError, match="duplicate sink"):
@@ -434,5 +497,21 @@ class TestOneWritePath:
                     {"type": "http", "name": "hook", "url": "http://localhost:9/x"},
                     {"type": "gelf", "name": "gl", "host": "localhost", "port": 9},
                 ]},
+                str(tmp_path / "src"), str(tmp_path / "out"),
+            )
+
+    def test_unmergeable_aggregates_rejected(self, spark, tmp_path):
+        """avg and pNN partials do not merge over epochs, so streaming
+        refuses those aggregates by name; count/sum/min/max stream."""
+        with pytest.raises(ValueError, match=r"\['lat_avg', 'lat_p95'\]"):
+            run_pipeline_streaming(
+                spark,
+                {"output": [{"type": "table", "name": "s"}],
+                 "aggregate": [
+                     {"name": "lat", "metric_key": "%{role}",
+                      "ops": ["count", "sum:latency_ms", "min:latency_ms", "max:latency_ms"]},
+                     {"name": "lat_avg", "metric_key": "%{role}", "ops": ["avg:latency_ms"]},
+                     {"name": "lat_p95", "metric_key": "%{role}", "ops": ["count", "p95:latency_ms"]},
+                 ]},
                 str(tmp_path / "src"), str(tmp_path / "out"),
             )
