@@ -11,11 +11,11 @@ regex/hash/distance CPU):
   CPU the next projection burns per row.
 
 spread() raises a frame to the session's default parallelism with one
-round-robin repartition when (and only when) it currently has fewer
+round-robin repartition when (and only when) the plan says it has fewer
 partitions — a no-op on well-partitioned input, so at 100 TB (where
 scans and shuffles already exceed core count) it never fires and never
-adds an exchange. Values are row-local or order-insensitive in every
-caller, so results are unchanged.
+adds an exchange; it runs no Spark job, so an op that spreads stays
+lazy. Values are row-local or order-insensitive in every caller.
 
 The join-shape helpers the mlops ops share live here too: cap_groups
 (drop over-cap groups before a bucket self-join, hot_groups to audit
@@ -32,14 +32,30 @@ from pyspark.sql import functions as F
 
 
 def spread(df: DataFrame, target: int | None = None) -> DataFrame:
+    """`df`, repartitioned round-robin to `target` (default: the default
+    parallelism) when it would run on fewer partitions. The count comes
+    from the plan, as probing the RDD under AQE runs the upstream stages
+    as jobs: a plan with no exchange reads its scan splits (no job); an
+    explicit `repartition(n)` at the root keeps `n`; any other shuffle is
+    coalesced by AQE to one partition per `minPartitionSize` of data, at
+    most the default parallelism, estimated from the plan's size."""
     if getattr(df, "isStreaming", False):
         return df
-    sc = df.sparkSession.sparkContext
-    t = target or sc.defaultParallelism
-    try:
+    spark = df.sparkSession
+    cores = spark.sparkContext.defaultParallelism
+    t = target or cores
+    qe = df._jdf.queryExecution()
+    if "AdaptiveSparkPlan" not in qe.executedPlan().toString():
         n = df.rdd.getNumPartitions()
-    except Exception:
-        return df
+    else:
+        root = qe.logical()
+        if root.nodeName() == "Repartition":
+            n = root.numPartitions()
+        else:
+            min_size = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+                spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+            )
+            n = min(cores, (plan_bytes(df) or 0) // min_size)
     return df.repartition(t) if n < t else df
 
 

@@ -621,8 +621,6 @@ def semantic_dedup(
     audit them with clusters.groupBy("cell").count()). The drop set is
     distinct ids only (narrow), anti-joined back in one pass.
     """
-    from gogstash_spark.functions.partitions import spread
-
     cent = (
         centroids
         if centroids is not None
@@ -638,13 +636,12 @@ def semantic_dedup(
     # — once per ROW — because the pair filter below would otherwise
     # recompute two O(d) norm aggregates per PAIR, tripling the work of
     # the quadratic hot loop (the per-pair dot product is the only O(d)
-    # term that genuinely needs pair granularity). spread() lifts the
-    # cached frame to full core count BEFORE the quadratic stage: a
-    # single-row-group scan otherwise caps every downstream task count
-    # at 1-2 (round-6 measurement: the whole pair loop ran on 2 of 32
-    # cores).
+    # term that genuinely needs pair granularity). ivf_assign already
+    # spreads its scan, so the cached frame runs at full core count
+    # (round-6 measurement: a single-row-group scan otherwise ran the
+    # whole pair loop on 2 of 32 cores).
     sq = lambda acc, v: acc + v.cast("double") * v.cast("double")  # noqa: E731
-    a = spread(
+    a = (
         ivf_assign(emb, nprobe=1, id_col=id_col, vec_col=vec_col, centroids=cent)
         .select("vid", "vec", F.element_at("probes", 1)["cid"].alias("cell"))
         .withColumn("nrm", F.sqrt(F.aggregate("vec", F.lit(0.0), sq)))

@@ -43,12 +43,6 @@ _CHAR_SPLIT_RX = r"(?!^)(?=.)"  # split between chars, no trailing ''
 CHECKPOINT_EVERY = 4
 
 
-def _wrap(l: Column | str, r: Column | str | None = None) -> Column:
-    """a fully-wrapped symbol string: SEP + l [+ SEP + SEP + r] + SEP."""
-    parts = [F.lit(SEP), l] + ([F.lit(SEP + SEP), r] if r is not None else [])
-    return F.concat(*[F.lit(x) if isinstance(x, str) else x for x in parts], F.lit(SEP))
-
-
 def _char_syms(word: Column) -> Column:
     """characters of `word`, each wrapped in SEP delimiters (the
     initial symbol state): 'abc' -> SEP a SEP SEP b SEP SEP c SEP."""

@@ -87,11 +87,8 @@ def minhash_signatures(
     return sh.groupBy("id").agg(*aggs)
 
 
-def minhash_signatures_from_sets(sets: DataFrame, k: int = 4) -> DataFrame:
-    """Same signatures computed per row from the sh_set array with
-    array_min(transform(...)) — a pure projection, NO shuffle (the
-    explode+groupBy form costs a full shuffle on id). Rows with empty
-    shingle sets are excluded (no signature exists for them)."""
+def _minhashes(k: int) -> list[Column]:
+    """m0..m{k-1} of a row's sh_set: m_j = min(md5(j || '|' || shingle))."""
     def mh(j: int):
         # closure factory: a default-arg lambda would look 2-ary and make
         # F.transform pass the element INDEX as the second argument
@@ -99,7 +96,15 @@ def minhash_signatures_from_sets(sets: DataFrame, k: int = 4) -> DataFrame:
             F.transform(F.col("sh_set"), lambda s: F.md5(F.concat(F.lit("%d|" % j), s)))
         ).alias("m%d" % j)
 
-    return sets.filter(F.size("sh_set") > 0).select("id", *[mh(j) for j in range(k)])
+    return [mh(j) for j in range(k)]
+
+
+def minhash_signatures_from_sets(sets: DataFrame, k: int = 4) -> DataFrame:
+    """Same signatures computed per row from the sh_set array with
+    array_min(transform(...)) — a pure projection, NO shuffle (the
+    explode+groupBy form costs a full shuffle on id). Rows with empty
+    shingle sets are excluded (no signature exists for them)."""
+    return sets.filter(F.size("sh_set") > 0).select("id", *_minhashes(k))
 
 
 def _text_key(text_col: str, id_col: str) -> Column:
@@ -181,69 +186,44 @@ def minhash_lsh_pairs(
     1 - (1 - s^rows)^bands for Jaccard s. rows=1 means "shares ANY
     minhash" (high recall); more rows sharpen precision.
 
-    Scale shape: candidate generation is a bucket equi-join (never
-    quadratic); bucket_cap drops buckets holding > cap docs (use
-    lsh_hot_buckets to log what was dropped — no silent truncation);
-    the exact-Jaccard verify touches ONLY candidate pairs via
-    array_intersect on the two shingle sets.
+    Scale shape: each doc's band rows carry its shingle set, so ONE
+    (band, v) self-join (a bucket equi-join, never quadratic) yields the
+    candidates and verifies them with array_intersect on the joined row
+    — no cache, broadcast or join back on id, and no job while building.
+    Multi-band pairs are deduped on the far smaller survivor set.
+    bucket_cap drops buckets holding > cap docs (use lsh_hot_buckets to
+    log what was dropped — no silent truncation).
     """
     # lift a single-row-group scan to full parallelism BEFORE the md5
     # collapse (its map side otherwise runs on one core), and again for
-    # the shingle build + K md5-minhash passes (interpreted HOF work
-    # over byte-light rows that AQE's byte-based coalescing would
+    # the K md5-minhash passes over the shingle sets (interpreted HOF
+    # work over byte-light rows that AQE's byte-based coalescing would
     # squeeze onto 1-2 cores)
     df = spread(df)
     if collapse_exact:
         df = collapse_exact_texts(df, text_col, id_col)
-    sets = spread(shingle_sets(df, text_col, id_col, n)).persist()
-    sig = minhash_signatures_from_sets(sets, bands * rows_per_band)
-
-    # band join: explode signatures to (band, value) and self-join
-    # buckets. The candidate frame is NOT deduped here: measured at sf1
-    # the 4.2M candidate pairs are ~100% unique (pairs rarely share two
-    # bands at rows_per_band=1), so the distinct was a full extra
-    # shuffle buying nothing — the far smaller post-verify survivor set
-    # is deduped instead (identical result: jaccard is a pure function
-    # of the pair).
-    buckets = cap_groups(lsh_band_buckets(sig, bands, rows_per_band), ["band", "v"], bucket_cap)
-    cand = (
+    sets = spread(shingle_sets(df, text_col, id_col, n))
+    # lsh_band_buckets passes "id" through, so the struct (id, sh_set)
+    # carries the set into the join. An empty set's band values are "":
+    # it is dropped after the explode, as a filter on sh_set is pushed
+    # below the shingling and shingles every doc twice (22% on 40k docs)
+    sig = sets.select(F.struct("id", "sh_set").alias("id"), *_minhashes(bands * rows_per_band))
+    bucket_rows = lsh_band_buckets(sig, bands, rows_per_band).filter(F.col("v") != "")
+    buckets = cap_groups(bucket_rows, ["band", "v"], bucket_cap)
+    inter = F.size(F.array_intersect(F.col("x.id.sh_set"), F.col("y.id.sh_set")))
+    union = F.size("x.id.sh_set") + F.size("y.id.sh_set") - inter
+    return (
         buckets.alias("x")
         .join(buckets.alias("y"), ["band", "v"])
-        .filter(F.col("x.id") < F.col("y.id"))
-        .select(F.col("x.id").alias("id_a"), F.col("y.id").alias("id_b"))
-    )
-
-    # exact jaccard verify per candidate pair. The shingle-set frame is
-    # BROADCAST into both attach joins when its MATERIALIZED size fits
-    # the budget — the input's scan estimate understates it (12x on
-    # 5k documents: wide shingle arrays), and so does the persisted
-    # frame's own plan, whose stats predate the cache; a fresh
-    # projection reads the cached size. Candidate pairs outnumber
-    # documents ~100x here (4.2M pairs vs 50k docs at sf1), so the
-    # default sort-merge joins shuffled the multi-KB shingle arrays
-    # once per PAIR — the dominant cost of the whole op (measured 10.8s
-    # of 14.5). With the arrays on the build side only ids cross the
-    # wire and the interpreted array_intersect runs at the spread()
-    # parallelism. Past the budget (cluster-scale corpora) the shuffled
-    # join shape is kept.
-    sets.count()
-    a = sets.select(F.col("id").alias("id_a"), F.col("sh_set").alias("sh_a"))
-    b = sets.select(F.col("id").alias("id_b"), F.col("sh_set").alias("sh_b"))
-    if fits_broadcast(sets.select("id", "sh_set")):
-        a, b = F.broadcast(a), F.broadcast(b)
-        cand = spread(cand)
-    inter = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    verified = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard", F.round(inter.cast("double") / union.cast("double"), 6))
+        .filter(F.col("x.id.id") < F.col("y.id.id"))
+        .select(
+            F.col("x.id.id").alias("id_a"),
+            F.col("y.id.id").alias("id_b"),
+            F.round(inter.cast("double") / union.cast("double"), 6).alias("jaccard"),
+        )
         .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-        # dedupe the (rare) multi-band pairs HERE, on the survivor set
         .distinct()
     )
-    return verified
 
 
 def dedup_groups(
@@ -266,8 +246,10 @@ def dedup_groups(
 
     Scale shape per stage:
     - exact collapse: one md5 hash-groupBy (the dedup_exact shape);
-    - candidates/verify: minhash_lsh_pairs — bucket equi-joins + verify
-      on candidates only, never all-pairs;
+    - candidates/verify: minhash_lsh_pairs — one (band, v) self-join
+      whose rows carry both shingle sets, so the exact Jaccard is
+      computed on the join's rows, never all-pairs and never a join
+      back on id;
     - components: iterative min-label propagation over the near-dup
       edges ONLY (isolated reps skip the loop entirely — at corpus
       scale the edge graph is orders of magnitude smaller than the
@@ -600,9 +582,7 @@ def repeated_substring_spans(
     )
     # sh feeds two plan branches (the hot-hash aggregate and the join
     # back to positions); persist so the window hashing of the corpus —
-    # the dominant cost — runs once per action, not twice (same
-    # self-reference pattern minhash_lsh_pairs persists its signature
-    # frame for)
+    # the dominant cost — runs once per action, not twice
     sh = t.select(
         id_col,
         F.posexplode(

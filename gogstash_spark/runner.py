@@ -232,23 +232,26 @@ def _read_routed(spark: SparkSession, part_dir: str, schema: T.StructType | None
     return (spark.read if schema is None else spark.read.schema(schema)).parquet(part_dir)
 
 
-def _write_lineage(by_route: DataFrame, lin_dir: str) -> list:
+def _write_lineage(by_route: DataFrame, lin_dir: str) -> None:
     """Per-partition (per output file) row-count lineage in one pruned
     scan, written to a parquet SIDECAR — at 100 TB the file list is
     10^5-10^6 entries, which must never ride through the driver or the
-    JSON ledger. Returns only the O(routes) rollup rows (route, rows,
-    files)."""
+    JSON ledger (`_lineage_rollup` reads back only O(routes) rows)."""
     lineage_df = by_route.groupBy("route", F.input_file_name().alias("file")).agg(
         F.count(F.lit(1)).alias("rows")
     )
     _commit_dir(lineage_df.write.mode("overwrite").parquet, lin_dir)
+
+
+def _lineage_rollup(spark: SparkSession, lin_dir: str) -> list:
+    """The (route, rows, files) rollup of a committed lineage sidecar."""
     # the part files, not the dir: Spark treats a `_`-prefixed root as
     # hidden and warns that all its paths were ignored (a glob instead
     # warns that it has no metadata dir). An empty input still commits
     # one part file.
     parts = [os.path.join(lin_dir, f) for f in os.listdir(lin_dir) if f.endswith(".parquet")]
     return (
-        by_route.sparkSession.read.schema(LINEAGE_SCHEMA)
+        spark.read.schema(LINEAGE_SCHEMA)
         .parquet(*parts)
         .groupBy("route")
         .agg(F.sum("rows").alias("rows"), F.count(F.lit(1)).alias("files"))
@@ -289,9 +292,10 @@ def post_write(by_route: DataFrame, lin_dir: str | None, aggs: dict[str, tuple[d
     """THE pass after the write, run once by `run_pipeline` and once per
     streaming epoch: lineage into `lin_dir` (None skips it) and each
     aggregate of `aggs` ({name: (agg, dir)}) as concurrent Spark jobs
-    over `by_route`, each committing its own dir. Yields (lineage rollup
-    future or None, {name: rows future}); the jobs inherit the caller's
-    job group, and the caller works while they run."""
+    over `by_route`, each committing its own dir. Yields (lineage future
+    or None, {name: rows future}); the jobs inherit the caller's job
+    group, and the caller works while they run (only `run_pipeline`
+    reads the `_lineage_rollup` once the lineage future is done)."""
     with ThreadPoolExecutor(max_workers=len(aggs) + 1) as pool:
 
         def submit(fn, *args):
@@ -392,7 +396,8 @@ def run_pipeline(
         {a["name"]: (a, os.path.join(out_dir, "agg_" + a["name"])) for a in pending_aggs},
     ) as (lineage, agg_futures):
         if lineage is not None:
-            rollup = lineage.result()
+            lineage.result()
+            rollup = _lineage_rollup(spark, lin_dir)
             counts: dict[str, int] = {rr["route"]: int(rr["rows"]) for rr in rollup}
             result.sink_rows = _route_sink_rows(plan, counts)
             result.metrics["lineage"] = {

@@ -387,42 +387,56 @@ class TestCapGroups:
         assert [r["i"] for r in self._rows(cap_groups(df, ["k1", "k2"], 2))] == [3, 4]
 
 
-class TestMinhashBroadcastGate:
-    def test_gate_sizes_the_materialized_shingle_sets(self, spark, tmp_path, monkeypatch):
-        """The verify joins broadcast the shingle-set frame, whose
-        materialized size dwarfs the input's scan estimate on wide
-        shingles: a budget between the two must keep the shuffled
-        verify, while the default budget broadcasts it."""
-        import random
+def _wide_docs(spark, tmp_path):
+    """300 docs of 200 words from a 5000-word vocabulary, as parquet."""
+    import random
 
-        from gogstash_spark.functions import partitions
+    rng = random.Random(11)
+    vocab = ["w%05d" % i for i in range(5000)]
+    rows = [(i, " ".join(rng.choice(vocab) for _ in range(200))) for i in range(300)]
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
+    return spark.read.parquet(path)
 
-        rng = random.Random(11)
-        vocab = ["w%05d" % i for i in range(5000)]
-        rows = [(i, " ".join(rng.choice(vocab) for _ in range(200))) for i in range(300)]
-        path = str(tmp_path / "docs")
-        spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
-        docs = spark.read.parquet(path)
 
-        sets = dedup.shingle_sets(
-            dedup.collapse_exact_texts(docs, "text", "doc_id"), "text", "doc_id", 3
-        ).persist()
-        sets.count()
-        input_est = partitions.plan_bytes(docs)
-        sets_size = partitions.plan_bytes(sets.select("id", "sh_set"))
-        sets.unpersist()
-        assert 4 * input_est < sets_size, (input_est, sets_size)
+def _jobs_to_build(spark, build):
+    """How many Spark jobs `build()` runs, counted under a fresh job group."""
+    import uuid
 
-        def verify_broadcasts():
-            pairs = dedup.minhash_lsh_pairs(docs, n=3, threshold=0.5)
-            plan = pairs._jdf.queryExecution().optimizedPlan().toString()
-            return plan.count("strategy=broadcast")
+    sc = spark.sparkContext
+    group = "build-" + uuid.uuid4().hex
+    sc.setJobGroup(group, "frame build")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
-        assert verify_broadcasts() == 2
-        monkeypatch.setattr(
-            partitions, "BROADCAST_BUDGET_BYTES", int(math.sqrt(input_est * sets_size))
-        )
-        assert verify_broadcasts() == 0
+
+class TestMinhashVerifiesOnBandJoin:
+    def test_plan_has_no_cache_and_no_id_join(self, spark, tmp_path):
+        """The exact-Jaccard verify runs on the rows of the (band, v)
+        self-join, which carry both shingle sets: the executed plan
+        caches nothing and joins on no pair id."""
+        pairs = dedup.minhash_lsh_pairs(_wide_docs(spark, tmp_path), n=3, threshold=0.5)
+        plan = pairs._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryRelation" not in plan and "InMemoryTableScan" not in plan
+        joins = [ln for ln in plan.splitlines() if "Join" in ln]
+        assert joins and not any("id_a" in ln or "id_b" in ln for ln in joins), joins
+
+    def test_building_runs_no_job(self, spark, tmp_path, emb):
+        """minhash_lsh_pairs, semantic_dedup with given centroids and
+        spread() over a post-groupBy frame are lazy: building them runs
+        no Spark job."""
+        from gogstash_spark.functions.partitions import spread
+
+        docs = _wide_docs(spark, tmp_path)
+        cents = ann.ivf_train(emb, n_centroids=2, iters=1)
+        assert _jobs_to_build(spark, lambda: dedup.minhash_lsh_pairs(
+            docs, n=3, threshold=0.5, bucket_cap=50)) == 0
+        assert _jobs_to_build(spark, lambda: ann.semantic_dedup(
+            emb, centroids=cents, threshold=0.9)) == 0
+        assert _jobs_to_build(spark, lambda: spread(docs.groupBy("doc_id").count())) == 0
 
 
 @pytest.fixture(scope="module")

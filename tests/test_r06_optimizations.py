@@ -146,6 +146,24 @@ class TestSpread:
         )
         assert spread(sdf) is sdf
 
+    def test_post_shuffle_frames_sized_from_the_plan(self, spark):
+        """After a groupBy, a frame whose size estimate is under
+        minPartitionSize (1 MiB) x cores is lifted to defaultParallelism
+        and a larger one is returned as is; neither decision runs a job."""
+        sc = spark.sparkContext
+        small = spark.range(0, 1000).groupBy((F.col("id") % 10).alias("k")).count()
+        big = spark.range(0, 10_000_000).groupBy((F.col("id") % 10).alias("k")).count()
+        sc.setJobGroup("spread-plan-only", "spread over groupBy outputs")
+        try:
+            lifted, kept = spread(small), spread(big)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert sc.statusTracker().getJobIdsForGroup("spread-plan-only") == []
+        root = lifted._jdf.queryExecution().logical()
+        assert root.nodeName() == "Repartition"
+        assert root.numPartitions() == sc.defaultParallelism
+        assert kept is big
+
 
 class TestBpeLiteralMerges:
     def test_merge_rows_match_reference(self, spark):

@@ -165,6 +165,32 @@ class TestStreaming:
         wb(df, 1)  # a genuinely new epoch appends
         assert _route(spark, out, "s_user").count() == 10
 
+    def test_epoch_commits_lineage_without_rollup(self, spark, tmp_path):
+        """An epoch commits its lineage sidecar but never reads it back:
+        the write, the lineage and the one default aggregate run two jobs
+        each (shuffle, then write). The per-route rollup that run_pipeline
+        reports would add two more, and no epoch reads it."""
+        from gogstash_spark.plans.compile import ROUTES, Route
+        from gogstash_spark.streaming.pipeline import make_batch_writer
+
+        out = str(tmp_path / "jobs_out")
+        df = spark.createDataFrame(
+            [(i, "user" if i % 2 else "tool") for i in range(10)], "id int, role string"
+        ).withColumn(ROUTES, F.array(F.concat(F.lit("s_"), F.col("role"))))
+        wb = make_batch_writer([Route("s_user", "true"), Route("s_tool", "true")],
+                               runner.aggregate_specs(PipelineSpec()), out)
+        sc = spark.sparkContext
+        jobs = []
+        for epoch in range(2):  # the first epoch also warms the session
+            sc.setJobGroup("epoch-jobs-%d" % epoch, "one streaming epoch")
+            try:
+                wb(df, epoch)
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup("epoch-jobs-%d" % epoch)))
+        assert jobs == [6, 6]
+        assert _lineage_rows(spark, out) == {"s_user": 10, "s_tool": 10}
+
     def test_stateful_dedup_across_microbatches(self, spark, tmp_path):
         """applyInPandasWithState: first event per key wins, duplicates
         in LATER microbatches are dropped by keyed state."""
