@@ -9,7 +9,7 @@ Decode support is capability-probed:
 - netpbm P5/P6 (PGM/PPM) decodes for real in pure numpy — no external
   codec needed, so the decode path is genuinely exercised in tests;
 - JPEG/PNG/etc. decode through PIL when it is installed on the cluster
-  image (import-probed, same pattern as sources/connectors.py);
+  image (import-probed, as the kafka source probes its jar);
 - anything else raises NotImplementedError (never a silent fake).
 
 Text payloads keep the deterministic byte-level features so non-image

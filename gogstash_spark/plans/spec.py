@@ -53,9 +53,10 @@ class PipelineSpec:
 
         - filter chain passes through verbatim (module names and config
           keys are registered 1:1, incl. geoip2/rate_limit aliases)
-        - inputs: file -> batch text read with the file's codec;
-          exec/http pull inputs pass through; broker/daemon inputs
-          raise with the unsupported list (no silent drop)
+        - inputs: file -> text read with the file's codec; kafka ->
+          kafka source with the same codec (streaming only);
+          exec/http pull inputs pass through; other broker/daemon
+          inputs raise with the unsupported list (no silent drop)
         - outputs: elastic/elasticv5 keep index/document_id semantics;
           clickhouse/file -> table sinks; http/socket/gelf/loki are live
           protocol sinks; report/statsd become aggregates; stdout and
@@ -76,14 +77,12 @@ class PipelineSpec:
         inputs: list[dict[str, Any]] = []
         for i in d.get("input") or []:
             t = i.get("type")
-            if t == "file":
+            if t in ("file", "kafka"):
                 codec = i.get("codec")
                 if isinstance(codec, dict):
                     codec = codec.get("type", "default")
-                inputs.append({
-                    "type": "text", "path": i.get("path"),
-                    "codec": codec or "default",
-                })
+                base = {"type": "text", "path": i.get("path")} if t == "file" else i
+                inputs.append({**base, "codec": codec or "default"})
             elif t in ("exec", "http", "lorem", "redis", "nsq", "nats",
                        "dockerlog", "dockerstats"):
                 inputs.append(dict(i))

@@ -244,12 +244,19 @@ def _write_lineage(by_route: DataFrame, lin_dir: str) -> None:
 
 
 def _lineage_rollup(spark: SparkSession, lin_dir: str) -> list:
-    """The (route, rows, files) rollup of a committed lineage sidecar."""
+    """The (route, rows, files) rollup of a lineage root's committed
+    part files at any depth: one sidecar, or a streaming run's
+    `_lineage/epoch=N` sidecars. No part file (no epoch yet) is []."""
     # the part files, not the dir: Spark treats a `_`-prefixed root as
     # hidden and warns that all its paths were ignored (a glob instead
     # warns that it has no metadata dir). An empty input still commits
-    # one part file.
-    parts = [os.path.join(lin_dir, f) for f in os.listdir(lin_dir) if f.endswith(".parquet")]
+    # one part file; dot-named dirs are in-flight commits.
+    parts = []
+    for root, dirs, files in os.walk(lin_dir):
+        dirs[:] = [d for d in dirs if not d.startswith(".")]
+        parts += [os.path.join(root, f) for f in files if f.endswith(".parquet")]
+    if not parts:
+        return []
     return (
         spark.read.schema(LINEAGE_SCHEMA)
         .parquet(*parts)

@@ -1,17 +1,22 @@
-"""Batch file input: spec.input -> DataFrame.
+"""File input: spec.input -> DataFrame, in batch or as a stream.
 
 The reference's file input tails raw lines and feeds them through the
 configured codec (reference input/file/inputfile.go:47-210 + codec
 dispatch config/codec.go:23-36); the batch analog reads the whole
-fileset in one scan. Columnar formats (parquet/orc) skip the codec —
-they are already typed; line formats (text/json/csv) decode at read.
+fileset in one scan, and the streaming analog (`stream_source`) reads
+the same files through the same dispatch as they arrive. Columnar
+formats (parquet/orc) skip the codec — they are already typed; line
+formats (text/json/csv) decode at read.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from gogstash_spark import codecs
+from gogstash_spark import codecs, logevent
+
+_FILE_TYPES = ("parquet", "orc", "json", "csv", "text")
 
 
 def read_input(spark: SparkSession, inp: dict) -> DataFrame:
@@ -28,28 +33,75 @@ def read_input(spark: SparkSession, inp: dict) -> DataFrame:
     stats, ...) get read-time as the event time — downstream
     time-bucketed aggregates and %{+@...} templates always resolve.
     """
-    df = _read_input_typed(spark, inp)
-    from gogstash_spark import logevent
+    return _stamp_ts(_read_input_typed(spark, inp))
 
+
+def stream_source(spark: SparkSession, inp: dict) -> DataFrame:
+    """spec.input as a readStream, the streaming twin of `read_input`.
+
+    File inputs go through the batch dispatch over `spark.readStream`,
+    at most 4 files per trigger (the rate_limit analog), with the schema
+    of the same batch read (text's is fixed). multi unions its parts.
+    kafka (reference input/kafka/inputkafka.go:20-33) reads the options
+    of `connectors.kafka_options_from_gogstash` and decodes `value` with
+    the input's codec, as text does; without the spark-sql-kafka jar it
+    raises a RuntimeError naming the `--packages` coordinate. Every
+    other input is a one-shot drain and raises ValueError."""
+    typ = inp.get("type", "parquet")
+    if typ == "multi":
+        df = _union([stream_source(spark, sub) for sub in inp.get("inputs") or []])
+    elif typ == "kafka":
+        from gogstash_spark.sources.connectors import kafka_options_from_gogstash
+
+        try:
+            src = spark.readStream.format("kafka").options(
+                **kafka_options_from_gogstash(inp)
+            ).load()
+        except Exception as e:  # jar missing -> actionable message
+            msg = str(e)
+            if "Failed to find" in msg or "ClassNotFound" in msg or "DATA_SOURCE_NOT_FOUND" in msg:
+                raise RuntimeError(
+                    "kafka connector not on classpath; submit with "
+                    "--packages org.apache.spark:spark-sql-kafka-0-10_2.13:<spark-version>"
+                ) from e
+            raise
+        df = _decode(src.select("value"), inp)
+    elif typ in _FILE_TYPES:
+        reader = spark.readStream.option("maxFilesPerTrigger", 4)
+        if typ != "text":
+            reader = reader.schema(_read_files(spark.read, inp).schema)
+        df = _read_files(reader, inp)
+    else:
+        raise ValueError(
+            "input type %r does not stream; streaming reads %s, multi or kafka inputs"
+            % (typ, "/".join(_FILE_TYPES))
+        )
+    return _stamp_ts(df)
+
+
+def _stamp_ts(df: DataFrame) -> DataFrame:
     if logevent.TS not in df.columns:
-        from pyspark.sql import functions as F
-
         df = df.withColumn(logevent.TS, F.current_timestamp())
     return df
+
+
+def _union(parts: list[DataFrame]) -> DataFrame:
+    # several inputs union into one frame (a gogstash config may
+    # declare many inputs feeding the same filter chain)
+    if not parts:
+        raise ValueError("multi input with no inputs")
+    out = parts[0]
+    for p in parts[1:]:
+        out = out.unionByName(p, allowMissingColumns=True)
+    return out
 
 
 def _read_input_typed(spark: SparkSession, inp: dict) -> DataFrame:
     typ = inp.get("type", "parquet")
     if typ == "multi":
-        # several inputs union into one frame (a gogstash config may
-        # declare many inputs feeding the same filter chain)
-        parts = [read_input(spark, sub) for sub in inp.get("inputs") or []]
-        if not parts:
-            raise ValueError("multi input with no inputs")
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p, allowMissingColumns=True)
-        return out
+        return _union([read_input(spark, sub) for sub in inp.get("inputs") or []])
+    if typ == "kafka":
+        raise ValueError("kafka input is a stream; run the spec with --streaming")
     if typ == "exec":
         from gogstash_spark.sources.ingest import exec_input
 
@@ -142,31 +194,41 @@ def _read_input_typed(spark: SparkSession, inp: dict) -> DataFrame:
             fields=inp.get("fields"), empty=bool(inp.get("empty", False)),
             seed=int(inp.get("seed", 42)),
         )
+    return _read_files(spark.read, inp)
+
+
+def _read_files(reader, inp: dict) -> DataFrame:
+    """The path-based inputs over `reader`: spark.read in batch, a
+    schema-given spark.readStream in `stream_source`."""
+    typ = inp.get("type", "parquet")
     path = inp.get("path")
     if not path:
         raise ValueError("spec.input.path required")
     if typ == "parquet":
-        return spark.read.parquet(path)
+        return reader.parquet(path)
     if typ == "orc":
-        return spark.read.orc(path)
+        return reader.orc(path)
     if typ == "json":
-        r = spark.read
         if inp.get("schema"):
-            r = r.schema(inp["schema"])
-        return r.json(path)
+            reader = reader.schema(inp["schema"])
+        return reader.json(path)
     if typ == "csv":
         return (
-            spark.read.option("header", "true" if inp.get("header", True) else "false")
+            reader.option("header", "true" if inp.get("header", True) else "false")
             .option("sep", inp.get("sep", ","))
             .option("inferSchema", "true" if inp.get("infer_schema", True) else "false")
             .csv(path)
         )
     if typ == "text":
-        df = spark.read.text(path)
-        codec = inp.get("codec", "default")
-        if codec == "json":
-            return codecs.decode_json(df, "value", inp.get("schema")).drop("value")
-        if codec == "default":
-            return codecs.decode_default(df, "value").drop("value")
-        raise ValueError("unknown codec %r for text input" % codec)
+        return _decode(reader.text(path), inp)
     raise ValueError("unknown input type %r" % typ)
+
+
+def _decode(df: DataFrame, inp: dict) -> DataFrame:
+    """The `codec` step (default|json) over a frame's one `value` column."""
+    codec = inp.get("codec", "default")
+    if codec == "json":
+        return codecs.decode_json(df, "value", inp.get("schema")).drop("value")
+    if codec == "default":
+        return codecs.decode_default(df, "value").drop("value")
+    raise ValueError("unknown codec %r for %s input" % (codec, inp.get("type")))

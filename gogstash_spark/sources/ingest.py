@@ -593,11 +593,12 @@ def _spool_writer(spool_dir: str):
 def httplisten_input(spool_dir: str, host: str = "127.0.0.1", port: int = 0):
     """HTTP listener -> spool -> stream bridge (reference
     input/httplisten accepts POSTed events). The listener is a daemon
-    thread appending atomic spool files; `spool_stream` turns the spool
-    into a readStream — the push-daemon half and the distributed half
-    stay decoupled, which is exactly how push inputs scale on a
-    cluster (listeners on edge nodes, Spark reads the spool/object
-    store). Returns (server, 'host:port'); server.shutdown() stops it.
+    thread appending atomic spool files, which a `text` input reads
+    (as a stream through `sources.files.stream_source`) — the
+    push-daemon half and the distributed half stay decoupled, which is
+    exactly how push inputs scale on a cluster (listeners on edge
+    nodes, Spark reads the spool/object store). Returns
+    (server, 'host:port'); server.shutdown() stops it.
     """
     import threading
     from http.server import BaseHTTPRequestHandler, HTTPServer
@@ -805,15 +806,6 @@ def beats_input(
     srv.daemon_threads = True
     threading.Thread(target=srv.serve_forever, daemon=True).start()
     return srv, "%s:%d" % srv.server_address
-
-
-def spool_stream(spark: SparkSession, spool_dir: str) -> DataFrame:
-    """readStream over a listener spool: one event per line, default
-    codec (value -> text)."""
-    from gogstash_spark.codecs import decode_default
-
-    src = spark.readStream.format("text").load(spool_dir)
-    return decode_default(src, "value").drop("value")
 
 
 def http_input(

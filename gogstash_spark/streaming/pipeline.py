@@ -13,10 +13,12 @@ max merge by re-aggregating; avg and pNN do not and raise, as protocol
 outputs do. Doc-id dedup holds within an epoch (across epochs:
 `stateful.dedup_stream`).
 
-File-source streaming stands in for kafka here (the kafka connector
-needs its jar; `readStream.format("kafka")` is the one-line swap).
-sincedb offset checkpointing (reference input/file/sincedb.go:21-91)
-maps to the streaming checkpointLocation.
+The source is spec.input, read by `sources.files.stream_source`: the
+batch reader's file and codec dispatch over readStream, or kafka (the
+reference's other daemon input) when the spark-sql-kafka jar is on the
+classpath. Drain inputs (exec, http, redis, ...) raise. sincedb offset
+checkpointing (reference input/file/sincedb.go:21-91) maps to the
+streaming checkpointLocation.
 """
 
 from __future__ import annotations
@@ -30,17 +32,7 @@ from gogstash_spark import runner
 from gogstash_spark.operators import Context
 from gogstash_spark.plans.compile import Route, compile_pipeline
 from gogstash_spark.plans.spec import PipelineSpec
-
-
-def stream_source(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    if schema is None:
-        schema = spark.read.parquet(path).schema
-    return (
-        spark.readStream.format("parquet")
-        .schema(schema)
-        .option("maxFilesPerTrigger", 4)  # rate_limit analog in streaming
-        .load(path)
-    )
+from gogstash_spark.sources.files import stream_source
 
 
 def make_batch_writer(routes: list[Route], aggs: list[dict], out_dir: str):
@@ -68,16 +60,16 @@ def make_batch_writer(routes: list[Route], aggs: list[dict], out_dir: str):
 def run_pipeline_streaming(
     spark: SparkSession,
     spec: PipelineSpec | dict,
-    input_path: str,
     out_dir: str,
     base_dir: str = ".",
     await_termination: bool = True,
 ):
-    """Run the compiled pipeline as a streaming query whose micro-batches
-    commit through the batch write path and post-write pass; returns the
-    query handle, terminated when await_termination. Protocol outputs,
-    which only run_pipeline sends, and aggregates with an avg or pNN op,
-    which do not merge over epochs, raise ValueError."""
+    """Run the compiled pipeline as a streaming query over spec.input
+    whose micro-batches commit through the batch write path and
+    post-write pass; returns the query handle, terminated when
+    await_termination. Protocol outputs, which only run_pipeline sends,
+    aggregates with an avg or pNN op, which do not merge over epochs,
+    and inputs that do not stream raise ValueError."""
     if isinstance(spec, dict):
         spec = PipelineSpec.from_dict(spec)
     plan = compile_pipeline(spec, Context(spark=spark, base_dir=base_dir))
@@ -92,7 +84,7 @@ def run_pipeline_streaming(
         raise ValueError("streaming aggregates merge over epochs by re-aggregating; "
                          "aggregates %s have avg/pNN ops, which do not" % unmerged)
     q = (
-        plan.run(stream_source(spark, input_path))
+        plan.run(stream_source(spark, spec.input))
         .writeStream.foreachBatch(make_batch_writer(plan.routes, aggs, out_dir))
         .option("checkpointLocation", os.path.join(out_dir, "_checkpoint"))
         .trigger(availableNow=True)

@@ -11,11 +11,13 @@ out/by_route/route=<sink>/, and its ledger lets a re-run on the same
 --out skip what is committed while still reporting the committed
 sink_rows (resume is the default; --no-resume recomputes everything).
 
---streaming runs the same spec as a Structured Streaming query over the
-input directory. Each micro-batch commits through the same write into
-out/by_route/epoch=N/route=<sink>/ and the same pass after it into
-out/_lineage/epoch=N and out/agg_<name>/epoch=N (checkpoint in
-out/_checkpoint); protocol outputs and avg/pNN aggregates are rejected.
+--streaming runs the same spec as a Structured Streaming query over
+spec.input, which may be any file type (parquet/orc/json/csv, or text
+with its codec), kafka, or a multi of them. Each micro-batch commits
+through the same write into out/by_route/epoch=N/route=<sink>/ and the
+same pass after it into out/_lineage/epoch=N and out/agg_<name>/epoch=N
+(checkpoint in out/_checkpoint); drain inputs (exec/http/redis/...),
+protocol outputs and avg/pNN aggregates are rejected.
 Its JSON line gives sink_rows summed over every epoch's lineage under
 --out, and the epoch count.
 """
@@ -23,7 +25,6 @@ Its JSON line gives sink_rows summed over every epoch's lineage under
 from __future__ import annotations
 
 import argparse
-import glob
 import json
 import os
 import sys
@@ -52,23 +53,20 @@ def main(argv: list[str] | None = None) -> int:
         spec.input["path"] = args.input
 
     if args.streaming:
-        from gogstash_spark.runner import LINEAGE_SCHEMA
+        from gogstash_spark.runner import _lineage_rollup
         from gogstash_spark.streaming.pipeline import run_pipeline_streaming
 
         t0 = time.time()
-        run_pipeline_streaming(
-            spark, spec, spec.input["path"], args.out, base_dir=args.base_dir
-        )
-        parts = glob.glob(os.path.join(args.out, "_lineage", "epoch=*", "*.parquet"))
-        routes = (
-            spark.read.schema(LINEAGE_SCHEMA).parquet(*parts).groupBy("route").sum("rows").collect()
-            if parts else []
-        )
+        run_pipeline_streaming(spark, spec, args.out, base_dir=args.base_dir)
+        lin_root = os.path.join(args.out, "_lineage")
+        epochs = os.listdir(lin_root) if os.path.isdir(lin_root) else []
         print(
             json.dumps(
                 {
-                    "sink_rows": {r[0]: int(r[1]) for r in routes},
-                    "epochs": len({os.path.dirname(p) for p in parts}),
+                    "sink_rows": {
+                        r["route"]: int(r["rows"]) for r in _lineage_rollup(spark, lin_root)
+                    },
+                    "epochs": sum(e.startswith("epoch=") for e in epochs),
                     "wall_sec": round(time.time() - t0, 2),
                 }
             )

@@ -5,13 +5,27 @@ from pyspark.sql import functions as F
 
 from gogstash_spark.pipelines import standard_spec
 from gogstash_spark.runner import run_pipeline
-from gogstash_spark.sources import connectors
 
 
 class TestConnectors:
-    def test_kafka_raises_actionable_error(self, spark):
-        with pytest.raises(RuntimeError, match="--packages"):
-            connectors.kafka_stream(spark, "localhost:9092", "t")
+    def test_kafka_raises_actionable_error(self, spark, tmp_path):
+        """A gogstash kafka input compiles to a kafka spec input with its
+        codec normalised. It streams only: without the connector jar the
+        streaming run names the package, and a batch run says to stream."""
+        from gogstash_spark.plans.spec import PipelineSpec
+        from gogstash_spark.streaming.pipeline import run_pipeline_streaming
+
+        spec = PipelineSpec.from_gogstash({
+            "input": [{"type": "kafka", "brokers": ["localhost:9092"], "topics": ["t"],
+                       "codec": {"type": "json"}}],
+            "output": [{"type": "stdout"}],
+        })
+        assert spec.input == {"type": "kafka", "brokers": ["localhost:9092"],
+                              "topics": ["t"], "codec": "json"}
+        with pytest.raises(RuntimeError, match="--packages .*spark-sql-kafka"):
+            run_pipeline_streaming(spark, spec, str(tmp_path / "stream"))
+        with pytest.raises(ValueError, match="--streaming"):
+            run_pipeline(spark, spec, out_dir=str(tmp_path / "batch"), resume=False)
 
 
 class TestFileInputs:
@@ -193,69 +207,10 @@ class TestKafkaContract:
     def test_stream_probe_names_missing_jar(self, spark):
         import pytest as _pytest
 
-        from gogstash_spark.sources.connectors import kafka_stream
+        from gogstash_spark.sources.files import stream_source
 
         with _pytest.raises(RuntimeError, match="spark-sql-kafka"):
-            kafka_stream(spark, gogstash_cfg={"brokers": ["b:9092"], "topics": ["t"]})
-
-    def test_sink_options_full_block(self):
-        """Write-side contract, symmetric to the input: gogstash kafka
-        output block -> exact writeStream options, one per topic (the
-        reference produces every event to EVERY topic,
-        output/kafka/outputkafka.go:95-107; SASL means SASL_PLAINTEXT +
-        PLAIN in sarama terms, outputkafka.go:79-83)."""
-        from gogstash_spark.sources.connectors import kafka_sink_options_from_gogstash
-
-        cfg = {
-            "type": "kafka",
-            "version": "0.10.2.0",
-            "brokers": ["k1:9092", "k2:9092"],
-            "topics": ["logs", "audit"],
-            "security_protocol": "SASL",
-            "sasl_username": "u",
-            "sasl_password": "p",
-        }
-        got = kafka_sink_options_from_gogstash(cfg)
-        base = {
-            "kafka.bootstrap.servers": "k1:9092,k2:9092",
-            "kafka.security.protocol": "SASL_PLAINTEXT",
-            "kafka.sasl.mechanism": "PLAIN",
-            "kafka.sasl.jaas.config":
-                'org.apache.kafka.common.security.plain.PlainLoginModule '
-                'required username="u" password="p";',
-        }
-        assert got == [{**base, "topic": "logs"}, {**base, "topic": "audit"}]
-
-    def test_sink_options_validation(self):
-        import pytest as _pytest
-
-        from gogstash_spark.sources.connectors import kafka_sink_options_from_gogstash
-
-        plain = kafka_sink_options_from_gogstash(
-            {"brokers": ["b:9092"], "topics": ["t"]}
-        )
-        assert plain == [
-            {"kafka.bootstrap.servers": "b:9092", "topic": "t"}
-        ]
-        with _pytest.raises(ValueError, match="brokers"):
-            kafka_sink_options_from_gogstash({"topics": ["t"]})
-        with _pytest.raises(ValueError, match="topics"):
-            kafka_sink_options_from_gogstash({"brokers": ["b:9092"]})
-
-    def test_write_stream_probe_names_missing_jar(self, spark, tmp_path):
-        import pytest as _pytest
-
-        from gogstash_spark.sources.connectors import kafka_write_stream
-
-        df = (
-            spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-            .selectExpr("CAST(value AS STRING) AS text")
-        )
-        with _pytest.raises(RuntimeError, match="spark-sql-kafka"):
-            kafka_write_stream(
-                df, str(tmp_path / "ck"),
-                {"brokers": ["b:9092"], "topics": ["t"]},
-            )
+            stream_source(spark, {"type": "kafka", "brokers": ["b:9092"], "topics": ["t"]})
 
     def test_jaas_credentials_are_escaped(self):
         from gogstash_spark.sources.connectors import kafka_options_from_gogstash

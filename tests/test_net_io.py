@@ -102,11 +102,30 @@ class TestLokiOutput:
         assert json.loads(line)["message"] in ("e1", "e2")
 
 
+def _stream_spool(spark, typ, spool, name):
+    """Stream a listener spool the way a config reads it: through
+    stream_source with the input from_gogstash maps the listener to.
+    Returns the `text` of every event."""
+    from gogstash_spark.plans.spec import PipelineSpec
+    from gogstash_spark.sources.files import stream_source
+
+    inp = PipelineSpec.from_gogstash(
+        {"input": [{"type": typ, "spool_dir": spool}], "output": [{"type": "stdout"}]}
+    ).input
+    q = (
+        stream_source(spark, inp)
+        .writeStream.format("memory").queryName(name)
+        .trigger(availableNow=True).start()
+    )
+    q.awaitTermination()
+    return sorted(r["text"] for r in spark.sql("SELECT * FROM %s" % name).collect())
+
+
 class TestListenerInputs:
     def test_httplisten_to_stream(self, spark, tmp_path):
         import urllib.request
 
-        from gogstash_spark.sources.ingest import httplisten_input, spool_stream
+        from gogstash_spark.sources.ingest import httplisten_input
 
         spool = str(tmp_path / "spool_http")
         srv, addr = httplisten_input(spool)
@@ -117,17 +136,10 @@ class TestListenerInputs:
             urllib.request.urlopen(req, timeout=5).read()
         finally:
             srv.shutdown()
-        q = (
-            spool_stream(spark, spool)
-            .writeStream.format("memory").queryName("httplisten_t")
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        got = sorted(r["text"] for r in spark.sql("SELECT * FROM httplisten_t").collect())
-        assert got == ["ev one", "ev two"]
+        assert _stream_spool(spark, "httplisten", spool, "httplisten_t") == ["ev one", "ev two"]
 
     def test_socket_listen_to_stream(self, spark, tmp_path):
-        from gogstash_spark.sources.ingest import socket_listen_input, spool_stream
+        from gogstash_spark.sources.ingest import socket_listen_input
 
         spool = str(tmp_path / "spool_sock")
         srv, addr = socket_listen_input(spool)
@@ -144,20 +156,14 @@ class TestListenerInputs:
                 time.sleep(0.1)
         finally:
             srv.shutdown()
-        q = (
-            spool_stream(spark, spool)
-            .writeStream.format("memory").queryName("socklisten_t")
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        got = sorted(r["text"] for r in spark.sql("SELECT * FROM socklisten_t").collect())
-        assert got == ["sock one", "sock two"]
+        assert _stream_spool(spark, "socket", spool, "socklisten_t") == ["sock one", "sock two"]
 
 
 class TestBeatsInput:
     """Speak lumberjack v2 to the beats listener like a filebeat would:
     window frame, zlib-compressed batch of JSON data frames, wait for
-    the ACK, then watch the events emerge from spool_stream."""
+    the ACK, then watch the events emerge from the spool, read with the
+    json codec that from_gogstash gives a beats input."""
 
     @staticmethod
     def _jframe(seq: int, doc: dict) -> bytes:
@@ -168,11 +174,10 @@ class TestBeatsInput:
         return b"2J" + struct.pack(">II", seq, len(payload)) + payload
 
     def test_lumberjack_v2_roundtrip(self, spark, tmp_path):
-        import json as _json
         import struct
         import zlib
 
-        from gogstash_spark.sources.ingest import beats_input, spool_stream
+        from gogstash_spark.sources.ingest import beats_input
 
         spool = str(tmp_path / "spool_beats")
         srv, addr = beats_input(spool)
@@ -198,17 +203,10 @@ class TestBeatsInput:
             conn.close()
         finally:
             srv.shutdown()
-        q = (
-            spool_stream(spark, spool)
-            .writeStream.format("memory").queryName("beats_t")
-            .trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        got = sorted(
-            _json.loads(r["text"])["message"]
-            for r in spark.sql("SELECT * FROM beats_t").collect()
-        )
-        assert got == ["beat one", "beat three", "beat two"]
+        # the json codec lifts each lumberjack `message` into text
+        assert _stream_spool(spark, "beats", spool, "beats_t") == [
+            "beat one", "beat three", "beat two",
+        ]
 
     def test_lumberjack_uncompressed_and_kv_frames(self, tmp_path):
         import os

@@ -13,10 +13,11 @@ informal missing/trailing commas) and asserts the engine accepts it:
   documented adaptations (push listeners get a spool_dir — they run as
   edge daemons here; broker endpoints stay as written, nothing
   connects at spec time)
-- kafka in/out and azureeventhub in: pinned to RAISE from from_gogstash
-  (connector jar / cloud daemon; OPERATORS.md) — kafka's synopsis keys
-  are additionally asserted against the broker-less options contract
-  (kafka_options_from_gogstash / kafka_sink_options_from_gogstash)
+- kafka out and azureeventhub in: pinned to RAISE from from_gogstash
+  (no streaming sink / cloud daemon; OPERATORS.md); kafka in maps to a
+  streaming kafka input, and its synopsis keys are additionally
+  asserted against the broker-less options contract
+  (kafka_options_from_gogstash)
 
 Five plugins ship no README (filter/{lookuptable,ratelimit,removefield,
 typeconv}, output/prometheus): their config keys are pinned by the
@@ -38,8 +39,8 @@ REF = "/root/reference"
 
 # push listeners run as edge daemons writing a spool the cluster reads
 SPOOL_INPUTS = {"beats", "httplisten", "socket"}
-# pinned loud-raise: need a connector jar / cloud consumer daemon
-RAISING = {("input", "kafka"), ("input", "azureeventhub"), ("output", "kafka")}
+# pinned loud-raise: no streaming sink / needs a cloud consumer daemon
+RAISING = {("input", "azureeventhub"), ("output", "kafka")}
 
 
 def _extract(path: str) -> dict | None:
@@ -152,24 +153,18 @@ def test_synopsis_accepted(kind, plugin, path, tmp_path):
     if (kind, plugin) in RAISING:
         with pytest.raises(ValueError, match="no Spark mapping"):
             PipelineSpec.from_gogstash(cfg)
-        # the documented keys still drive the broker-less contract
-        from gogstash_spark.sources.connectors import (
-            kafka_options_from_gogstash,
-            kafka_sink_options_from_gogstash,
-        )
-
-        if plugin == "kafka" and kind == "input":
-            opts = kafka_options_from_gogstash(section[0])
-            assert opts["kafka.bootstrap.servers"] and opts["subscribe"]
-        if plugin == "kafka" and kind == "output":
-            sinks = kafka_sink_options_from_gogstash(section[0])
-            assert sinks and all(s["topic"] for s in sinks)
         return
 
     spec = PipelineSpec.from_gogstash(cfg)
     if kind == "input":
         got = spec.input.get("inputs", [spec.input])
         assert len(got) == len(section)
+        if plugin == "kafka":
+            # the documented keys drive the broker-less options contract
+            from gogstash_spark.sources.connectors import kafka_options_from_gogstash
+
+            opts = kafka_options_from_gogstash(got[0])
+            assert opts["kafka.bootstrap.servers"] and opts["subscribe"]
     else:
         # every stanza output landed as a sink or an aggregate
         # (prometheus is the documented no-op)

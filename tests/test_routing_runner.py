@@ -354,9 +354,9 @@ output:
     def test_unsupported_modules_raise(self):
         from gogstash_spark.plans.spec import PipelineSpec
 
-        with pytest.raises(ValueError, match="kafka"):
+        with pytest.raises(ValueError, match=r"\['input/azureeventhub', 'output/kafka'\]"):
             PipelineSpec.from_gogstash(
-                {"input": [{"type": "kafka"}], "output": [{"type": "stdout"}]}
+                {"input": [{"type": "azureeventhub"}], "output": [{"type": "kafka"}]}
             )
 
     def test_module_name_aliases_registered(self):

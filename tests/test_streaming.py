@@ -5,7 +5,6 @@ aggregates re-aggregated over the epochs equal the batch aggregates.
 The availableNow trigger drives the whole file-backed stream to
 completion synchronously."""
 
-import glob
 import os
 import re
 
@@ -43,9 +42,8 @@ def _assert_same_rows(got, want):
 
 def _lineage_rows(spark, out_dir):
     """{route: rows} summed over every epoch's _lineage sidecar."""
-    parts = glob.glob(os.path.join(out_dir, "_lineage", "epoch=*", "*.parquet"))
-    rows = spark.read.schema(runner.LINEAGE_SCHEMA).parquet(*parts).groupBy("route").sum("rows")
-    return {r[0]: r[1] for r in rows.collect()}
+    rollup = runner._lineage_rollup(spark, os.path.join(out_dir, "_lineage"))
+    return {r["route"]: r["rows"] for r in rollup}
 
 
 @pytest.fixture(scope="module")
@@ -67,10 +65,7 @@ def mini_spec(sf_data_dir):
 class TestStreaming:
     def test_foreachbatch_fanout_matches_batch(self, spark, sf_data_dir, mini_spec, tmp_path):
         out, batch_out = str(tmp_path / "stream_out"), str(tmp_path / "batch")
-        run_pipeline_streaming(
-            spark, mini_spec, os.path.join(sf_data_dir, "transcripts"), out,
-            base_dir=sf_data_dir,
-        )
+        run_pipeline_streaming(spark, mini_spec, out, base_dir=sf_data_dir)
         runner.run_pipeline(spark, mini_spec, out_dir=batch_out, base_dir=sf_data_dir,
                             resume=False)
         # the default aggregate, merged over the epochs, is the batch one
@@ -123,12 +118,13 @@ class TestStreaming:
         q = run_pipeline_streaming(
             spark,
             {
+                "input": {"path": os.path.join(sf_data_dir, "transcripts")},
                 "filter": [{"type": "grok", "source": "text", "match": GROK_MATCHES,
                             "patterns": EXTRA_PATTERNS}],
                 "output": [{"type": "table", "name": "s_dead",
                             "condition": "'gogstash_filter_grok_error' IN tags"}],
             },
-            os.path.join(sf_data_dir, "transcripts"), out, base_dir=sf_data_dir,
+            out, base_dir=sf_data_dir,
         )
         assert _route(spark, out, "s_dead").count() == 780
         observed = [
@@ -378,7 +374,7 @@ class TestOneWritePath:
         src = str(tmp_path / "src")
         events.coalesce(1).write.parquet(src)
         out = str(tmp_path / "stream_out")
-        run_pipeline_streaming(spark, spec, src, out)
+        run_pipeline_streaming(spark, {**spec, "input": {"path": src}}, out)
         return out
 
     def test_docid_index_routes_match_batch(self, spark, tmp_path):
@@ -417,7 +413,7 @@ class TestOneWritePath:
             "sink_errors": 1462, "sink_tool_calls": 732, "sink_user_turns": 2007,
             "sink_deadletter": 780, "sink_rest": 1244,
         }
-        run_pipeline_streaming(spark, spec, spec.input["path"], stream_out, base_dir=sf_data_dir)
+        run_pipeline_streaming(spark, spec, stream_out, base_dir=sf_data_dir)
         streamed = spark.read.parquet(os.path.join(stream_out, "by_route"))
         assert streamed.select("epoch").distinct().count() > 1
         batch = spark.read.parquet(os.path.join(batch_out, "by_route"))
@@ -508,8 +504,9 @@ class TestOneWritePath:
         with pytest.raises(ValueError, match="duplicate sink"):
             run_pipeline_streaming(
                 spark,
-                {"output": [{"type": "table", "name": "s"}, {"type": "table", "name": "s"}]},
-                str(tmp_path / "src"), str(tmp_path / "out"),
+                {"input": {"path": str(tmp_path / "src")},
+                 "output": [{"type": "table", "name": "s"}, {"type": "table", "name": "s"}]},
+                str(tmp_path / "out"),
             )
 
     def test_protocol_sinks_rejected(self, spark, tmp_path):
@@ -518,12 +515,13 @@ class TestOneWritePath:
         with pytest.raises(ValueError, match=r"\['hook', 'gl'\]"):
             run_pipeline_streaming(
                 spark,
-                {"output": [
+                {"input": {"path": str(tmp_path / "src")},
+                 "output": [
                     {"type": "table", "name": "archive"},
                     {"type": "http", "name": "hook", "url": "http://localhost:9/x"},
                     {"type": "gelf", "name": "gl", "host": "localhost", "port": 9},
                 ]},
-                str(tmp_path / "src"), str(tmp_path / "out"),
+                str(tmp_path / "out"),
             )
 
     def test_unmergeable_aggregates_rejected(self, spark, tmp_path):
@@ -532,12 +530,63 @@ class TestOneWritePath:
         with pytest.raises(ValueError, match=r"\['lat_avg', 'lat_p95'\]"):
             run_pipeline_streaming(
                 spark,
-                {"output": [{"type": "table", "name": "s"}],
+                {"input": {"path": str(tmp_path / "src")},
+                 "output": [{"type": "table", "name": "s"}],
                  "aggregate": [
                      {"name": "lat", "metric_key": "%{role}",
                       "ops": ["count", "sum:latency_ms", "min:latency_ms", "max:latency_ms"]},
                      {"name": "lat_avg", "metric_key": "%{role}", "ops": ["avg:latency_ms"]},
                      {"name": "lat_p95", "metric_key": "%{role}", "ops": ["count", "p95:latency_ms"]},
                  ]},
-                str(tmp_path / "src"), str(tmp_path / "out"),
+                str(tmp_path / "out"),
             )
+
+
+class TestStreamInputs:
+    """spec.input streams through the batch reader's file and codec
+    dispatch, so a file input streams what batch writes."""
+
+    @pytest.mark.parametrize("typ, lines, filters", [
+        ("text", ["level=error disk full", "level=info started", "level=error oom"], [
+            {"type": "grok", "source": "text",
+             "match": ["^level=%{WORD:level} %{GREEDYDATA:msg}"]},
+        ]),
+        ("json", ['{"level": "error", "msg": "disk full", "n": 1}',
+                  '{"level": "info", "msg": "started", "n": 2}',
+                  '{"level": "error", "msg": "oom", "n": 3}'], []),
+    ])
+    def test_file_input_streams_what_batch_writes(self, spark, tmp_path, typ, lines, filters):
+        src = tmp_path / "src"
+        src.mkdir()
+        for i in range(5):  # 5 files, 4 per trigger: 2 epochs
+            (src / ("part-%d.log" % i)).write_text(
+                "".join("%s\n" % ln.replace("disk", "disk%d" % i) for ln in lines)
+            )
+        spec = {
+            "input": {"type": typ, "path": str(src)},
+            "filter": filters,
+            "output": [{"type": "table", "name": "errors", "condition": "level == 'error'"},
+                       {"type": "table", "name": "all"}],
+        }
+        batch_out, stream_out = str(tmp_path / "batch"), str(tmp_path / "stream")
+        res = runner.run_pipeline(spark, spec, out_dir=batch_out, resume=False)
+        assert res.sink_rows == {"errors": 10, "all": 15}
+        run_pipeline_streaming(spark, spec, stream_out)
+        streamed = spark.read.parquet(os.path.join(stream_out, "by_route"))
+        assert streamed.select("epoch").distinct().count() == 2
+        # ts is stamped at read time, so the two runs differ only there
+        _assert_same_rows(
+            streamed.drop("ts"),
+            spark.read.parquet(os.path.join(batch_out, "by_route")).drop("ts"),
+        )
+
+    def test_drain_input_rejected(self, spark, tmp_path):
+        """A one-shot drain input has no stream: streaming names it
+        before the query starts."""
+        with pytest.raises(ValueError, match="'lorem'"):
+            run_pipeline_streaming(
+                spark,
+                {"input": {"type": "lorem"}, "output": [{"type": "table", "name": "s"}]},
+                str(tmp_path / "out"),
+            )
+        assert not os.path.exists(str(tmp_path / "out" / "_checkpoint"))
